@@ -36,7 +36,8 @@ from .operators.glossary import glossary_tag_rows
 from .operators.importer import melt_to_tag_rows, read_tag_csv
 from .operators.backup import read_backup, restore_tag_rows
 from .operators.substitution import parse_query_expression, split_resource_uri
-from .store.tagstore import TagStore
+from .store.historylog import HistoryLog
+from .store.tagstore import TagStore, commit_dir, recover_dir
 
 _REFRESH_UNITS = {"minutes": 60, "hours": 3600, "days": 86400}
 
@@ -59,10 +60,8 @@ _CONFIG_TYPES = (
 
 
 class TagEngine:
-    # after this many history appends the lazy union spills to parquet
-    # (_spill_history): each merge otherwise accretes one union branch
-    # plus one pinned tagstore checkpoint generation for the session's
-    # lifetime
+    # the history log's compaction cadence: after this many appends its
+    # small files are merged into one (store/historylog.py)
     HISTORY_SPILL_EVERY = 32
 
     def __init__(
@@ -77,19 +76,17 @@ class TagEngine:
         self.configs: dict[str, dict] = {}
         self.jobs: list[dict] = []
         self.store = TagStore(spark, path=tags_path)
-        self._history = spark.createDataFrame([], TAG_HISTORY_SCHEMA)
         self._job_metadata: list[dict] = []
-        self._history_base: DataFrame | None = None
-        self._history_spill_dir: str | None = None
-        self._history_appends = 0
-        # True when history() handed out a lazy plan that references the
-        # CURRENT in-memory union branches — those plans pin the
-        # superseded merge checkpoints, so the next spill must not free
-        # them deterministically (see _spill_history)
-        self._history_handed_out = False
-        self.history_spill_every = (
-            history_spill_every if history_spill_every is not None else self.HISTORY_SPILL_EVERY
+        # the history log lives beside the tag state, so an engine
+        # reopened on tags_path sees every earlier event; without one it
+        # goes to a temp directory
+        self._history_log = HistoryLog(
+            spark,
+            f"{tags_path}.history" if tags_path else None,
+            history_spill_every if history_spill_every is not None else self.HISTORY_SPILL_EVERY,
         )
+        # the history a load_state snapshot carried, read under the log
+        self._history_snapshot: DataFrame | None = None
         self._seq = 0
         self.qualify = qualify or (lambda p, d, t: t)
         # keyed settings documents, mirroring the reference's
@@ -832,11 +829,32 @@ class TagEngine:
     # -- history / scheduling ----------------------------------------------
 
     def _append_history(self, events: DataFrame, job_uuid: str) -> int:
-        """T2: every applied mutation appends an audit row. asset_name is
-        the singularized reference form project/dataset/ds/table/t[/column/c]
-        (BigQueryUtils.py:123-128)."""
+        """T2: every applied mutation appends an audit row; returns the
+        event count. One driver-side timestamp per append (the
+        reference stamps one event time per job). A driver-resident
+        merge's events are written from the driver, a distributed
+        merge's with one Spark write."""
+        rows = getattr(events, "_tag_engine_event_rows", None)
+        if not self.tag_history_enabled():
+            return len(rows) if rows is not None else events.count()
+        now = datetime.datetime.now(datetime.timezone.utc)
+        if rows is not None:
+            return self._history_log.append_rows(rows, now, job_uuid)
+        return self._history_log.append_df(events, now, job_uuid)
+
+    def history(self) -> DataFrame:
+        """The audit stream (TAG_HISTORY_SCHEMA): one parquet read of the
+        history log, under the load_state snapshot's history when there
+        is one. asset_name is the singularized reference form
+        project/dataset/ds/table/t[/column/c] (BigQueryUtils.py:123-128);
+        field_value renders the typed value."""
         from .model.coercion import render_tag_value
 
+        log = self._history_log.read()
+        if log is None:
+            if self._history_snapshot is not None:
+                return self._history_snapshot
+            return local_df(self.spark, [], TAG_HISTORY_SCHEMA)
         singular = F.regexp_replace(
             F.regexp_replace(F.col("asset_uri"), "/datasets/", "/dataset/"),
             "/tables/",
@@ -845,14 +863,8 @@ class TagEngine:
         asset_name = F.when(
             F.col("column").isNotNull(), F.concat(singular, F.lit("/column/"), F.col("column"))
         ).otherwise(singular)
-        # one driver-side timestamp per append: deterministic across
-        # recomputes (the reference stamps one export/event time per
-        # job), so the history rows need no pinning checkpoint of their
-        # own — the merge's combined checkpoint already materialized the
-        # expensive joins and the count() below only re-runs a filter.
-        now = datetime.datetime.now()
-        rows = events.select(
-            F.lit(now).cast("timestamp").alias("event_time"),
+        rendered = log.select(
+            F.col("event_time"),
             asset_name.alias("asset_name"),
             F.col("column"),
             F.col("template_id"),
@@ -867,75 +879,28 @@ class TagEngine:
             F.col("action"),
             F.lit(None).cast("string").alias("tag_creator_account"),
             F.lit(None).cast("string").alias("tag_invoker_account"),
-            F.lit(job_uuid).alias("job_uuid"),
-            F.lit(now.date()).cast("date").alias("event_date"),
+            F.col("job_uuid"),
+            F.to_date("event_time").alias("event_date"),
         )
-        if self.tag_history_enabled():
-            self._history = self._history.unionByName(rows)
-            self._history_appends += 1
-            if self._history_appends >= self.history_spill_every:
-                self._spill_history()
-        # a driver-resident merge already knows its event count — the
-        # select above is 1:1, so reuse it instead of scheduling a
-        # count job per merge in an interactive chain
-        known = getattr(events, "_tag_engine_event_count", None)
-        return known if known is not None else rows.count()
-
-    def _spill_history(self) -> None:
-        """Bound the history union: write the accumulated in-memory
-        branches to a day-partitioned parquet directory (the reference's
-        day-partitioned history table shape, BigQueryUtils.py:344-387),
-        reset the union to a single parquet read, and deterministically
-        release every superseded merge checkpoint
-        (TagStore.release_event_generations — safe precisely now, the
-        spill just materialized the only rows those generations still
-        backed). Keeps a long interactive session at O(1) checkpoint
-        generations and O(1) plan depth instead of one pinned generation
-        plus one union branch per merge."""
-        import tempfile
-
-        if self._history_spill_dir is None:
-            self._history_spill_dir = tempfile.mkdtemp(prefix="tag_engine_history_")
-        self._history.write.mode("append").partitionBy("event_date").parquet(
-            self._history_spill_dir
-        )
-        # restore field order and exact types (partition-column
-        # inference reads event_date back from the directory names)
-        self._history_base = self.spark.read.parquet(self._history_spill_dir).select(
-            *[F.col(f.name).cast(f.dataType) for f in TAG_HISTORY_SCHEMA.fields]
-        )
-        self._history = self.spark.createDataFrame([], TAG_HISTORY_SCHEMA)
-        self._history_appends = 0
-        if self._history_handed_out:
-            # a caller still holds a lazy history() plan over the union
-            # branches just spilled; freeing their merge checkpoints
-            # would truncate lineage underneath it (a freed
-            # localCheckpoint cannot recompute). Drop the engine's own
-            # references instead — the JVM ContextCleaner reclaims each
-            # checkpoint's blocks once the caller's plans are garbage.
-            self.store.drop_event_generations()
-        else:
-            self.store.release_event_generations()
-        self._history_handed_out = False
-
-    def history(self) -> DataFrame:
-        # a handed-out plan pins the current in-memory branches (and,
-        # through them, the superseded merge checkpoints) — record that
-        # so the next spill takes the GC-safe path instead of freeing
-        if self._history_appends > 0:
-            self._history_handed_out = True
-        if self._history_base is not None:
-            return self._history_base.unionByName(self._history)
-        return self._history
+        if self._history_snapshot is None:
+            return rendered
+        return self._history_snapshot.unionByName(rendered)
 
     # -- persistence --------------------------------------------------------
 
     def save_state(self, base_path: str) -> None:
         """Persist the engine's full state: configs/templates/jobs as
         JSON (they are Firestore-document sized in the reference —
-        TagEngineStoreHandler.py:366-1131), tags and history as parquet."""
+        TagEngineStoreHandler.py:366-1131), tags and history as parquet.
+
+        Each part appears whole or not at all: tags/ and history/ are
+        written beside their targets and swapped in (``commit_dir``),
+        and meta.json is written last, via a temp file and
+        ``os.replace``. A first snapshot a crash cut short therefore has
+        no meta.json and does not load."""
         import json
         import os
+        import uuid
 
         os.makedirs(base_path, exist_ok=True)
 
@@ -956,10 +921,15 @@ class TagEngine:
             "seq": self._seq,
             "settings": self.settings,
         }
-        with open(os.path.join(base_path, "meta.json"), "w") as f:
+        for name, df in (("tags", self.store.all()), ("history", self.history())):
+            path = os.path.join(base_path, name)
+            tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+            df.write.parquet(tmp)
+            commit_dir(tmp, path)
+        tmp = os.path.join(base_path, f".meta.json.tmp-{uuid.uuid4().hex[:8]}")
+        with open(tmp, "w") as f:
             json.dump(meta, f, default=default)
-        self.store._df.write.mode("overwrite").parquet(os.path.join(base_path, "tags"))
-        self.history().write.mode("overwrite").parquet(os.path.join(base_path, "history"))
+        os.replace(tmp, os.path.join(base_path, "meta.json"))
 
     @classmethod
     def load_state(cls, spark: SparkSession, base_path: str, qualify=None) -> "TagEngine":
@@ -972,6 +942,8 @@ class TagEngine:
             return d
 
         eng = cls(spark, qualify=qualify)
+        for name in ("tags", "history"):
+            recover_dir(os.path.join(base_path, name))
         with open(os.path.join(base_path, "meta.json")) as f:
             meta = json.load(f, object_hook=hook)
         eng.templates = meta["templates"]
@@ -986,7 +958,9 @@ class TagEngine:
         # without it the next merge would take the empty-store fast path
         # and duplicate same-key tags
         eng.store.set_state(spark.read.parquet(os.path.join(base_path, "tags")))
-        eng._history = spark.read.parquet(os.path.join(base_path, "history"))
+        eng._history_snapshot = spark.read.schema(TAG_HISTORY_SCHEMA).parquet(
+            os.path.join(base_path, "history")
+        )
         return eng
 
     def jobs_df(self) -> DataFrame:

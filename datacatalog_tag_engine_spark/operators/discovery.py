@@ -29,6 +29,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from ..model.schemas import ASSETS_SCHEMA
+from ..session import local_df
 
 
 def entry_id_from_path(path: str) -> str:
@@ -75,7 +76,7 @@ def discover_parquet_assets(
                 "updated_ts": datetime.datetime.fromtimestamp(stat.st_mtime, tz=datetime.timezone.utc),
             }
         )
-    return spark.createDataFrame(rows, ASSETS_SCHEMA)
+    return local_df(spark, rows, ASSETS_SCHEMA)
 
 
 def discover_parquet_assets_distributed(
@@ -157,4 +158,4 @@ def discover_catalog_assets(spark: SparkSession, project: str = "spark") -> Data
                     "schema": schema,
                 }
             )
-    return spark.createDataFrame(rows, ASSETS_SCHEMA)
+    return local_df(spark, rows, ASSETS_SCHEMA)

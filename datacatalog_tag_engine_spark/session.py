@@ -8,9 +8,11 @@ the few Pandas-UDF paths (pipeline/ operators).
 
 from __future__ import annotations
 
+import datetime
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import ArrayType, StructField, StructType, TimestampType
 
 
 def get_spark(app_name: str = "tag-engine-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -78,36 +80,83 @@ def get_spark(app_name: str = "tag-engine-spark", shuffle_partitions: int | None
     return builder.getOrCreate()
 
 
-def local_df(spark: SparkSession, data, schema, slices: int | None = None):
-    """createDataFrame for dimension-sized data without the 32-way
-    parallelize: the default slices driver-local rows across
-    defaultParallelism partitions, so every downstream collect/count on
-    a handful of rows schedules a full task wave (measured ~0.35s vs
-    ~0.15s per action on local[32]). One slice per 4096 rows keeps
-    engine-metadata relations (tag state mirrors, template/field
-    tables, job ledgers) single-task while still splitting anything
-    that grows. Accepts tuples or dicts (dicts are mapped through the
-    StructType field order)."""
-    data = list(data)
-    if not data:
-        return spark.createDataFrame([], schema)
-    if isinstance(data[0], dict):
-        if isinstance(schema, str):
-            from pyspark.sql.types import StructType
+# the largest driver-row frame local_df hands to Spark as an in-plan
+# LocalRelation instead of a parallelized RDD
+LOCAL_RELATION_MAX_ROWS = 4096
 
-            schema = StructType.fromDDL(schema)
-        # fail fast on misspelled keys — the RDD path verifies lazily on
-        # executors, so a silent r.get() None would surface (if at all)
-        # as a wrong column far from the bug
+
+def local_df(spark: SparkSession, data, schema, slices: int | None = None):
+    """createDataFrame for dimension-sized driver rows.
+
+    Up to 4096 rows become an Arrow-backed ``LocalRelation``: the rows
+    live inside the plan, and Catalyst folds project, filter and limit
+    over them, so collecting such a frame (a tag-state mirror, the
+    incoming rows of a synchronous call, merge events, the job ledger)
+    runs no Spark job. Nested struct and array fields come back
+    nullable: PySpark's Arrow input path rebuilds nested arrays without
+    their non-null flags.
+
+    Above 4096 rows, or when ``slices`` is given, the rows are
+    parallelized at one slice per 4096 rows instead of the
+    defaultParallelism-wide default, which would schedule a full task
+    wave for every action on a handful of rows.
+
+    Accepts tuples or dicts (dicts are mapped through the StructType
+    field order)."""
+    data = list(data)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if data and isinstance(data[0], dict):
+        # fail fast on misspelled keys: a silent r.get() None would
+        # surface (if at all) as a wrong column far from the bug
         names = {f.name for f in schema.fields}
         for r in data:
             unknown = r.keys() - names
             if unknown:
                 raise ValueError(f"local_df: keys {sorted(unknown)} not in schema {sorted(names)}")
         data = [tuple(r.get(f.name) for f in schema.fields) for r in data]
+    if slices is None and len(data) <= LOCAL_RELATION_MAX_ROWS:
+        schema = StructType(
+            [StructField(f.name, _nullable_nested(f.dataType), f.nullable) for f in schema.fields]
+        )
+        return spark.createDataFrame(arrow_table(data, schema), schema)
     if slices is None:
         slices = max(1, (len(data) + 4095) // 4096)
     return spark.createDataFrame(spark.sparkContext.parallelize(data, slices), schema)
+
+
+def _nullable_nested(dt):
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable_nested(f.dataType), True) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable_nested(dt.elementType), True)
+    return dt
+
+
+def arrow_table(rows: list[tuple], schema):
+    """A pyarrow Table of driver rows (tuples in ``schema`` field order)
+    typed by a Spark StructType. Naive datetimes in timestamp columns
+    are read as local time, as PySpark's own createDataFrame reads them;
+    a None in a non-nullable column raises."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, values in zip(schema.fields, columns):
+        if isinstance(field.dataType, TimestampType):
+            values = [
+                v.astimezone(datetime.timezone.utc)
+                if isinstance(v, datetime.datetime) and v.tzinfo is None
+                else v
+                for v in values
+            ]
+        arr = pa.array(values, type=arrow_schema.field(field.name).type)
+        if not field.nullable and arr.null_count:
+            raise ValueError(f"field {field.name}: not nullable, but got None")
+        arrays.append(arr)
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
 
 
 def free_local_checkpoint(df) -> None:

@@ -21,22 +21,26 @@ incoming batch converges to the same table.
 
 Scale: the merge is a single shuffle on the 4-part key; the tags table
 is tiny next to the data being profiled, so the join side of the guard
-checks broadcasts. Parquet persistence overwrites atomically via a
-temp-dir swap; on a real deployment this table would be Delta/Iceberg
-and this class maps 1:1 onto ``MERGE INTO``.
+checks broadcasts. Parquet persistence writes a temp directory and
+swaps it in with the old one renamed aside (``commit_dir``), so a
+crash never leaves the path without state; on a real deployment this
+table would be Delta/Iceberg and this class maps 1:1 onto
+``MERGE INTO``.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..model.schemas import TAGS_SCHEMA
-from ..session import local_df
+from ..session import arrow_table, local_df
 
 TAG_KEY = ["asset_uri", "column", "template_id", "field_id"]
 TAG_GROUP_KEY = ["asset_uri", "column", "template_id"]
@@ -62,6 +66,8 @@ class TagStore:
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
         self.path = path
+        if path:
+            recover_dir(path)
         if path and os.path.exists(path):
             self._df = spark.read.parquet(path)
             probe = self._df.limit(self.SMALL_STATE_MAX + 1).collect()
@@ -72,7 +78,7 @@ class TagStore:
                 self._rows = None
             self._known_empty = False
         else:
-            self._df = spark.createDataFrame([], TAGS_SCHEMA)
+            self._df = local_df(spark, [], TAGS_SCHEMA)
             self._known_empty = True
             self._rows = []
 
@@ -147,9 +153,9 @@ class TagStore:
         )
         data = [tuple(r.get(f.name) for f in event_schema.fields) for r in events]
         out = local_df(self.spark, data, event_schema)
-        # the caller's history append can reuse this instead of running
-        # a count job over a LocalTableScan
-        out._tag_engine_event_count = len(events)
+        # the caller's history append writes these rows from the driver
+        # instead of running a Spark write over the frame
+        out._tag_engine_event_rows = events
         return out
 
     def merge(
@@ -247,71 +253,56 @@ class TagStore:
             upserts_flagged.unionByName(deleted_rows).withColumn("_role", F.lit("event"))
         )
         parallelism = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        prev_ckpt = getattr(self, "_ckpt", None)
         combined = (
             state_part.unionByName(event_part)
             .coalesce(max(8, parallelism // 4))
             .localCheckpoint(eager=True)
         )
-        # The previous merge's STATE is superseded the moment the new
-        # checkpoint materializes, but its EVENT rows may still be
-        # referenced: the engine's history is a lazy union whose plan
-        # reads every past generation's event filter, and a freed
-        # local checkpoint cannot recompute (lineage is truncated) — an
-        # eager free here breaks any history read after 2+ distributed
-        # merges (regression-tested). So the superseded generation is
-        # only TRACKED here; it is freed either by the ContextCleaner
-        # once unreachable, or deterministically by
-        # release_event_generations() when the engine spills its
-        # history union to parquet (engine._spill_history) and the
-        # event rows are provably materialized elsewhere.
-        self._ckpt = combined
-        if prev_ckpt is not None:
-            self._event_generations = getattr(self, "_event_generations", [])
-            self._event_generations.append(prev_ckpt)
-        del prev_ckpt
+        # The previous merge's checkpoint is superseded now, but event
+        # frames an earlier merge returned may still read it, and a
+        # freed local checkpoint cannot recompute (its lineage is
+        # truncated). It is left to Spark's ContextCleaner, which frees
+        # it once no plan references it.
         self._df = combined.filter(F.col("_role") == "state").drop("_role", "action")
         if self.path:
             self._persist()
 
         return combined.filter(F.col("_role") == "event").drop("_role")
 
-    def release_event_generations(self) -> int:
-        """Deterministically free every SUPERSEDED merge checkpoint.
-
-        Safe ONLY once every past merge's event rows are materialized
-        somewhere durable AND no caller still holds a lazy plan over
-        them (the engine calls this right after spilling its history
-        union to parquet, and only when no history() handout references
-        the spilled branches — see engine._spill_history): a freed
-        localCheckpoint cannot recompute, so any still-lazy plan over
-        those events would fail. Direct store users who keep the event
-        DataFrames merge() returns must use drop_event_generations()
-        instead. The CURRENT checkpoint — the one backing live state —
-        is never freed. Returns the number of generations released."""
-        from ..session import free_local_checkpoint
-
-        gens = getattr(self, "_event_generations", [])
-        for g in gens:
-            free_local_checkpoint(g)
-        self._event_generations = []
-        return len(gens)
-
-    def drop_event_generations(self) -> int:
-        """Drop references to superseded merge checkpoints WITHOUT
-        freeing their blocks — the GC-safe sibling of
-        release_event_generations for when lazy plans over those events
-        may still be held externally. The JVM ContextCleaner unpersists
-        each checkpoint once the last plan referencing it is collected.
-        Returns the number of generations dropped."""
-        gens = getattr(self, "_event_generations", [])
-        self._event_generations = []
-        return len(gens)
-
     def _persist(self) -> None:
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        self._df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
-        self._df = self.spark.read.parquet(self.path)
+        if self._rows is None:
+            self._df.write.parquet(tmp)
+        else:
+            # driver-resident state is written from the driver, and the
+            # in-plan frame stays the store's view of it
+            os.makedirs(tmp)
+            data = [tuple(r.get(f.name) for f in TAGS_SCHEMA.fields) for r in self._rows]
+            pq.write_table(arrow_table(data, TAGS_SCHEMA), os.path.join(tmp, "part-00000.parquet"))
+        commit_dir(tmp, self.path)
+        if self._rows is None:
+            self._df = self.spark.read.parquet(self.path)
+
+
+def commit_dir(tmp: str, path: str) -> None:
+    """Replace directory ``path`` with the complete directory ``tmp``.
+    The old directory is renamed aside first, so a crash at any step
+    leaves either the old or the new directory in place or aside, and
+    ``recover_dir`` restores the old one."""
+    aside = f"{path}.old-{uuid.uuid4().hex[:8]}"
+    if os.path.exists(path):
+        os.rename(path, aside)
+    os.rename(tmp, path)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def recover_dir(path: str) -> None:
+    """Finish or roll back a ``commit_dir`` a crash interrupted: restore
+    the directory renamed aside when ``path`` is missing, then delete
+    the left-over temp and aside directories."""
+    pattern = glob.escape(path)
+    aside = glob.glob(pattern + ".old-*")
+    if aside and not os.path.exists(path):
+        os.rename(aside.pop(), path)
+    for d in aside + glob.glob(pattern + ".tmp-*"):
+        shutil.rmtree(d, ignore_errors=True)

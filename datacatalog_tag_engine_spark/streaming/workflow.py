@@ -46,7 +46,7 @@ def match_events(
 
 def asset_uri_from_name(name: str) -> tuple[str, str | None]:
     """Invert the history row's singularized asset_name (engine.
-    _append_history / reference BigQueryUtils.py:123-128) back to
+    TagEngine.history / reference BigQueryUtils.py:123-128) back to
     (catalog asset_uri, column-or-None) — a column-level tag's event
     carries a /column/<c> suffix, and the workflow must flip the
     status on the SAME grain it fired from."""

@@ -1,5 +1,7 @@
 """TagStore MERGE semantics tests (SURVEY S13/S14/P5, 2.10 #18, R6)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -239,12 +241,12 @@ def test_persistence_reload_stays_distributed_past_threshold(spark, tmp_path):
 
 
 def test_history_auto_spill_bounds_generations(spark):
-    """A long interactive merge chain stays O(1): past the spill
-    threshold the engine writes its lazy history union to parquet,
-    resets the union, and deterministically frees every superseded
-    merge checkpoint — yet history reads still return every event
-    (r4 verdict item 3)."""
+    """A long merge chain keeps history reads bounded: every
+    history_spill_every appends the history log compacts its small
+    files into one, and reopening the log deletes the superseded ones —
+    yet history reads still return every event."""
     from datacatalog_tag_engine_spark.engine import TagEngine
+    from datacatalog_tag_engine_spark.store.historylog import HistoryLog
 
     eng = TagEngine(spark, history_spill_every=5)
     eng.store.SMALL_STATE_MAX = 0  # force the distributed MERGE path
@@ -253,12 +255,13 @@ def test_history_auto_spill_bounds_generations(spark):
         ev = eng.store.merge(mk(spark, [tag_row("a", "owner", f"v{i}")]))
         eng._append_history(ev, f"job{i}")
 
-    # generations released at every spill: never more than one
-    # spill-window's worth pinned, regardless of chain length
-    assert len(getattr(eng.store, "_event_generations", [])) < 5
-    # union depth bounded the same way
-    assert eng._history_appends < 5
-    assert eng._history_base is not None
+    # one compacted file plus the appends since the last compaction,
+    # regardless of chain length
+    log = eng._history_log
+    assert len(log.files()) <= 5
+    reopened = HistoryLog(spark, log.directory, 5)
+    assert sorted(os.listdir(log.directory)) == sorted(os.path.basename(f) for f in reopened.files())
+    assert len(reopened.files()) <= 5
 
     # every event of every generation still readable, exactly once
     rows = eng.history().collect()
@@ -276,16 +279,16 @@ def test_history_spill_threshold_not_reached_is_noop(spark):
     for i in range(3):
         ev = eng.store.merge(mk(spark, [tag_row("a", "owner", f"v{i}")]))
         eng._append_history(ev, f"job{i}")
-    assert eng._history_base is None and eng._history_spill_dir is None
+    # one log file per append, none compacted
+    files = [os.path.basename(f) for f in eng._history_log.files()]
+    assert files == [f"{i:08d}-{i:08d}.parquet" for i in (1, 2, 3)]
     assert eng.history().count() == 3
 
 
 def test_history_spill_with_held_handout_stays_readable(spark):
-    """A lazily-held history() plan must survive later auto-spills
-    (code-review r5): the engine tracks the handout and DROPS the
-    superseded merge checkpoints (JVM ContextCleaner reclaims them once
-    the caller's plans are garbage) instead of freeing blocks a held
-    plan still needs."""
+    """A held history() plan must survive later compactions: the files
+    a compaction supersedes stay on disk until the log is next opened,
+    so a plan handed out earlier still reads them."""
     from datacatalog_tag_engine_spark.engine import TagEngine
 
     eng = TagEngine(spark, history_spill_every=4)
@@ -293,16 +296,15 @@ def test_history_spill_with_held_handout_stays_readable(spark):
     for i in range(2):
         ev = eng.store.merge(mk(spark, [tag_row("a", "owner", f"v{i}")]))
         eng._append_history(ev, f"job{i}")
-    held = eng.history()  # pins the two in-memory union branches
-    for i in range(2, 9):  # crosses the spill threshold twice
+    held = eng.history()  # reads the two files written so far
+    for i in range(2, 9):  # crosses the compaction threshold twice
         ev = eng.store.merge(mk(spark, [tag_row("a", "owner", f"v{i}")]))
         eng._append_history(ev, f"job{i}")
-    # the held snapshot still reads — nothing was freed underneath it
+    # the held snapshot still reads — nothing was deleted underneath it
     assert {r["field_value"] for r in held.collect()} == {"v0", "v1"}
     # the engine's own view has every event, exactly once
     rows = eng.history().collect()
     assert {r["field_value"] for r in rows} == {f"v{i}" for i in range(9)}
     assert len(rows) == 9
-    # and with no handout the second spill still freed deterministically
-    # (the union stayed bounded either way)
-    assert eng._history_appends < 4
+    # and the log stayed bounded: one compacted file plus the append since
+    assert len(eng._history_log.files()) < 4

@@ -30,7 +30,13 @@ single pass against the opaque per-asset thread pool.
 `--merge` runs the tag-store MERGE ladder: distributed-path merges of
 a fixed 10k batch into growing standing state (10k/100k/1M rows).
 
-Usage: python tools/scale_ladder.py [--static|--columns|--discovery|--merge] [N ...]
+`--history` runs the history-log ladder: N `update_tag_subset` appends
+on each merge path (driver-resident and distributed), then one timed
+`history().count()` and the number of live log files. Compaction every
+`history_spill_every` appends keeps the file count, and with it the
+read cost, bounded as the session grows.
+
+Usage: python tools/scale_ladder.py [--static|--columns|--discovery|--merge|--history] [N ...]
 (default 10 50 200)
 """
 
@@ -250,6 +256,30 @@ def merge_ladder(rungs: list[int]) -> None:
         print(f"{s:>9} {dt:>9.2f}   ({n_ev} events)")
 
 
+def history_ladder(rungs: list[int]) -> None:
+    from datacatalog_tag_engine_spark.engine import TagEngine
+
+    spark = get_spark("scale-ladder-history")
+    spark.sparkContext.setLogLevel("ERROR")
+    print(f"{'appends':>8} {'path':>12} {'appends(s)':>11} {'count(s)':>9} {'rows':>6} {'files':>6}")
+    for n in rungs:
+        for path in ("driver", "distributed"):
+            eng = TagEngine(spark)
+            eng.create_template("g", [{"field_id": "owner", "field_type": "string"}])
+            if path == "distributed":
+                eng.store.SMALL_STATE_MAX = 0
+            t0 = time.time()
+            for i in range(n):
+                eng.update_tag_subset("g", f"p/datasets/d/tables/t{i % 50}", None, [
+                    {"field_id": "owner", "field_type": "string", "raw_value": f"v{i}"}])
+            append_s = time.time() - t0
+            t0 = time.time()
+            rows = eng.history().count()
+            count_s = time.time() - t0
+            files = len(eng._history_log.files())
+            print(f"{n:>8} {path:>12} {append_s:>11.2f} {count_s:>9.2f} {rows:>6} {files:>6}")
+
+
 def main() -> None:
     argv = sys.argv[1:]
     if argv and argv[0] == "--static":
@@ -263,6 +293,9 @@ def main() -> None:
         return
     if argv and argv[0] == "--merge":
         merge_ladder([int(a) for a in argv[1:]] or [10_000, 100_000, 1_000_000])
+        return
+    if argv and argv[0] == "--history":
+        history_ladder([int(a) for a in argv[1:]] or [10, 50, 200])
         return
     rungs = [int(a) for a in sys.argv[1:]] or [10, 50, 200]
     spark = get_spark("scale-ladder")
