@@ -4,7 +4,8 @@ section 2.10 #18).
 The reference writes tags one catalog RPC at a time with retry-once
 backoff (reference: DataCatalogController.py:1608-1652) and reconciles
 column tags per entry (:456-473). Here every write is a bulk MERGE
-keyed on (asset_uri, column, template_id, field_id):
+keyed on (asset_uri, column, template_id, field_id). Its rules live in
+one function, ``merge_rows``:
 
 * upsert: incoming row replaces the existing row with the same key;
 * overwrite=False guard: incoming rows whose TAG (asset, column,
@@ -19,9 +20,11 @@ keyed on (asset_uri, column, template_id, field_id):
 MERGE is retried-task idempotent (SURVEY R6): re-applying the same
 incoming batch converges to the same table.
 
-Scale: the merge is a single shuffle on the 4-part key; the tags table
-is tiny next to the data being profiled, so the join side of the guard
-checks broadcasts. Parquet persistence writes a temp directory and
+``TagStore`` applies ``merge_rows`` either on the driver, to the whole
+state held as dicts, or per hash bucket of ``asset_uri`` in Python
+workers, to the state rows of the tags the batch touches. Every rule is
+local to one tag and a tag's rows share one ``asset_uri``, so the two
+give the same result. Parquet persistence writes a temp directory and
 swaps it in with the old one renamed aside (``commit_dir``), so a
 crash never leaves the path without state; on a real deployment this
 table would be Delta/Iceberg and this class maps 1:1 onto
@@ -36,8 +39,9 @@ import shutil
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..model.schemas import TAGS_SCHEMA
 from ..session import arrow_table, local_df
@@ -45,22 +49,76 @@ from ..session import arrow_table, local_df
 TAG_KEY = ["asset_uri", "column", "template_id", "field_id"]
 TAG_GROUP_KEY = ["asset_uri", "column", "template_id"]
 VALUE_COLS = ["field_value_string", "field_value_double", "field_value_bool", "field_value_ts"]
+# a bucket merge returns state rows (null action) and event rows in one
+# frame, told apart by _role
+_BUCKET_SCHEMA = T.StructType(
+    list(TAGS_SCHEMA.fields)
+    + [T.StructField("action", T.StringType()), T.StructField("_role", T.StringType(), False)]
+)
 
 
-def _null_safe_key(df: DataFrame) -> list:
-    # `column` is null for table-level tags; join null-safely on it.
-    return [df[c] for c in TAG_KEY]
+def merge_rows(
+    existing: list[dict], incoming: list[dict], overwrite: bool, delete_when_empty: bool
+) -> tuple[list[dict], list[dict]]:
+    """The MERGE rules over rows keyed by the TAGS_SCHEMA column names:
+    returns the new state and the events (rows plus ``action``).
+    ``existing`` must hold every state row of each tag ``incoming``
+    touches; other state rows may be left out, and pass through."""
+
+    def gkey(r):
+        return (r["asset_uri"], r["column"], r["template_id"])
+
+    def key(r):
+        return (r["asset_uri"], r["column"], r["template_id"], r["field_id"])
+
+    def is_empty(r):
+        return all(r.get(c) is None for c in VALUE_COLS)
+
+    groups: dict[tuple, list[dict]] = {}
+    for r in incoming:
+        groups.setdefault(gkey(r), []).append(r)
+    all_empty = {g for g, rs in groups.items() if all(is_empty(r) for r in rs)}
+    deletes = all_empty if delete_when_empty else set()
+    upserts = [r for r in incoming if gkey(r) not in all_empty and not is_empty(r)]
+
+    if not overwrite:
+        existing_groups = {gkey(r) for r in existing}
+        upserts = [r for r in upserts if gkey(r) not in existing_groups]
+    existing_keys = {key(r) for r in existing}
+    events = [
+        {**r, "action": "UPDATE" if key(r) in existing_keys else "CREATE"}
+        for r in upserts
+    ]
+    events += [{**r, "action": "DELETE"} for r in existing if gkey(r) in deletes]
+
+    upsert_keys = {key(r) for r in upserts}
+    survivors = [
+        r for r in existing if gkey(r) not in deletes and key(r) not in upsert_keys
+    ]
+    return survivors + [dict(r) for r in upserts], events
+
+
+def _merge_bucket(overwrite: bool, delete_when_empty: bool):
+    def apply(state, incoming):
+        merged, events = merge_rows(
+            state.to_pylist(), incoming.to_pylist(), overwrite, delete_when_empty
+        )
+        rows = [{**r, "action": None, "_role": "state"} for r in merged]
+        rows += [{**r, "_role": "event"} for r in events]
+        return arrow_table(
+            [tuple(r.get(f.name) for f in _BUCKET_SCHEMA.fields) for r in rows], _BUCKET_SCHEMA
+        )
+
+    return apply
 
 
 class TagStore:
-    # While total state stays at most this many rows the MERGE runs on
-    # the driver over plain dicts (the reference's own regime: tags are
-    # Firestore documents, DataCatalogController.py:1608-1652) — a
-    # dimension-sized merge otherwise pays seconds of per-job overhead
-    # (4 broadcast joins + a window shuffle + an eager checkpoint) to
-    # move a handful of rows. Past the threshold the store promotes
-    # one-way to the distributed MERGE below, whose semantics these
-    # dict operations mirror rule for rule.
+    # While total state stays at most this many rows ``merge_rows`` runs
+    # on the driver over the whole state (the reference's own regime:
+    # tags are Firestore documents, DataCatalogController.py:1608-1652),
+    # with no Spark job of its own. Past the threshold the store
+    # promotes one-way to the distributed path, which applies the same
+    # function per hash bucket of the touched tags.
     SMALL_STATE_MAX = 4096
 
     def __init__(self, spark: SparkSession, path: str | None = None):
@@ -69,14 +127,7 @@ class TagStore:
         if path:
             recover_dir(path)
         if path and os.path.exists(path):
-            self._df = spark.read.parquet(path)
-            probe = self._df.limit(self.SMALL_STATE_MAX + 1).collect()
-            if len(probe) <= self.SMALL_STATE_MAX:
-                self._rows = [r.asDict() for r in probe]
-                self._df = self._small_df(self._rows)
-            else:
-                self._rows = None
-            self._known_empty = False
+            self.set_state(spark.read.parquet(path))
         else:
             self._df = local_df(spark, [], TAGS_SCHEMA)
             self._known_empty = True
@@ -105,44 +156,9 @@ class TagStore:
     def _merge_small(
         self, inc_rows: list[dict], overwrite: bool, delete_when_empty: bool
     ) -> DataFrame:
-        """Driver-resident MERGE for dimension-sized state: identical
-        semantics to the distributed path (upsert, overwrite guard,
-        delete-when-empty, CREATE/UPDATE/DELETE events), no Spark jobs
-        beyond the caller's one evaluation of the incoming plan."""
-        import pyspark.sql.types as T
-
-        def gkey(r):
-            return (r["asset_uri"], r["column"], r["template_id"])
-
-        def key(r):
-            return (r["asset_uri"], r["column"], r["template_id"], r["field_id"])
-
-        def is_empty(r):
-            return all(r.get(c) is None for c in VALUE_COLS)
-
-        groups: dict[tuple, list[dict]] = {}
-        for r in inc_rows:
-            groups.setdefault(gkey(r), []).append(r)
-        all_empty = {g for g, rs in groups.items() if all(is_empty(r) for r in rs)}
-        deletes = all_empty if delete_when_empty else set()
-        upserts = [r for r in inc_rows if gkey(r) not in all_empty and not is_empty(r)]
-
-        existing = self._rows
-        if not overwrite:
-            existing_groups = {gkey(r) for r in existing}
-            upserts = [r for r in upserts if gkey(r) not in existing_groups]
-        existing_keys = {key(r) for r in existing}
-        events = [
-            {**r, "action": "UPDATE" if key(r) in existing_keys else "CREATE"}
-            for r in upserts
-        ]
-        events += [{**r, "action": "DELETE"} for r in existing if gkey(r) in deletes]
-
-        upsert_keys = {key(r) for r in upserts}
-        survivors = [
-            r for r in existing if gkey(r) not in deletes and key(r) not in upsert_keys
-        ]
-        self._rows = survivors + [dict(r) for r in upserts]
+        """Driver-resident MERGE: no Spark jobs beyond the caller's one
+        evaluation of the incoming plan."""
+        self._rows, events = merge_rows(self._rows, inc_rows, overwrite, delete_when_empty)
         self._df = self._small_df(self._rows)
         self._known_empty = not self._rows
         if self.path:
@@ -169,17 +185,15 @@ class TagStore:
 
         ``column`` must exist in incoming (null for table-level tags).
         """
-        existing = self._df
-        inc = incoming
         # normalize nullable column for null-safe grouping
-        inc = inc.withColumn("column", F.col("column").cast("string"))
+        inc = incoming.withColumn("column", F.col("column").cast("string"))
 
         if self._rows is not None:
             # state is driver-resident: probe the incoming size with a
             # limit-collect (stops early past the cap). If everything
             # stays dimension-sized, merge on the driver — no joins, no
-            # window, no checkpoint. A full probe promotes the store to
-            # the distributed path for good (one re-evaluation of the
+            # checkpoint. A full probe promotes the store to the
+            # distributed path for good (one re-evaluation of the
             # incoming plan, paid once at the small->large transition).
             probe = inc.limit(self.SMALL_STATE_MAX + 1).collect()
             if len(probe) + len(self._rows) <= self.SMALL_STATE_MAX:
@@ -188,73 +202,44 @@ class TagStore:
                 )
             self._rows = None
 
-        empty_flag = F.forall(F.array(*[F.col(c).isNull() for c in VALUE_COLS]), lambda x: x)
-        grp = Window.partitionBy(*TAG_GROUP_KEY)
-        inc = inc.withColumn("_all_empty", F.min(F.when(empty_flag, 1).otherwise(0)).over(grp) == 1)
-
-        if delete_when_empty:
-            deletes = inc.filter(F.col("_all_empty")).select(*TAG_GROUP_KEY).distinct()
-        else:
-            # all-empty groups are no-ops, not deletions
-            deletes = inc.filter(F.lit(False)).select(*TAG_GROUP_KEY).distinct()
-        upserts = inc.filter(~F.col("_all_empty") & ~empty_flag).drop("_all_empty")
-
+        parallelism = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         if self._known_empty:
-            # first merge onto an empty store: every upsert is a CREATE,
-            # nothing exists to guard, delete, or survive — skip all
-            # four joins (this is every engine's cold start)
-            upserts_flagged = upserts.withColumn("action", F.lit("CREATE"))
-            deleted_rows = upserts_flagged.filter(F.lit(False)).withColumn(
-                "action", F.lit("DELETE")
-            )
-            survivors = existing
+            # first merge onto an empty store (every engine's cold start,
+            # and a bulk first load): every row with a value is kept as a
+            # CREATE, and no row with a value is in an all-empty tag, so
+            # the batch never reaches Python
+            has_value = F.exists(F.array(*[F.col(c).isNotNull() for c in VALUE_COLS]), lambda v: v)
+            kept = inc.filter(has_value)
+            merged = kept.withColumn("action", F.lit("CREATE")).withColumn("_role", F.lit("event"))
         else:
-            if not overwrite:
-                # skip upserts whose tag already exists (P5)
-                existing_tags = existing.select(*TAG_GROUP_KEY).distinct()
-                cond = [upserts[k].eqNullSafe(existing_tags[k]) for k in TAG_GROUP_KEY]
-                upserts = upserts.join(existing_tags, cond, "left_anti")
-
-            # classify CREATE vs UPDATE against current state (for history)
-            existing_keys = existing.select(*TAG_KEY).withColumn("_existed", F.lit(True))
-            cond = [upserts[k].eqNullSafe(existing_keys[k]) for k in TAG_KEY]
-            upserts_flagged = (
-                upserts.join(existing_keys, cond, "left")
-                .select(*[upserts[c] for c in upserts.columns], existing_keys["_existed"])
-                .withColumn("action", F.when(F.col("_existed"), "UPDATE").otherwise("CREATE"))
-                .drop("_existed")
+            # only the state rows of touched tags reach merge_rows; the
+            # touched keys are renamed so a batch derived from the state
+            # itself (copy_tags) joins without ambiguous self-join columns
+            existing = self._df
+            touched = inc.select(*[F.col(k).alias(f"_t_{k}") for k in TAG_GROUP_KEY]).distinct()
+            cond = [existing[k].eqNullSafe(touched[f"_t_{k}"]) for k in TAG_GROUP_KEY]
+            hit = existing.join(touched, cond, "left_semi")
+            kept = existing.join(touched, cond, "left_anti")
+            bucket = F.pmod(F.hash("asset_uri"), F.lit(parallelism))
+            merged = (
+                hit.groupBy(bucket)
+                .cogroup(inc.groupBy(bucket))
+                .applyInArrow(_merge_bucket(overwrite, delete_when_empty), _BUCKET_SCHEMA)
             )
-            # deleted rows (existing rows of tag groups marked delete)
-            dcond = [existing[k].eqNullSafe(deletes[k]) for k in TAG_GROUP_KEY]
-            deleted_rows = existing.join(deletes, dcond, "left_semi").withColumn("action", F.lit("DELETE"))
-
-            # MERGE: existing rows lose to same-key upserts; delete groups drop
-            survivors = existing.join(deletes, dcond, "left_anti")
-            ucond = [survivors[k].eqNullSafe(upserts_flagged[k]) for k in TAG_KEY]
-            survivors = survivors.join(upserts_flagged.select(*TAG_KEY), ucond, "left_anti")
         self._known_empty = False
 
         # ONE eager checkpoint materializes new state AND history events
         # together: the checkpoint truncates the self-referential merge
         # lineage (each merge reads the previous state) so plans stay
         # flat across many merges, and stacking the events into the same
-        # job means the caller's history append never re-runs the merge
-        # joins (previously the second action recomputed them — half of
-        # every merge-chain's wall time). Coalesce first (narrow, no
-        # shuffle): post-merge state otherwise inherits one near-empty
-        # partition per shuffle partition and every later op schedules
-        # that many tasks.
-        state_part = (
-            survivors.withColumn("action", F.lit(None).cast("string"))
-            .unionByName(upserts_flagged)
-            .withColumn("_role", F.lit("state"))
-        )
-        event_part = (
-            upserts_flagged.unionByName(deleted_rows).withColumn("_role", F.lit("event"))
-        )
-        parallelism = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        # job means the caller's history append never re-runs the
+        # merge. Coalesce first (narrow, no shuffle): post-merge state
+        # otherwise inherits one near-empty partition per shuffle
+        # partition and every later op schedules that many tasks.
         combined = (
-            state_part.unionByName(event_part)
+            kept.withColumn("action", F.lit(None).cast("string"))
+            .withColumn("_role", F.lit("state"))
+            .unionByName(merged)
             .coalesce(max(8, parallelism // 4))
             .localCheckpoint(eager=True)
         )

@@ -156,29 +156,42 @@ def test_driver_and_distributed_paths_agree_on_random_sequences(spark):
     # Property: the driver-resident merge and the distributed merge are
     # the SAME operator. Replay identical randomized merge sequences
     # (upserts, overwrite=False guards, delete-when-empty batches,
-    # column/table tags, repeated keys) against one store pinned small
-    # and one pinned distributed; state and event multiset must match
-    # after every step.
+    # column/table tags, repeated keys, every value type) against one
+    # store pinned small and one pinned distributed; state and event
+    # multiset must match after every step.
+    import datetime
     import random
+    from collections import Counter
+
+    from datacatalog_tag_engine_spark.store.tagstore import VALUE_COLS
 
     rng = random.Random(20260814)
     assets = ["a", "b", "c"]
     fields = ["owner", "domain"]
     columns = [None, "c1"]
+    values = [
+        ("field_value_string", "string", "x"),
+        ("field_value_string", "string", "y"),
+        ("field_value_double", "double", 1e-4),
+        ("field_value_double", "double", 12345678.5),
+        ("field_value_bool", "bool", True),
+        ("field_value_bool", "bool", False),
+        ("field_value_ts", "datetime", datetime.datetime(2026, 3, 1, 12, 30, 15, tzinfo=datetime.timezone.utc)),
+    ]
+
+    def draw(asset, field, column, empty):
+        row = tag_row(asset, field, column=column)
+        if not empty:
+            col, ftype, value = rng.choice(values)
+            row["field_type"] = ftype
+            row[col] = value
+        return row
 
     def random_batch():
-        rows = []
-        for _ in range(rng.randint(1, 5)):
-            empty = rng.random() < 0.3
-            rows.append(
-                tag_row(
-                    rng.choice(assets),
-                    rng.choice(fields),
-                    None if empty else rng.choice(["x", "y", "z"]),
-                    column=rng.choice(columns),
-                )
-            )
-        return rows
+        return [
+            draw(rng.choice(assets), rng.choice(fields), rng.choice(columns), rng.random() < 0.3)
+            for _ in range(rng.randint(1, 5))
+        ]
 
     small = TagStore(spark)
     dist = TagStore(spark)
@@ -187,17 +200,29 @@ def test_driver_and_distributed_paths_agree_on_random_sequences(spark):
     def key(r):
         return (r["asset_uri"], r["column"] or "", r["template_id"], r["field_id"])
 
+    def typed(r):
+        return (key(r),) + tuple(r[c] for c in VALUE_COLS)
+
     for step in range(12):
-        rows = random_batch()
+        if step == 0:
+            # onto empty stores: one partly-empty and one all-empty tag
+            rows = [
+                draw("a", "owner", None, True),
+                draw("a", "domain", None, False),
+                draw("b", "owner", "c1", True),
+                draw("b", "domain", "c1", True),
+            ]
+        else:
+            rows = random_batch()
         overwrite = rng.random() < 0.7
         dwe = rng.random() < 0.7
         ev_s = small.merge(mk(spark, rows), overwrite=overwrite, delete_when_empty=dwe)
         ev_d = dist.merge(mk(spark, rows), overwrite=overwrite, delete_when_empty=dwe)
-        small_events = sorted((key(r), r["action"]) for r in ev_s.collect())
-        dist_events = sorted((key(r), r["action"]) for r in ev_d.collect())
+        small_events = Counter(typed(r) + (r["action"],) for r in ev_s.collect())
+        dist_events = Counter(typed(r) + (r["action"],) for r in ev_d.collect())
         assert small_events == dist_events, f"step {step} events diverge"
-        s_state = {key(r): r["field_value_string"] for r in small.all().collect()}
-        d_state = {key(r): r["field_value_string"] for r in dist.all().collect()}
+        s_state = Counter(typed(r) for r in small.all().collect())
+        d_state = Counter(typed(r) for r in dist.all().collect())
         assert s_state == d_state, f"step {step} state diverges"
     assert small._rows is not None  # stayed driver-resident throughout
 

@@ -28,7 +28,8 @@ discovery loop used to be serial on the driver).
 single pass against the opaque per-asset thread pool.
 
 `--merge` runs the tag-store MERGE ladder: distributed-path merges of
-a fixed 10k batch into growing standing state (10k/100k/1M rows).
+a fixed 10k batch into growing standing state (10k/100k/1M rows), and
+a cold load of the same number of rows into an empty store.
 
 `--history` runs the history-log ladder: N `update_tag_subset` appends
 on each merge path (driver-resident and distributed), then one timed
@@ -205,9 +206,11 @@ def merge_ladder(rungs: list[int]) -> None:
     path (state >> SMALL_STATE_MAX), batch fixed at 10k rows split
     half updates / half creates plus 2% delete groups — the bulk
     reconcile shape (S14) a nightly refresh applies to a large
-    standing tag table. Measures one full merge: guard joins, CREATE/
-    UPDATE classification, delete anti-join, and the eager checkpoint
-    that materializes state + events."""
+    standing tag table. Measures one full merge: the touched-tag
+    semi/anti joins, the per-bucket row merge in Python workers, and
+    the eager checkpoint that materializes state + events. Each rung
+    also times a cold load: the rung's row count merged into an empty
+    store (a bulk first load), the path that never leaves the JVM."""
     from pyspark.sql import functions as F
 
     from datacatalog_tag_engine_spark.model.schemas import TAGS_SCHEMA
@@ -236,7 +239,10 @@ def merge_ladder(rungs: list[int]) -> None:
         return out.select(*[f.name for f in TAGS_SCHEMA.fields])
 
     batch_n = 10_000
-    print(f"{'state':>9} {'merge(s)':>9}   (10k batch: 50% update / 48% create / 2% delete)")
+    print(
+        f"{'state':>9} {'merge(s)':>9} {'cold-load(s)':>13}"
+        "   (10k batch: 50% update / 48% create / 2% delete)"
+    )
     for s in rungs:
         store = TagStore(spark)
         store.set_state(tag_rows(spark.range(0, s, 1, width), F.lit("old")))
@@ -253,7 +259,12 @@ def merge_ladder(rungs: list[int]) -> None:
         ev = store.merge(batch)
         n_ev = ev.count()
         dt = time.time() - t0
-        print(f"{s:>9} {dt:>9.2f}   ({n_ev} events)")
+
+        cold = TagStore(spark)
+        t0 = time.time()
+        assert cold.merge(tag_rows(spark.range(0, s, 1, width), F.lit("old"))).count() == s
+        cold_s = time.time() - t0
+        print(f"{s:>9} {dt:>9.2f} {cold_s:>13.2f}   ({n_ev} events)")
 
 
 def history_ladder(rungs: list[int]) -> None:
