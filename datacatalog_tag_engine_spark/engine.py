@@ -313,6 +313,10 @@ class TagEngine:
             raise ValueError(f"unsupported config_type {cfg['config_type']!r}")
         errors: list[tuple[str, str]] = []
         kw["_errors"] = errors
+        # frames a job caches for its own consumers, released once its
+        # merge and history append have read them
+        cached: list[DataFrame] = []
+        kw["_cached"] = cached
         try:
             raw = dispatch[cfg["config_type"]](cfg, assets, **kw)
             tags = DYN.coerce_long_rows(
@@ -330,6 +334,9 @@ class TagEngine:
             )
             exc._ledger_recorded = True
             raise
+        finally:
+            for df in cached:
+                df.unpersist()
         self._record_job(
             job_uuid, config_uuid, cfg["config_type"], started,
             status=status, task_count=n + failed, tasks_success=n,
@@ -566,7 +573,9 @@ class TagEngine:
         # policy-tag requests, the classification rollup) — cache it so
         # the containment join + min-by derivation runs once per job,
         # not once per consumer. Sized per tagged COLUMN, orders of
-        # magnitude below the scanned data at any scale.
+        # magnitude below the scanned data at any scale. The job releases
+        # both caches after its merge; the policy-tag requests recompute
+        # from lineage when read later.
         notables = SEN.select_notable_infotype(
             per_field, selection, keys=["asset_uri", "field"]
         ).cache()
@@ -586,6 +595,7 @@ class TagEngine:
                 F.struct(F.size("notable_infotypes"), F.col("classification_result")),
             ).alias("classification_result")
         ).cache()  # consumed by both the keep-filter and policy requests
+        kw["_cached"].extend([notables, classed])
         keep = classed.filter(F.col("classification_result") != "Public_Information")
 
         # policy-tag application (reference :1038-1042 gate, :1064-1097
@@ -831,9 +841,9 @@ class TagEngine:
     def _append_history(self, events: DataFrame, job_uuid: str) -> int:
         """T2: every applied mutation appends an audit row; returns the
         event count. One driver-side timestamp per append (the
-        reference stamps one event time per job). A driver-resident
-        merge's events are written from the driver, a distributed
-        merge's with one Spark write."""
+        reference stamps one event time per job). The events of a merge
+        run on the driver are written from the driver, a bucket merge's
+        with one Spark write."""
         rows = getattr(events, "_tag_engine_event_rows", None)
         if not self.tag_history_enabled():
             return len(rows) if rows is not None else events.count()

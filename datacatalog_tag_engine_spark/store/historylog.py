@@ -3,11 +3,12 @@ history table written once per tag mutation, BigQueryUtils.py:344-387).
 
 Every append is written at once as one entry of the log directory,
 named by the append range it covers: ``00000007-00000007.parquet``.
-A driver-resident merge's events are written with pyarrow as one file.
-A distributed merge's events are written by one Spark write, and its
-event count comes from the written parquet footers; when that count is
-small the part files are joined into one file on the driver, otherwise
-the entry stays a directory of part files. Entries hold the typed tag
+The events of a merge run on the driver (a small state, or a small
+batch's touched slice of a distributed state) are written with pyarrow
+as one file. A bucket merge's events are written by one Spark write,
+and its event count comes from the written parquet footers; when that
+count is small the part files are joined into one file on the driver,
+otherwise the entry stays a directory of part files. Entries hold the typed tag
 columns plus ``action``, ``event_time`` and ``job_uuid``; rendering
 (asset_name, field_value) happens at read time, in
 ``TagEngine.history``.
@@ -125,8 +126,9 @@ class HistoryLog:
     # -- appends -------------------------------------------------------------
 
     def append_rows(self, events: list[dict], event_time, job_uuid: str) -> int:
-        """Write a driver-resident merge's events (dicts with the tag
-        columns and ``action``) as one file; returns the event count."""
+        """Write the events of a merge run on the driver (dicts with the
+        tag columns and ``action``) as one file; returns the event
+        count."""
         if events:
             rows = [
                 tuple(
@@ -143,8 +145,8 @@ class HistoryLog:
         return len(events)
 
     def append_df(self, events: DataFrame, event_time, job_uuid: str) -> int:
-        """Write a distributed merge's events with one Spark write;
-        returns the event count, read from the written footers."""
+        """Write a bucket merge's events with one Spark write; returns
+        the event count, read from the written footers."""
         tmp = self._temp()
         events.select(
             *[F.col(f.name) for f in LOG_SCHEMA.fields if f.name not in ("event_time", "job_uuid")],

@@ -20,15 +20,18 @@ one function, ``merge_rows``:
 MERGE is retried-task idempotent (SURVEY R6): re-applying the same
 incoming batch converges to the same table.
 
-``TagStore`` applies ``merge_rows`` either on the driver, to the whole
-state held as dicts, or per hash bucket of ``asset_uri`` in Python
-workers, to the state rows of the tags the batch touches. Every rule is
-local to one tag and a tag's rows share one ``asset_uri``, so the two
-give the same result. Parquet persistence writes a temp directory and
-swaps it in with the old one renamed aside (``commit_dir``), so a
-crash never leaves the path without state; on a real deployment this
-table would be Delta/Iceberg and this class maps 1:1 onto
-``MERGE INTO``.
+``TagStore`` applies ``merge_rows`` in one of two places. On the
+driver, it merges a small state held as dicts, or, once the state is
+distributed, the batch's touched slice: the state rows of the assets
+the batch names, collected, merged and swapped back into the state.
+Larger batches are merged per hash bucket of ``asset_uri`` in Python
+workers, over the state rows of the tags the batch touches. Every rule
+is local to one tag and a tag's rows share one ``asset_uri``, so all
+three give the same result. Parquet persistence writes a temp
+directory and swaps it in with the old one renamed aside
+(``commit_dir``), so a crash never leaves the path without state; on a
+real deployment this table would be Delta/Iceberg and this class maps
+1:1 onto ``MERGE INTO``.
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ import shutil
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -113,12 +116,14 @@ def _merge_bucket(overwrite: bool, delete_when_empty: bool):
 
 
 class TagStore:
-    # While total state stays at most this many rows ``merge_rows`` runs
-    # on the driver over the whole state (the reference's own regime:
-    # tags are Firestore documents, DataCatalogController.py:1608-1652),
-    # with no Spark job of its own. Past the threshold the store
-    # promotes one-way to the distributed path, which applies the same
-    # function per hash bucket of the touched tags.
+    # The most rows ``merge_rows`` takes on the driver at once (batch plus
+    # the state rows it reads), the reference's own regime: tags are
+    # Firestore documents written one entry at a time,
+    # DataCatalogController.py:1608-1652. While the whole state fits,
+    # it is held on the driver and a merge runs no Spark job of its own.
+    # Past the cap the store promotes one-way to a distributed state; a
+    # batch whose touched slice still fits merges on the driver, and the
+    # rest merge per hash bucket of the touched tags.
     SMALL_STATE_MAX = 4096
 
     def __init__(self, spark: SparkSession, path: str | None = None):
@@ -154,13 +159,37 @@ class TagStore:
         return local_df(self.spark, data, TAGS_SCHEMA)
 
     def _merge_small(
-        self, inc_rows: list[dict], overwrite: bool, delete_when_empty: bool
+        self,
+        existing: list[dict],
+        inc_rows: list[dict],
+        overwrite: bool,
+        delete_when_empty: bool,
+        touched: Column | None = None,
     ) -> DataFrame:
-        """Driver-resident MERGE: no Spark jobs beyond the caller's one
-        evaluation of the incoming plan."""
-        self._rows, events = merge_rows(self._rows, inc_rows, overwrite, delete_when_empty)
-        self._df = self._small_df(self._rows)
-        self._known_empty = not self._rows
+        """MERGE on the driver, over the whole driver-resident state, or
+        over the slice ``existing`` of a distributed state that the
+        predicate ``touched`` selected. Driver-resident state runs no
+        Spark job beyond the caller's one evaluation of the incoming
+        plan; a slice is swapped into the distributed state with one
+        narrow checkpoint (no join, shuffle or Python worker)."""
+        merged, events = merge_rows(existing, inc_rows, overwrite, delete_when_empty)
+        if touched is None:
+            self._rows = merged
+            self._df = self._small_df(merged)
+            self._known_empty = not merged
+        else:
+            # the slice holds every state row of the batch's assets, so
+            # the rest of the state passes through untouched; coalescing
+            # back to the state's partition count keeps the union's
+            # local partitions from piling up merge after merge
+            parts = self._df.rdd.getNumPartitions()
+            self._df = (
+                self._df.filter(~touched)
+                .unionByName(self._small_df(merged))
+                .coalesce(parts)
+                .localCheckpoint(eager=True)
+            )
+            self._known_empty = False
         if self.path:
             self._persist()
 
@@ -188,19 +217,31 @@ class TagStore:
         # normalize nullable column for null-safe grouping
         inc = incoming.withColumn("column", F.col("column").cast("string"))
 
-        if self._rows is not None:
-            # state is driver-resident: probe the incoming size with a
-            # limit-collect (stops early past the cap). If everything
-            # stays dimension-sized, merge on the driver — no joins, no
-            # checkpoint. A full probe promotes the store to the
-            # distributed path for good (one re-evaluation of the
-            # incoming plan, paid once at the small->large transition).
-            probe = inc.limit(self.SMALL_STATE_MAX + 1).collect()
-            if len(probe) + len(self._rows) <= self.SMALL_STATE_MAX:
-                return self._merge_small(
-                    [r.asDict() for r in probe], overwrite, delete_when_empty
-                )
-            self._rows = None
+        # probe the incoming size with a limit-collect (stops early past
+        # the cap). The driver merges the batch when it fits together
+        # with the state rows it reads: the whole driver-resident state,
+        # or a distributed state's touched slice (every state row of
+        # the batch's assets, collected with a limit that stops past the
+        # cap). Otherwise the batch is merged per bucket, re-evaluating
+        # its plan; a driver-resident store promotes to the distributed
+        # path for good.
+        batch = [r.asDict() for r in inc.limit(self.SMALL_STATE_MAX + 1).collect()]
+        room = self.SMALL_STATE_MAX - len(batch)
+        if room >= 0:
+            touched = None
+            if self._rows is not None:
+                existing = self._rows
+            else:
+                # a limit-collect scans partitions in waves, the first
+                # this wide; coalescing the slice to it keeps the
+                # collect to one job however many partitions the state has
+                wave = int(self.spark.conf.get("spark.sql.limit.initialNumPartitions"))
+                touched = F.col("asset_uri").isin(list({r["asset_uri"] for r in batch}))
+                sliced = self._df.filter(touched).coalesce(wave)
+                existing = [r.asDict() for r in sliced.limit(room + 1).collect()]
+            if len(existing) <= room:
+                return self._merge_small(existing, batch, overwrite, delete_when_empty, touched)
+        self._rows = None
 
         parallelism = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         if self._known_empty:

@@ -201,3 +201,29 @@ def test_export_reports(spark, engine, assets, tmp_path):
     table_report = spark.read.parquet(str(tmp_path / "reports/catalog_report_table_tags"))
     row = table_report.first()
     assert (row["project"], row["dataset"], row["table"], row["tag_value"]) == ("p", "d", "lineitem", "NONE")
+
+
+def test_sensitive_job_releases_its_caches(spark, engine, assets):
+    # a cron engine runs sensitive jobs for the session's life: each job
+    # must leave no cached frame behind once its merge has read them
+    findings = spark.createDataFrame(
+        [("p/datasets/d/tables/users", "email", "EMAIL_ADDRESS")],
+        "asset_uri string, field string, infotype string",
+    )
+    selection = spark.createDataFrame(
+        [(["EMAIL_ADDRESS"], "EMAIL")], "field_infotypes array<string>, notable_infotype string"
+    )
+    classification = spark.createDataFrame(
+        [(["EMAIL"], "Sensitive_Personal_Identifiable_Information")],
+        "notable_infotypes array<string>, classification_result string",
+    )
+    cfg = engine.create_config(
+        "SENSITIVE_TAG_COLUMN", "data_sensitivity",
+        included_uris="bigquery/project/p/dataset/d/*",
+    )
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    before = persistent()
+    engine.trigger_job(cfg, assets, findings=findings, selection=selection,
+                       classification=classification)
+    assert persistent() - before == set()
+    assert {r["field_value_string"] for r in engine.store.all().collect()} == {None, "EMAIL"}

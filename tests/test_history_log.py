@@ -43,6 +43,37 @@ def test_driver_resident_sync_calls_run_no_spark_jobs(spark):
     assert eng.store._rows is not None  # stayed driver-resident
 
 
+def test_small_batch_into_distributed_state_merges_its_touched_slice(spark, monkeypatch):
+    # past the cap the state is distributed, but a 1-row update still
+    # merges on the driver: one job collects the asset's state rows,
+    # one checkpoints the new state, and the history append writes the
+    # events from the driver
+    eng = governance_engine(spark)
+    eng.store.SMALL_STATE_MAX = 4
+    for i in range(6):
+        eng.update_tag_subset("g", f"p/datasets/ds/tables/t{i}", None, owner("a"))
+    assert eng.store._rows is None  # promoted
+
+    jobs = {}
+
+    def counted(name, fn):
+        def run(*args, **kw):
+            j0 = next_job_id(spark)
+            out = fn(*args, **kw)
+            jobs[name] = next_job_id(spark) - j0
+            return out
+        return run
+
+    monkeypatch.setattr(eng.store, "merge", counted("merge", eng.store.merge))
+    monkeypatch.setattr(eng, "_append_history", counted("history", eng._append_history))
+    assert eng.update_tag_subset("g", T1, None, owner("bob")) == 1
+    assert jobs["history"] == 0
+    assert jobs["merge"] <= 2
+    state = {r["asset_uri"]: r["field_value_string"] for r in eng.store.all().collect()}
+    assert len(state) == 6 and state[T1] == "bob"
+    assert [r["action"] for r in eng.history().collect() if r["field_value"] == "bob"] == ["UPDATE"]
+
+
 def test_history_rendering_matches_across_merge_paths(spark):
     eng = TagEngine(spark)
     eng.create_template("t", [

@@ -157,8 +157,9 @@ def test_driver_and_distributed_paths_agree_on_random_sequences(spark):
     # the SAME operator. Replay identical randomized merge sequences
     # (upserts, overwrite=False guards, delete-when-empty batches,
     # column/table tags, repeated keys, every value type) against one
-    # store pinned small and one pinned distributed; state and event
-    # multiset must match after every step.
+    # store pinned small, one pinned to bucket merges and one that
+    # promotes early and then takes both touched-slice and bucket
+    # merges; state and event multisets must match after every step.
     import datetime
     import random
     from collections import Counter
@@ -166,7 +167,7 @@ def test_driver_and_distributed_paths_agree_on_random_sequences(spark):
     from datacatalog_tag_engine_spark.store.tagstore import VALUE_COLS
 
     rng = random.Random(20260814)
-    assets = ["a", "b", "c"]
+    assets = ["a", "b", "c", "d", "e", "f"]
     fields = ["owner", "domain"]
     columns = [None, "c1"]
     values = [
@@ -196,6 +197,9 @@ def test_driver_and_distributed_paths_agree_on_random_sequences(spark):
     small = TagStore(spark)
     dist = TagStore(spark)
     dist.SMALL_STATE_MAX = 0  # instance override: promotes on first merge
+    mixed = TagStore(spark)
+    mixed.SMALL_STATE_MAX = 8  # promotes within a few steps
+    paths = Counter()
 
     def key(r):
         return (r["asset_uri"], r["column"] or "", r["template_id"], r["field_id"])
@@ -203,7 +207,7 @@ def test_driver_and_distributed_paths_agree_on_random_sequences(spark):
     def typed(r):
         return (key(r),) + tuple(r[c] for c in VALUE_COLS)
 
-    for step in range(12):
+    for step in range(16):
         if step == 0:
             # onto empty stores: one partly-empty and one all-empty tag
             rows = [
@@ -218,13 +222,20 @@ def test_driver_and_distributed_paths_agree_on_random_sequences(spark):
         dwe = rng.random() < 0.7
         ev_s = small.merge(mk(spark, rows), overwrite=overwrite, delete_when_empty=dwe)
         ev_d = dist.merge(mk(spark, rows), overwrite=overwrite, delete_when_empty=dwe)
+        ev_m = mixed.merge(mk(spark, rows), overwrite=overwrite, delete_when_empty=dwe)
+        if mixed._rows is None:
+            # only a driver merge hands its event rows to the caller
+            paths["slice" if hasattr(ev_m, "_tag_engine_event_rows") else "bucket"] += 1
         small_events = Counter(typed(r) + (r["action"],) for r in ev_s.collect())
-        dist_events = Counter(typed(r) + (r["action"],) for r in ev_d.collect())
-        assert small_events == dist_events, f"step {step} events diverge"
+        for other, ev in (("dist", ev_d), ("mixed", ev_m)):
+            events = Counter(typed(r) + (r["action"],) for r in ev.collect())
+            assert small_events == events, f"step {step} {other} events diverge"
         s_state = Counter(typed(r) for r in small.all().collect())
-        d_state = Counter(typed(r) for r in dist.all().collect())
-        assert s_state == d_state, f"step {step} state diverges"
+        for other, store in (("dist", dist), ("mixed", mixed)):
+            state = Counter(typed(r) for r in store.all().collect())
+            assert s_state == state, f"step {step} {other} state diverges"
     assert small._rows is not None  # stayed driver-resident throughout
+    assert paths["slice"] >= 1 and paths["bucket"] >= 1, paths
 
 
 def test_history_readable_across_many_distributed_merges(spark):

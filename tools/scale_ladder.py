@@ -27,9 +27,10 @@ discovery loop used to be serial on the driver).
 `--discovery` runs the column-discovery ladder: the schema-shaped
 single pass against the opaque per-asset thread pool.
 
-`--merge` runs the tag-store MERGE ladder: distributed-path merges of
-a fixed 10k batch into growing standing state (10k/100k/1M rows), and
-a cold load of the same number of rows into an empty store.
+`--merge` runs the tag-store MERGE ladder over growing standing state
+(10k/100k/1M rows, always distributed): a fixed 10k batch (bucket
+merge), a fixed 200-row batch (touched-slice merge on the driver), and
+a cold load of the rung's row count into an empty store.
 
 `--history` runs the history-log ladder: N `update_tag_subset` appends
 on each merge path (driver-resident and distributed), then one timed
@@ -202,15 +203,21 @@ def discovery_ladder(rungs: list[int]) -> None:
 
 
 def merge_ladder(rungs: list[int]) -> None:
-    """Tag-store MERGE ladder: state-size rungs through the DISTRIBUTED
-    path (state >> SMALL_STATE_MAX), batch fixed at 10k rows split
-    half updates / half creates plus 2% delete groups — the bulk
-    reconcile shape (S14) a nightly refresh applies to a large
-    standing tag table. Measures one full merge: the touched-tag
-    semi/anti joins, the per-bucket row merge in Python workers, and
-    the eager checkpoint that materializes state + events. Each rung
-    also times a cold load: the rung's row count merged into an empty
-    store (a bulk first load), the path that never leaves the JVM."""
+    """Tag-store MERGE ladder: state-size rungs with a distributed state
+    (state > SMALL_STATE_MAX). Two batch sizes, each split half
+    updates / half creates plus 2% delete groups — the reconcile shape
+    (S14) a refresh applies to a large standing tag table:
+
+    * 10k rows, above the cap: the size probe, the touched-tag
+      semi/anti joins, the per-bucket row merge in Python workers, and
+      the eager checkpoint that materializes state + events;
+    * 200 rows, an incremental refresh: the size probe, one job that
+      collects the touched slice, the row merge on the driver, and the
+      narrow checkpoint that swaps the slice into the state.
+
+    Each rung also times a cold load: the rung's row count merged into
+    an empty store (a bulk first load), the path that never leaves the
+    JVM."""
     from pyspark.sql import functions as F
 
     from datacatalog_tag_engine_spark.model.schemas import TAGS_SCHEMA
@@ -238,12 +245,7 @@ def merge_ladder(rungs: list[int]) -> None:
         )
         return out.select(*[f.name for f in TAGS_SCHEMA.fields])
 
-    batch_n = 10_000
-    print(
-        f"{'state':>9} {'merge(s)':>9} {'cold-load(s)':>13}"
-        "   (10k batch: 50% update / 48% create / 2% delete)"
-    )
-    for s in rungs:
+    def timed_merge(s, batch_n):
         store = TagStore(spark)
         store.set_state(tag_rows(spark.range(0, s, 1, width), F.lit("old")))
         upd = tag_rows(spark.range(0, batch_n // 2, 1, width), F.lit("new"))  # ids 0.. overlap
@@ -256,15 +258,25 @@ def merge_ladder(rungs: list[int]) -> None:
         )
         batch = upd.unionByName(crt).unionByName(dlt)
         t0 = time.time()
-        ev = store.merge(batch)
-        n_ev = ev.count()
-        dt = time.time() - t0
+        n_ev = store.merge(batch).count()
+        return time.time() - t0, n_ev
+
+    print(
+        f"{'state':>9} {'merge-10k(s)':>13} {'merge-200(s)':>13} {'cold-load(s)':>13}"
+        "   (batches: 50% update / 48% create / 2% delete)"
+    )
+    for s in rungs:
+        big_s, big_ev = timed_merge(s, 10_000)
+        small_s, small_ev = timed_merge(s, 200)
 
         cold = TagStore(spark)
         t0 = time.time()
         assert cold.merge(tag_rows(spark.range(0, s, 1, width), F.lit("old"))).count() == s
         cold_s = time.time() - t0
-        print(f"{s:>9} {dt:>9.2f} {cold_s:>13.2f}   ({n_ev} events)")
+        print(
+            f"{s:>9} {big_s:>13.2f} {small_s:>13.2f} {cold_s:>13.2f}"
+            f"   ({big_ev} / {small_ev} events)"
+        )
 
 
 def history_ladder(rungs: list[int]) -> None:
