@@ -29,7 +29,7 @@ Coverage map (SURVEY.md section 2.10 + training-data operators):
   s05      ANN recall@k evaluation (IVF vs exact brute force)
   s06      k-means-trained IVF (MLlib centroids; rows-only)
   q44-q53  policy tags; training shuffle; mixture sampling; int8
-           quantization; dedup apply; fused column profile;
+           quantization; dedup apply; dynamic-column profile;
            train/val/test split; incremental corpus delta; end-to-end
            corpus-prep pipeline; per-source token-budget sampling
   d07      semantic dedup (SemDeDup: cell-local dominance, hot-cell salt)
@@ -109,6 +109,7 @@ Coverage map (SURVEY.md section 2.10 + training-data operators):
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -620,10 +621,16 @@ FUSED_FIELDS = [
 ]
 
 
+def _clone_inventory(li: DataFrame, uris: list[str]) -> DataFrame:
+    """One inventory DataFrame holding a full copy of ``li`` per asset,
+    keyed by ``asset_uri`` — the fused executor's input form."""
+    return reduce(DataFrame.unionByName, [li.withColumn("asset_uri", F.lit(u)) for u in uris])
+
+
 def q29_fused_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_testdata(spark, sf_dir)
-    li = spark.table("lineitem")
-    wide = DYN.run_config_fused_wide(spark, FUSED_FIELDS, [(u, li) for u in CLONE_URIS])
+    inv = _clone_inventory(spark.table("lineitem"), CLONE_URIS)
+    wide = DYN.run_config_fused_wide(spark, FUSED_FIELDS, inv)
     return wide.withColumnRenamed("_asset_uri", "asset_uri")
 
 
@@ -664,10 +671,8 @@ def entry(spark: SparkSession) -> DataFrame:
     averages, N assets) computed in ONE groupBy job over sf0.001,
     coerced into typed tag rows."""
     register_testdata(spark, "/root/testdata/sf0.001")
-    li = spark.table("lineitem")
-    raw = DYN.run_config_fused(
-        spark, FUSED_FIELDS, [(u, li) for u in CLONE_URIS[:4]], "data_governance"
-    )
+    inv = _clone_inventory(spark.table("lineitem"), CLONE_URIS[:4])
+    raw = DYN.run_config_fused(spark, FUSED_FIELDS, inv, "data_governance")
     return DYN.coerce_long_rows(raw).drop("updated_ts")
 
 
@@ -767,8 +772,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["q48_dedup_apply"] = q48
 
     def q49(spark, sf):
-        # R9 column path: every (column, field) cell of a dynamic-column
-        # profile in ONE aggregation pass (run_column_config_fused)
+        # the dynamic-column profile: every (column, field) cell, one
+        # fused per-asset statement per column, as the engine runs it
         register_testdata(spark, sf)
         fields = [
             {"field_id": "distinct_values", "field_type": "double",
@@ -776,11 +781,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             {"field_id": "non_null_values", "field_type": "double",
              "query_expression": "select count($column) from $table"},
         ]
-        raw = DYN.run_column_config_fused(
-            spark, fields, LINEITEM_URI, spark.table("lineitem"),
-            ["l_orderkey", "l_returnflag", "l_shipdate"], "profile",
-        )
-        return DYN.coerce_long_rows(raw).select(
+        rows = [
+            r
+            for c in ("l_orderkey", "l_returnflag", "l_shipdate")
+            for r in DYN.run_config_per_asset(
+                spark, fields, [LINEITEM_URI], "profile", _short, column=c
+            )
+        ]
+        return DYN.coerce_long_rows(DYN.raw_rows_to_df(spark, rows)).select(
             "asset_uri", "column", "field_id", "field_value_double"
         )
 
@@ -5669,7 +5677,13 @@ def sigstore_replay_sql(n_batches: int = 3, threshold: float = 0.5) -> str:
     residents + acc_0..b-1). Per stage, the loser rule is the stream's
     exactly: a batch doc in any cross pair (one side resident) loses;
     the larger id of a within-batch pair loses. Signatures are
-    doc-local, so one sigs/buckets CTE serves every stage."""
+    doc-local, so one sigs/buckets CTE serves every stage.
+
+    sigs, each stage's store and its adjudicated pairs e{b} are read
+    several times downstream, and store{b+1} reads store{b}: without
+    the MATERIALIZED hints DuckDB inlines every reference, so the
+    upstream chain is re-derived once per path through the stages
+    (measured at sf0.001: ~350 s against 0.25 s with the hints)."""
     sig_exprs = ",\n         ".join(
         f"min(md5('{j}:' || shingle)) AS sig_{j}" for j in range(8)
     )
@@ -5687,7 +5701,7 @@ p{b} AS (
     ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id <> b.doc_id
   WHERE a.grp = {g}
     AND (b.grp = {g} OR b.doc_id IN (SELECT doc_id FROM store{b}))),
-e{b} AS (
+e{b} AS MATERIALIZED (
   SELECT p.da, p.db,
          p.da IN (SELECT doc_id FROM store{b}) AS a_res,
          p.db IN (SELECT doc_id FROM store{b}) AS b_res
@@ -5703,7 +5717,7 @@ lose{b} AS (
 acc{b} AS (
   SELECT doc_id FROM sigs WHERE grp = {g}
     AND doc_id NOT IN (SELECT doc_id FROM lose{b})),
-store{b + 1} AS (
+store{b + 1} AS MATERIALIZED (
   SELECT doc_id FROM store{b} UNION ALL SELECT doc_id FROM acc{b})""")
     final = "\nUNION ALL\n".join(
         f"SELECT {b}::INT AS batch, doc_id FROM acc{b}" for b in range(n_batches)
@@ -5717,13 +5731,13 @@ sh AS (
                 THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
                 ELSE [array_to_string(w, ' ')] END) AS shingle
   FROM toks),
-sigs AS (
+sigs AS MATERIALIZED (
   SELECT doc_id, any_value(grp) AS grp, {sig_exprs}
   FROM sh GROUP BY doc_id),
 buckets AS (
   SELECT doc_id, grp, band, CASE band {band_cases} END AS bucket
   FROM sigs, (SELECT unnest(range(4)) AS band)),
-store0 AS (SELECT doc_id FROM sigs WHERE grp = 0),{",".join(stages)}
+store0 AS MATERIALIZED (SELECT doc_id FROM sigs WHERE grp = 0),{",".join(stages)}
 {final}
 """
 
@@ -5860,7 +5874,8 @@ def sigstore_metrics_sql(n_batches: int = 3, threshold: float = 0.5) -> str:
     select: per batch, input size, accepted size, and the two loser
     evidence counts (cross = near-dup of the store-so-far, within =
     larger id of a batch-internal pair). Same split rule as q102:
-    residents doc_id % 4 = 0, drop b is doc_id % 4 = b + 1."""
+    residents doc_id % 4 = 0, drop b is doc_id % 4 = b + 1. The
+    MATERIALIZED hints are load-bearing, as in sigstore_replay_sql."""
     sig_exprs = ",\n         ".join(
         f"min(md5('{j}:' || shingle)) AS sig_{j}" for j in range(8)
     )
@@ -5879,7 +5894,7 @@ p{b} AS (
     ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id <> b.doc_id
   WHERE a.grp = {g}
     AND (b.grp = {g} OR b.doc_id IN (SELECT doc_id FROM store{b}))),
-e{b} AS (
+e{b} AS MATERIALIZED (
   SELECT p.da, p.db,
          p.da IN (SELECT doc_id FROM store{b}) AS a_res,
          p.db IN (SELECT doc_id FROM store{b}) AS b_res
@@ -5895,7 +5910,7 @@ lose{b} AS (
 acc{b} AS (
   SELECT doc_id FROM sigs WHERE grp = {g}
     AND doc_id NOT IN (SELECT doc_id FROM lose{b})),
-store{b + 1} AS (
+store{b + 1} AS MATERIALIZED (
   SELECT doc_id FROM store{b} UNION ALL SELECT doc_id FROM acc{b})""")
         finals.append(f"""
 SELECT {b}::INT AS batch,
@@ -5914,13 +5929,13 @@ sh AS (
                 THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
                 ELSE [array_to_string(w, ' ')] END) AS shingle
   FROM toks),
-sigs AS (
+sigs AS MATERIALIZED (
   SELECT doc_id, any_value(grp) AS grp, {sig_exprs}
   FROM sh GROUP BY doc_id),
 buckets AS (
   SELECT doc_id, grp, band, CASE band {band_cases} END AS bucket
   FROM sigs, (SELECT unnest(range(4)) AS band)),
-store0 AS (SELECT doc_id FROM sigs WHERE grp = 0),{",".join(stages)}
+store0 AS MATERIALIZED (SELECT doc_id FROM sigs WHERE grp = 0),{",".join(stages)}
 {" UNION ALL ".join(finals)}
 """
 
@@ -6235,7 +6250,9 @@ def cluster_chain_sql(src: str) -> str:
     reachable doc_id, singletons = self). ONE copy of the chain —
     q34/q48 run it on documents, q59 on the cleaned corpus, and the
     r15 dedup-funnel oracle on each stage's survivors. Callers open
-    the statement with WITH RECURSIVE."""
+    the statement with WITH RECURSIVE. ``edges`` is MATERIALIZED: the
+    recursive step joins it once per iteration, and inlined it would
+    re-derive the whole pair chain each time."""
     sig_exprs = ",\n         ".join(
         f"min(md5('{j}:' || shingle)) AS sig_{j}" for j in range(8)
     )
@@ -6264,7 +6281,7 @@ pairs AS (
   JOIN sizes sa ON sa.doc_id = c.da
   JOIN sizes sb ON sb.doc_id = c.db
   WHERE round(i / (sa.n + sb.n - i), 4) >= 0.5),
-edges AS (SELECT da AS src, db AS dst FROM pairs UNION SELECT db, da FROM pairs),
+edges AS MATERIALIZED (SELECT da AS src, db AS dst FROM pairs UNION SELECT db, da FROM pairs),
 reach(src, dst) AS (
   SELECT doc_id, doc_id FROM {src}
   UNION
@@ -7521,7 +7538,11 @@ FROM neg QUALIFY rank <= 5
     # (body re-sourced FROM cleaned, stage-0 CTEs prepended) is exactly
     # the surgery tests/test_oracle_drafts_r7.py proved value-equal.
     # The CTE chain through `clusters` (q59_prefix) is shared with the
-    # q71 export-boundary composition below — one copy.
+    # q71 export-boundary composition below — one copy. Each stage's
+    # output (keep, para, clean) is read by several CTEs of the next
+    # stage, so it is MATERIALIZED: inlined, DuckDB re-derives every
+    # earlier stage once per reference (measured at sf0.001: q59v2
+    # 79 s without the hints, ~1 s with them and cluster_chain_sql's).
     q59_prefix = f"""
 WITH RECURSIVE
 base AS (
@@ -7542,17 +7563,17 @@ gf AS (
            / len(lines) AS ell,
          len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) / len(w) AS alpha
   FROM base WHERE len(w) > 0 AND len(lines) > 0),
-keep AS (
+keep AS MATERIALIZED (
   SELECT doc_id, text FROM gf
   WHERE nw BETWEEN 20 AND 100000
     AND mwl BETWEEN 3.0 AND 10.0
     AND sym <= 0.1 AND bullet <= 0.9 AND ell <= 0.3 AND alpha >= 0.8),
 {_paragraph_cte("keep", "pd_")},
-para AS (
+para AS MATERIALIZED (
   SELECT k.doc_id, coalesce(r.text, '') AS text
   FROM pd_d k LEFT JOIN pd_r r USING (doc_id)),
 {_span_cte("para", "sp_")},
-clean AS (
+clean AS MATERIALIZED (
   SELECT d.doc_id, coalesce(r.text, '') AS text
   FROM sp_d d LEFT JOIN sp_r r USING (doc_id)
   WHERE length(trim(coalesce(r.text, ''))) > 0),

@@ -16,6 +16,11 @@ of DataFrame plans:
   TagEngineStoreHandler.py:1374-1392) + version bump and
   next_run += frequency (:290-309).
 
+Dynamic-tag jobs run one of two executors (operators/dynamic.py),
+picked from the config's shape, never its asset count: a config naming
+an ``inventory_view`` runs the fused single-leaf plan as one job; every
+other one runs per asset, recording a failing asset in ``job_errors``.
+
 Config metadata is driver-side (it is Firestore-document sized); all
 data-shaped state (tags, history, reports) lives in DataFrames.
 """
@@ -35,7 +40,7 @@ from .operators import uri as URI
 from .operators.glossary import glossary_tag_rows
 from .operators.importer import melt_to_tag_rows, read_tag_csv
 from .operators.backup import read_backup, restore_tag_rows
-from .operators.substitution import parse_query_expression, split_resource_uri
+from .operators.substitution import parse_query_expression
 from .store.historylog import HistoryLog
 from .store.tagstore import TagStore, commit_dir, recover_dir
 
@@ -351,14 +356,9 @@ class TagEngine:
         )
         return [r["asset_uri"] for r in matched.select("asset_uri").collect()]
 
-    # measured crossover (tools/scale_ladder.py): thread-pooled per-asset
-    # execution beats the fused union up to hundreds of assets on
-    # local[32]; fused wins when per-asset job scheduling dominates
-    # (thousands of assets / real-cluster job latency) or when assets
-    # share scans. Configs can override with fuse_threshold.
-    FUSE_THRESHOLD = 256
-
     def _run_dynamic_table(self, cfg, assets, **kw):
+        """Fused over the config's ``inventory_view`` when it names one;
+        otherwise per asset, whatever the asset count."""
         # scale form: cfg["inventory_view"] names a registered table/view
         # holding EVERY matched asset's rows with an asset_uri column
         # (one partitioned scan). The fused plan then has a single leaf
@@ -384,79 +384,45 @@ class TagEngine:
             ).select("asset_uri")
             inv = self.spark.table(inv_view).join(matched, "asset_uri", "left_semi")
             return DYN.run_config_fused(self.spark, cfg["fields"], inv, cfg["template_id"])
-        uris = self._matched_uris(cfg, assets)
-        errors = kw.get("_errors")
-        threshold = cfg.get("fuse_threshold", self.FUSE_THRESHOLD)
-        if DYN.fusable(cfg["fields"]) and len(uris) >= threshold:
-            pairs = []
-            for uri in uris:
-                p, d, t = split_resource_uri(uri)
-                try:
-                    pairs.append((uri, self.spark.table(self.qualify(p, d or "", t or ""))))
-                except Exception as ex:
-                    if errors is None:
-                        raise
-                    errors.append((uri, f"{type(ex).__name__}: {ex}"))
-            if len(pairs) > 1:
-                return DYN.run_config_fused(self.spark, cfg["fields"], pairs, cfg["template_id"])
-            uris = [uri for uri, _ in pairs]
         rows = DYN.run_config_per_asset(
-            self.spark, cfg["fields"], uris, cfg["template_id"], self.qualify,
-            errors=errors,
+            self.spark, cfg["fields"], self._matched_uris(cfg, assets),
+            cfg["template_id"], self.qualify, errors=kw.get("_errors"),
         )
         return DYN.raw_rows_to_df(self.spark, rows)
 
     def _run_dynamic_column(self, cfg, assets, **kw):
-        """Default: thread-pooled per-(asset, column) statements —
-        measured faster than the fused single pass when expressions
-        carry count-distincts (the multi-distinct Expand multiplies scan
-        rows by #aggregates; see SCALE.md). fuse_columns=True opts into
-        the one-pass plan for distinct-free profiles or job-count-bound
-        catalogs."""
+        """Thread-pooled per-(asset, column) statements, each fusing the
+        config's fields like the reference's combine_queries. One
+        aggregation pass over all columns was measured slower on
+        count-distinct profiles (the multi-distinct Expand multiplies
+        scan rows by #aggregates; see SCALE.md), so it is not offered.
+        An asset whose column discovery or evaluation fails is recorded
+        in the job's errors; the other assets proceed."""
         from concurrent.futures import ThreadPoolExecutor
 
         matched = URI.expand_included_excluded(
             assets, cfg["included_uris"], cfg.get("excluded_uris")
         )
         uris = [r["asset_uri"] for r in matched.select("asset_uri").collect()]
-        tasks: list[tuple[str, str]] = []
-        fused_parts = []
+        errors = kw.get("_errors")
+        discovered = self._discover_columns(cfg, matched, uris, errors)
+        tasks = [(uri, col) for uri, columns in discovered.items() for col in columns]
 
-        discovered = self._discover_columns(cfg, matched, uris)
-        for uri in uris:
-            columns = discovered[uri]
-            if cfg.get("fuse_columns"):
-                p, d, t = split_resource_uri(uri)
-                fused_parts.append(
-                    DYN.run_column_config_fused(
-                        self.spark, cfg["fields"], uri,
-                        self.spark.table(self.qualify(p, d or "", t or "")),
-                        columns, cfg["template_id"],
-                    )
-                )
-            else:
-                tasks.extend((uri, col) for col in columns)
+        def one(task):
+            uri, col = task
+            return DYN.run_config_per_asset(
+                self.spark, cfg["fields"], [uri], cfg["template_id"],
+                self.qualify, column=col, errors=errors,
+            )
 
         all_rows: list[dict] = []
-        if tasks:
-            def one(task):
-                uri, col = task
-                return DYN.run_config_per_asset(
-                    self.spark, cfg["fields"], [uri], cfg["template_id"],
-                    self.qualify, column=col, errors=kw.get("_errors"),
-                )
-
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                for rows in pool.map(one, tasks):
-                    all_rows.extend(rows)
-
-        out = DYN.raw_rows_to_df(self.spark, all_rows)
-        for part in fused_parts:
-            out = out.unionByName(part)
-        return out
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            for rows in pool.map(one, tasks):
+                all_rows.extend(rows)
+        return DYN.raw_rows_to_df(self.spark, all_rows)
 
     def _discover_columns(
-        self, cfg: dict, matched: DataFrame, uris: list[str]
+        self, cfg: dict, matched: DataFrame, uris: list[str], errors: list | None = None
     ) -> dict[str, list[str]]:
         """uri -> ordered column list from ``included_columns_query``.
 
@@ -471,7 +437,9 @@ class TagEngine:
         - ``constant`` (no substitution variables): asset-independent —
           evaluated once, shared by every asset.
         - ``opaque``: arbitrary per-asset user SQL; thread-pooled, the
-          reference's per-asset semantics (the measured fallback).
+          reference's per-asset semantics (the measured fallback). An
+          asset whose query fails is left out and recorded in ``errors``
+          (raised when ``errors`` is None), like ``run_config_per_asset``.
 
         Every regime reads ALL rows x cells of the query result —
         reference DataCatalogController.py:380-384 (a first-row-only
@@ -503,12 +471,17 @@ class TagEngine:
 
         def discover(uri):
             cols_q = parse_query_expression(uri, query, None, self.qualify)
-            return uri, [
-                c for row in self.spark.sql(cols_q).collect() for c in row if c
-            ]
+            try:
+                rows = self.spark.sql(cols_q).collect()
+            except Exception as ex:
+                if errors is None:
+                    raise
+                errors.append((uri, f"{type(ex).__name__}: {ex}"))
+                return uri, None
+            return uri, [c for row in rows for c in row if c]
 
         with ThreadPoolExecutor(max_workers=8) as pool:
-            return dict(pool.map(discover, uris))
+            return {uri: cols for uri, cols in pool.map(discover, uris) if cols is not None}
 
     def _run_static(self, cfg, assets, **kw):
         """Static tags = matched assets x config fields, entirely as a

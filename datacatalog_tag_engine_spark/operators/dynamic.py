@@ -3,25 +3,27 @@
 The reference evaluates one SQL statement per (asset, field) in BigQuery
 (reference: apply_dynamic_table_config, DataCatalogController.py:250-330)
 and only fuses per-column field queries into a single multi-subquery
-statement (combine_queries, :488-495). Two executors here:
+statement (combine_queries, :488-495). Two executors here; the engine
+picks one from the config's shape alone, never from its asset count:
 
-* ``run_config_per_asset`` — semantics-exact path. For each matched
-  asset, ALL field expressions are fused into one single-row SELECT
-  (generalizing the reference's column-path fusion to every config) and
-  run as one Spark job; richtext fields run separately because they
-  collect all result rows (reference run_query :1797-1806
-  first-row-wins vs richtext-collect).
+* ``run_config_per_asset`` — the semantics-exact path, for every config
+  that names no ``inventory_view`` and for every (asset, column) pair of
+  a column config. For each asset, ALL scalar field expressions fuse
+  into one single-row SELECT (the reference's column-path fusion,
+  applied to every config) and run as one Spark job; assets run as
+  concurrent jobs, and a failing asset is recorded, not fatal. Richtext
+  fields run separately because they collect all result rows (reference
+  run_query :1797-1806 first-row-wins vs richtext-collect).
 
-* ``run_config_fused`` — the scale path (SURVEY R9). When every field
-  expression belongs to the profiling family the reference's own load
-  tests use (examples/load/configs/dynamic_table_500.json) —
-  ``select AGG from $table [where PRED]`` and the nested
-  avg-of-daily-counts form — the expressions compile to aggregate
-  columns with FILTER clauses over ONE union-of-scans DataFrame, and
-  every asset x every field is computed in a single groupBy(asset)
-  pass: one shuffle total instead of O(assets x fields) statements.
-  Catalyst pushes the union's column pruning into each scan and AQE
-  sizes the post-shuffle partitions.
+* ``run_config_fused`` — the scale path (SURVEY R9), for configs that
+  name an ``inventory_view``: ONE DataFrame holding every matched
+  asset's rows keyed by ``asset_uri``. Every field expression must
+  belong to the profiling family the reference's own load tests use
+  (examples/load/configs/dynamic_table_500.json) — ``select AGG from
+  $table [where PRED]``, the nested avg-of-daily-counts form, or a
+  constant. They compile to aggregate columns with FILTER clauses, and
+  every asset x every field is computed in one groupBy(asset) pass over
+  a plan with a single scan leaf, whatever the asset count.
 """
 
 from __future__ import annotations
@@ -190,12 +192,14 @@ _DAILY_RE = re.compile(
     r"^\s*select\s+(?P<outer>.+?)\s+from\s+\(\s*select\s+(?P<day>.+?)\s+(?:as\s+)?(?P<dayalias>\w+)\s*,\s*count\(\*\)\s+(?:as\s+)?(?P<cntalias>\w+)\s+from\s+\$table\s*(?:where\s+(?P<pred>.+?))?\s+group\s+by\s+(?P<grp>\w+)\s*\)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+# clauses after a WHERE that a FILTER (WHERE ...) aggregate cannot carry
+_TRAILING_CLAUSE_RE = re.compile(r"\b(?:group\s+by|order\s+by|having|limit)\b", re.IGNORECASE)
 
 
 def classify_expression(query_expression: str) -> tuple[str, dict]:
     """Classify one field expression into a fusable family:
     'constant' (no $table), 'simple' (agg [+ filter]), 'daily'
-    (avg-of-daily-counts), or 'opaque' (fall back to per-asset)."""
+    (avg-of-daily-counts), or 'opaque' (not fusable)."""
     if "$table" not in query_expression:
         return "constant", {"sql": query_expression}
     m = _DAILY_RE.match(query_expression)
@@ -208,7 +212,11 @@ def classify_expression(query_expression: str) -> tuple[str, dict]:
             "pred": m.group("pred"),
         }
     m = _SIMPLE_RE.match(query_expression)
-    if m and " from " not in m.group("agg").lower():
+    if (
+        m
+        and " from " not in m.group("agg").lower()
+        and not (m.group("pred") and _TRAILING_CLAUSE_RE.search(m.group("pred")))
+    ):
         return "simple", {"agg": m.group("agg"), "pred": m.group("pred")}
     return "opaque", {}
 
@@ -224,40 +232,30 @@ def fusable(fields: list[dict]) -> bool:
 def run_config_fused_wide(
     spark: SparkSession,
     fields: list[dict],
-    assets: list[tuple[str, DataFrame]] | DataFrame,
+    inventory: DataFrame,
 ) -> DataFrame:
     """The R9 plan, wide shape: one groupBy(asset) pass, one
     naturally-typed column per field.
 
-    ``assets`` — the scale form is ONE DataFrame carrying an
-    ``asset_uri`` column (a single scan of a partitioned inventory:
-    e.g. ``spark.read.parquet(*paths)`` with a path-derived uri, or a
-    table partitioned by asset). The plan then has exactly one leaf no
-    matter how many assets the inventory holds — this is what survives
-    the reference's 500k/1M-asset load ladder
+    ``inventory`` is ONE DataFrame carrying an ``asset_uri`` column (a
+    single scan of a partitioned inventory: e.g.
+    ``spark.read.parquet(*paths)`` with a path-derived uri, or a table
+    partitioned by asset). The plan has exactly one leaf no matter how
+    many assets the inventory holds — this is what survives the
+    reference's 500k/1M-asset load ladder
     (examples/load/configs/dynamic_table_500k.json), where a
     union-of-N-scans logical plan dies in driver analysis long before
     execution.
 
-    The list form [(asset_uri, scan DataFrame)] remains as a small-N
-    convenience (per-asset temp views / heterogeneous sources) and
-    builds the union internally; scans must be union-compatible on the
-    referenced columns. Simple aggregates compile to FILTER-clause
-    aggregate columns; nested avg-of-daily forms run as a two-level
-    groupBy joined back on the asset key; constants evaluate once and
-    broadcast as literals.
+    Simple aggregates compile to FILTER-clause aggregate columns;
+    nested avg-of-daily forms run as a two-level groupBy joined back on
+    the asset key; constants evaluate once and broadcast as literals.
     """
     classified = [(f, *classify_expression(f["query_expression"])) for f in fields]
 
-    if isinstance(assets, DataFrame):
-        union = assets.withColumnRenamed("asset_uri", "_asset_uri")
-        if "_asset_uri" not in union.columns:
-            raise ValueError("inventory DataFrame needs an asset_uri column")
-    else:
-        union = None
-        for uri, df in assets:
-            tagged = df.withColumn("_asset_uri", F.lit(uri))
-            union = tagged if union is None else union.unionByName(tagged)
+    inv = inventory.withColumnRenamed("asset_uri", "_asset_uri")
+    if "_asset_uri" not in inv.columns:
+        raise ValueError("inventory DataFrame needs an asset_uri column")
 
     simple_aggs = []
     for f, kind, info in classified:
@@ -269,7 +267,7 @@ def run_config_fused_wide(
 
     parts: list[DataFrame] = []
     if simple_aggs:
-        parts.append(union.groupBy("_asset_uri").agg(*simple_aggs))
+        parts.append(inv.groupBy("_asset_uri").agg(*simple_aggs))
 
     # daily (avg-of-daily-counts) fields FUSE per day expression: one
     # two-level aggregation computes every field sharing a day key, with
@@ -298,7 +296,7 @@ def run_config_fused_wide(
                 rf"\b{re.escape(info['cntalias'])}\b", f"nullif({cnt}, 0)", info["outer"]
             )
             outer_aggs.append(F.expr(outer_sql).alias(f["field_id"]))
-        daily = union.groupBy("_asset_uri", F.expr(day_expr).alias("_day")).agg(*cnt_aggs)
+        daily = inv.groupBy("_asset_uri", F.expr(day_expr).alias("_day")).agg(*cnt_aggs)
         # re-expose the day under each member's alias in case the outer
         # expression references it (distinct aliases only)
         for alias in {info["dayalias"] for _, info in members} - {"_day"}:
@@ -308,7 +306,7 @@ def run_config_fused_wide(
     constants = [(f, info) for f, kind, info in classified if kind == "constant"]
     if not parts and constants:
         # constants-only config still needs the asset list — one pruned scan
-        parts.append(union.select("_asset_uri").distinct())
+        parts.append(inv.select("_asset_uri").distinct())
 
     result = parts[0]
     for p in parts[1:]:
@@ -320,83 +318,17 @@ def run_config_fused_wide(
     return result
 
 
-def run_column_config_fused(
-    spark: SparkSession,
-    fields: list[dict],
-    asset_uri: str,
-    scan: DataFrame,
-    columns: list[str],
-    template_id: str,
-) -> DataFrame:
-    """R9 applied to the COLUMN path: every (column, field) cell of a
-    dynamic-column config computed in ONE aggregation pass over the
-    asset scan.
-
-    The reference fuses one statement per column (combine_queries,
-    DataCatalogController.py:488-495) — still O(columns) statements per
-    asset. Here each field expression is classified like the table path
-    and its ``$column`` placeholder is expanded per column into parallel
-    aggregate expressions: a 100-column profile is one job, one scan,
-    one shuffle of partial aggregates. Falls back (ValueError) on
-    opaque expressions — callers use the per-asset path then.
-
-    Returns raw long rows (asset_uri, column, template_id, field_id,
-    field_type, raw_value).
-    """
-    aggs = []
-    cells = []  # (column, field_id) in agg order
-    for f in fields:
-        kind, info = classify_expression(f["query_expression"].replace("$column", "__COL__"))
-        if kind not in ("simple", "constant"):
-            raise ValueError(f"not column-fusable: {f['query_expression']!r}")
-        for col in columns:
-            if kind == "constant":
-                # classification is case-insensitive, so the SELECT strip
-                # must be too ("SELECT 'X'" would otherwise reach F.expr
-                # with the keyword attached and fail to parse)
-                expr_sql = re.sub(
-                    r"(?is)^\s*select\s+", "", info["sql"], count=1
-                ).replace("__COL__", f"`{col}`")
-            else:
-                expr_sql = info["agg"].replace("__COL__", f"`{col}`")
-                if info.get("pred"):
-                    pred = info["pred"].replace("__COL__", f"`{col}`")
-                    expr_sql = f"{expr_sql} FILTER (WHERE {pred})"
-            aggs.append(F.expr(expr_sql).cast("string").alias(f"_c{len(aggs)}"))
-            cells.append((col, f["field_id"]))
-
-    row = scan.agg(*aggs)
-    stack_cols = []
-    for i, (col, fid) in enumerate(cells):
-        stack_cols.extend([F.lit(col), F.lit(fid), F.col(f"_c{i}")])
-    long_df = row.select(
-        F.stack(F.lit(len(cells)), *stack_cols).alias("column", "field_id", "raw_value")
-    )
-    type_map = F.create_map(
-        *[F.lit(x) for f in fields for x in (f["field_id"], f["field_type"])]
-    )
-    return long_df.select(
-        F.lit(asset_uri).alias("asset_uri"),
-        "column",
-        F.lit(template_id).alias("template_id"),
-        "field_id",
-        type_map[F.col("field_id")].alias("field_type"),
-        "raw_value",
-    )
-
-
 def run_config_fused(
     spark: SparkSession,
     fields: list[dict],
-    assets: list[tuple[str, DataFrame]] | DataFrame,
+    inventory: DataFrame,
     template_id: str,
 ) -> DataFrame:
     """R9 plan, long shape: the wide result stacked into raw long rows
     (asset_uri, column, template_id, field_id, field_type, raw_value)
-    for the coercion/MERGE path. ``assets`` as in
-    ``run_config_fused_wide`` (single inventory DataFrame = the scale
-    form)."""
-    result = run_config_fused_wide(spark, fields, assets)
+    for the coercion/MERGE path. ``inventory`` as in
+    ``run_config_fused_wide``."""
+    result = run_config_fused_wide(spark, fields, inventory)
 
     field_meta = {f["field_id"]: f["field_type"] for f in fields}
     stack_cols = []

@@ -1,5 +1,6 @@
 """Dynamic-tag executor tests: per-asset (semantics-exact) and fused
-(R9 single-pass) paths agree with each other and with direct SQL."""
+(R9 single-pass over an inventory) paths agree with each other and with
+direct SQL."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -73,45 +74,48 @@ def test_per_asset_path(spark, expected):
 
 def test_fused_path_matches(spark, expected):
     assert D.fusable(FIELDS)
-    raw_df = D.run_config_fused(
-        spark, FIELDS, [(URI, spark.table("lineitem"))], "data_governance"
-    )
+    inv = spark.table("lineitem").withColumn("asset_uri", F.lit(URI))
+    raw_df = D.run_config_fused(spark, FIELDS, inv, "data_governance")
     rows = D.coerce_long_rows(raw_df).collect()
     assert to_map(rows) == expected
 
 
 def test_fused_multi_asset(spark):
-    fields = [FIELDS[0]]
-    assets = [
-        ("p/datasets/d/tables/lineitem", spark.table("lineitem")),
-        ("p/datasets/d/tables/lineitem2", spark.table("lineitem")),
-    ]
-    raw_df = D.run_config_fused(spark, fields, assets, "t")
+    li = spark.table("lineitem")
+    uris = ["p/datasets/d/tables/lineitem", "p/datasets/d/tables/lineitem2"]
+    inv = li.withColumn("asset_uri", F.lit(uris[0])).unionByName(
+        li.withColumn("asset_uri", F.lit(uris[1]))
+    )
+    raw_df = D.run_config_fused(spark, [FIELDS[0]], inv, "t")
     got = {r["asset_uri"]: r["raw_value"] for r in raw_df.collect()}
-    n = spark.table("lineitem").count()
-    assert got == {
-        "p/datasets/d/tables/lineitem": str(n),
-        "p/datasets/d/tables/lineitem2": str(n),
-    }
+    n = li.count()
+    assert got == {uris[0]: str(n), uris[1]: str(n)}
 
 
-def test_fused_inventory_form_matches_list_form(spark):
-    """The scale form (ONE DataFrame with an asset_uri column) computes
-    the same raw rows as the small-N union-of-scans list form."""
+def test_fused_inventory_form_matches_per_asset(spark):
+    """The two executors agree: the fused plan over ONE inventory
+    DataFrame with an asset_uri column gives the same typed tags as the
+    per-asset statements over the same three clones, each registered as
+    its own view."""
     li = spark.table("lineitem")
     blk = F.pmod(F.hash("l_orderkey"), F.lit(3))
     inv = li.withColumn(
         "asset_uri", F.format_string("p/datasets/d/tables/clone_%d", blk)
     )
-    raw_inv = D.run_config_fused(spark, FIELDS, inv, "t")
-    assets = [
-        (f"p/datasets/d/tables/clone_{i}", li.filter(blk == i)) for i in range(3)
-    ]
-    raw_list = D.run_config_fused(spark, FIELDS, assets, "t")
-    got_inv = {(r["asset_uri"], r["field_id"]): r["raw_value"] for r in raw_inv.collect()}
-    got_list = {(r["asset_uri"], r["field_id"]): r["raw_value"] for r in raw_list.collect()}
-    assert got_inv == got_list
-    assert len(got_inv) == 3 * len(FIELDS)
+    uris = [f"p/datasets/d/tables/clone_{i}" for i in range(3)]
+    for i in range(3):
+        li.filter(blk == i).createOrReplaceTempView(f"clone_{i}")
+
+    def by_asset(raw_df):
+        rows = D.coerce_long_rows(raw_df).collect()
+        return {u: to_map([r for r in rows if r["asset_uri"] == u]) for u in uris}
+
+    fused = by_asset(D.run_config_fused(spark, FIELDS, inv, "t"))
+    per_asset = by_asset(
+        D.raw_rows_to_df(spark, D.run_config_per_asset(spark, FIELDS, uris, "t", short_name))
+    )
+    assert fused == per_asset
+    assert all(len(fields) == len(FIELDS) for fields in fused.values())
 
 
 def test_fused_inventory_requires_asset_uri(spark):
@@ -130,37 +134,10 @@ def test_classify():
         == "daily"
     )
     assert D.classify_expression("select x from $table join y on 1=1")[0] == "opaque"
-
-
-def test_column_fused_matches_per_column(spark):
-    fields = [
-        {"field_id": "distinct_values", "field_type": "double",
-         "query_expression": "select count(distinct $column) from $table"},
-        {"field_id": "open_values", "field_type": "double",
-         "query_expression": "select count(distinct $column) from $table where l_linestatus = 'O'"},
-    ]
-    columns = ["l_orderkey", "l_partkey", "l_returnflag"]
-    fused = D.run_column_config_fused(
-        spark, fields, URI, spark.table("lineitem"), columns, "t"
-    )
-    got = {(r["column"], r["field_id"]): r["raw_value"] for r in fused.collect()}
-    assert len(got) == 6
-    for col in columns:
-        rows = D.run_config_per_asset(spark, fields, [URI], "t", short_name, column=col)
-        for r in rows:
-            assert got[(col, r["field_id"])] == r["raw_value"], (col, r["field_id"])
-
-
-def test_column_fused_rejects_opaque(spark):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not column-fusable"):
-        D.run_column_config_fused(
-            spark,
-            [{"field_id": "x", "field_type": "double",
-              "query_expression": "select a from $table join b on 1=1"}],
-            URI, spark.table("lineitem"), ["l_orderkey"], "t",
-        )
+    # a clause after the predicate cannot ride a FILTER (WHERE ...) aggregate
+    for tail in ("group by b", "order by x limit 1", "group by b having count(*) > 1", "limit 5"):
+        expr = f"select count(*) from $table where a=1 {tail}"
+        assert D.classify_expression(expr)[0] == "opaque", expr
 
 
 def test_richtext_collects_all_rows(spark):

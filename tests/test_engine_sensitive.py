@@ -188,6 +188,27 @@ def test_per_asset_error_capture(spark, engine, assets):
     assert "TABLE_OR_VIEW_NOT_FOUND" in msg or "missing_table" in msg
 
 
+def test_column_discovery_error_capture(spark, engine, assets):
+    # an opaque included_columns_query runs per asset: the asset whose
+    # query fails is recorded, the others are still discovered and tagged
+    cfg = engine.create_config(
+        "DYNAMIC_TAG_COLUMN", "data_sensitivity",
+        included_uris="bigquery/project/p/dataset/d/lineitem, bigquery/project/p/dataset/d/missing_table",
+        included_columns_query="select 'l_orderkey' from $table limit 1",
+        fields=[{"field_id": "row_count", "query_expression": "select count(distinct $column) from $table"}],
+    )
+    job = engine.trigger_job(cfg, assets)
+    jobs = {j["job_uuid"]: j for j in engine.jobs}
+    assert jobs[job]["job_status"] == "ERROR"
+    assert jobs[job]["tasks_failed"] == 1
+    assert jobs[job]["tasks_success"] == 1
+    tags = {(r["asset_uri"], r["column"]) for r in engine.store.all().collect()}
+    assert tags == {("p/datasets/d/tables/lineitem", "l_orderkey")}
+    (bad_uri, msg), = engine.job_errors[job]
+    assert bad_uri.endswith("missing_table")
+    assert "TABLE_OR_VIEW_NOT_FOUND" in msg or "missing_table" in msg
+
+
 def test_export_reports(spark, engine, assets, tmp_path):
     cfg = engine.create_config(
         "STATIC_TAG_ASSET", "data_sensitivity",

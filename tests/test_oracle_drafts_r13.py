@@ -1265,72 +1265,9 @@ def test_recall_from_index_after_delete_stays_measurable(spark, tmp_path):
 # --- q102: sigstore ingest replay (the streaming daily-dedup loop) ---------------
 
 
-def sigstore_replay_sql(n_batches: int = 3, threshold: float = 0.5) -> str:
-    """The d19 sigs/buckets derivation UNROLLED over sequential crawl
-    drops — the relational form of the continuous signature-store
-    ingest loop: residents are doc_id % 4 = 0, drop b (0-based) is
-    doc_id % 4 = b+1, and each stage's pair adjudication runs against
-    the store AS GROWN by the earlier stages' survivors (store_b =
-    residents + acc_0..b-1). Per stage, the loser rule is the stream's
-    exactly: a batch doc in any cross pair (one side resident) loses;
-    the larger id of a within-batch pair loses. Signatures are
-    doc-local, so one sigs/buckets CTE serves every stage."""
-    sig_exprs = ",\n         ".join(
-        f"min(md5('{j}:' || shingle)) AS sig_{j}" for j in range(8)
-    )
-    band_cases = " ".join(
-        f"WHEN {b} THEN md5(sig_{2*b} || '|' || sig_{2*b+1})" for b in range(4)
-    )
-    agree = " + ".join(f"(sa.sig_{j} = sb.sig_{j})::INT" for j in range(8))
-    stages = []
-    for b in range(n_batches):
-        g = b + 1
-        stages.append(f"""
-p{b} AS (
-  SELECT DISTINCT least(a.doc_id, b.doc_id) AS da, greatest(a.doc_id, b.doc_id) AS db
-  FROM buckets a JOIN buckets b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id <> b.doc_id
-  WHERE a.grp = {g}
-    AND (b.grp = {g} OR b.doc_id IN (SELECT doc_id FROM store{b}))),
-e{b} AS (
-  SELECT p.da, p.db,
-         p.da IN (SELECT doc_id FROM store{b}) AS a_res,
-         p.db IN (SELECT doc_id FROM store{b}) AS b_res
-  FROM p{b} p
-  JOIN sigs sa ON sa.doc_id = p.da
-  JOIN sigs sb ON sb.doc_id = p.db
-  WHERE round(({agree}) / 8.0, 4) >= {threshold}),
-lose{b} AS (
-  SELECT db AS doc_id FROM e{b} WHERE NOT a_res AND NOT b_res
-  UNION
-  SELECT CASE WHEN a_res THEN db ELSE da END AS doc_id
-  FROM e{b} WHERE a_res <> b_res),
-acc{b} AS (
-  SELECT doc_id FROM sigs WHERE grp = {g}
-    AND doc_id NOT IN (SELECT doc_id FROM lose{b})),
-store{b + 1} AS (
-  SELECT doc_id FROM store{b} UNION ALL SELECT doc_id FROM acc{b})""")
-    final = "\nUNION ALL\n".join(
-        f"SELECT {b}::INT AS batch, doc_id FROM acc{b}" for b in range(n_batches)
-    )
-    return f"""
-WITH toks AS (SELECT doc_id, (doc_id % 4)::INT AS grp,
-                     regexp_split_to_array(text, '\\s+') w FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, grp,
-         unnest(CASE WHEN len(w) >= 3
-                THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
-                ELSE [array_to_string(w, ' ')] END) AS shingle
-  FROM toks),
-sigs AS (
-  SELECT doc_id, any_value(grp) AS grp, {sig_exprs}
-  FROM sh GROUP BY doc_id),
-buckets AS (
-  SELECT doc_id, grp, band, CASE band {band_cases} END AS bucket
-  FROM sigs, (SELECT unnest(range(4)) AS band)),
-store0 AS (SELECT doc_id FROM sigs WHERE grp = 0),{",".join(stages)}
-{final}
-"""
+# q102's wired oracle since the r13 rotation (one copy; its MATERIALIZED
+# hints keep DuckDB from re-deriving each stage once per reference)
+sigstore_replay_sql = E.sigstore_replay_sql
 
 
 def test_oracle_draft_sigstore_replay(spark, ddb, tmp_path):

@@ -79,3 +79,52 @@ def test_save_load_roundtrip_with_templateless_configs(spark, tmp_path):
     job = restored.trigger_job(entry_cfg, None)
     assert next(j for j in restored.jobs if j["job_uuid"] == job)["job_status"] == "SUCCESS"
     assert restored.assets.count() == 1
+
+
+def test_config_with_retired_executor_knobs_loads_and_runs(spark, tmp_path):
+    # snapshots written while the engine had the fuse_threshold and
+    # fuse_columns knobs carry them in their configs: the keys are
+    # ignored, and the jobs still tag every asset and column
+    from pyspark.sql import functions as F
+
+    li = spark.table("lineitem")
+    li.limit(100).createOrReplaceTempView("lineitem_head")
+    eng = TagEngine(spark)
+    eng.create_template("t", [{"field_id": "n", "field_type": "double"}])
+    table_cfg = eng.create_config(
+        "DYNAMIC_TAG_TABLE", "t",
+        included_uris="bigquery/project/p/dataset/d/*",
+        fields=[{"field_id": "n", "query_expression": "select count(*) from $table"}],
+        fuse_threshold=1,
+    )
+    column_cfg = eng.create_config(
+        "DYNAMIC_TAG_COLUMN", "t",
+        included_uris="bigquery/project/p/dataset/d/lineitem",
+        included_columns_query="select 'l_orderkey', 'l_returnflag'",
+        fields=[{"field_id": "n", "query_expression": "select count(distinct $column) from $table"}],
+        fuse_columns=True,
+    )
+    base = str(tmp_path / "state")
+    eng.save_state(base)
+
+    loaded = TagEngine.load_state(spark, base)
+    assert loaded.configs[table_cfg]["fuse_threshold"] == 1
+    assets = spark.createDataFrame(
+        [{"asset_uri": f"p/datasets/d/tables/{t}", "asset_type": "bigquery",
+          "project": "p", "dataset": "d", "table": t} for t in ("lineitem", "lineitem_head")],
+        ASSETS_SCHEMA,
+    )
+    for cfg in (table_cfg, column_cfg):
+        job = loaded.trigger_job(cfg, assets)
+        assert next(j for j in loaded.jobs if j["job_uuid"] == job)["job_status"] == "SUCCESS"
+
+    expected = {
+        ("p/datasets/d/tables/lineitem", None): float(li.count()),
+        ("p/datasets/d/tables/lineitem_head", None): 100.0,
+        **{
+            ("p/datasets/d/tables/lineitem", c): float(li.select(F.countDistinct(c)).first()[0])
+            for c in ("l_orderkey", "l_returnflag")
+        },
+    }
+    got = {(r["asset_uri"], r["column"]): r["field_value_double"] for r in loaded.store.all().collect()}
+    assert got == expected

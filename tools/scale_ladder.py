@@ -1,17 +1,18 @@
 """Asset-count scale ladder (SURVEY.md section 5.iv): the reference
 load-tests 500 -> 1M assets (examples/load/configs/); this replays the
 same shape locally — N schema-identical assets, the 11-expression
-profile — on both execution paths and prints seconds per rung.
+profile — on the engine's two dynamic-tag executors and prints seconds
+per rung.
 
 The point being demonstrated: per-asset cost grows with ASSET COUNT
-(one Spark job each — driver scheduling bound), fused-union cost grows
-with PLAN SIZE (N scan leaves — driver analysis bound, the cliff at
->= ~10k assets), and fused-inventory cost grows with DATA SIZE only:
-one scan leaf regardless of N, the only shape that reaches the
-reference's 500k/1M-asset ladder.
+(one Spark job per asset, each a full scan of its clone — driver
+scheduling bound), while fused-inventory cost grows with DATA SIZE
+only: one scan leaf regardless of N, the same total rows split across
+the N assets, the only shape that reaches the reference's
+500k/1M-asset ladder.
 
-Per-mode caps keep the ladder runnable: per-asset stops at 200 rungs,
-fused-union at 2000; fused-inventory runs every rung.
+Per-asset stops at 256 assets to keep the ladder runnable;
+fused-inventory runs every rung.
 
 `--static` instead runs the STATIC_TAG_ASSET ladder (the reference's
 flagship load shape, examples/load/configs/static_asset_1m.json: N
@@ -329,7 +330,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    print(f"{'assets':>8} {'fused-inv(s)':>13} {'fused-union(s)':>15} {'per-asset(s)':>14}")
+    print(f"{'assets':>8} {'fused-inv(s)':>13} {'per-asset(s)':>14}")
     for n in rungs:
         uris = [f"p/datasets/d/tables/clone_{i:04d}" for i in range(n)]
 
@@ -345,23 +346,15 @@ def main() -> None:
         ).format("noop").save()
         fused_inv = time.time() - t0
 
-        fused = float("nan")
-        if n <= 2000:
-            t0 = time.time()
-            DYN.run_config_fused(
-                spark, E.FUSED_FIELDS, [(u, li) for u in uris], "t"
-            ).write.mode("overwrite").format("noop").save()
-            fused = time.time() - t0
-
         per_asset = float("nan")
-        if n <= 200:
+        if n <= 256:
             t0 = time.time()
             DYN.run_config_per_asset(
                 spark, E.FUSED_FIELDS, uris, "t", qualify=lambda p, d, t: "lineitem", max_workers=8
             )
             per_asset = time.time() - t0
 
-        print(f"{n:>8} {fused_inv:>13.2f} {fused:>15.2f} {per_asset:>14.2f}")
+        print(f"{n:>8} {fused_inv:>13.2f} {per_asset:>14.2f}")
 
 
 if __name__ == "__main__":
