@@ -544,10 +544,11 @@ def q26_tag_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"field_id": "domain", "field_value": "OPS"}],
     )
     eng.trigger_job(cfg, assets)
-    # fused copy+update: one MERGE applies the copy and the subset
-    # overwrite (same final state as the sequential route pair)
-    eng.copy_and_update_tags(
-        "p/datasets/d/tables/src", "p/datasets/d/tables/dst", "t",
+    # the reference's /copy_tags then /update_tag route pair on the
+    # same target
+    eng.copy_tags("p/datasets/d/tables/src", "p/datasets/d/tables/dst")
+    eng.update_tag_subset(
+        "t", "p/datasets/d/tables/dst", None,
         [{"field_id": "owner", "field_type": "string", "raw_value": "bob"}],
     )
     return eng.store.all().select("asset_uri", "field_id", "field_value_string")
@@ -781,13 +782,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             {"field_id": "non_null_values", "field_type": "double",
              "query_expression": "select count($column) from $table"},
         ]
-        rows = [
-            r
-            for c in ("l_orderkey", "l_returnflag", "l_shipdate")
-            for r in DYN.run_config_per_asset(
-                spark, fields, [LINEITEM_URI], "profile", _short, column=c
-            )
-        ]
+        tasks = [(LINEITEM_URI, c) for c in ("l_orderkey", "l_returnflag", "l_shipdate")]
+        rows = DYN.run_config_per_asset(spark, fields, tasks, "profile", _short)
         return DYN.coerce_long_rows(DYN.raw_rows_to_df(spark, rows)).select(
             "asset_uri", "column", "field_id", "field_value_double"
         )

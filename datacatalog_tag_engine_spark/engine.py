@@ -384,22 +384,21 @@ class TagEngine:
             ).select("asset_uri")
             inv = self.spark.table(inv_view).join(matched, "asset_uri", "left_semi")
             return DYN.run_config_fused(self.spark, cfg["fields"], inv, cfg["template_id"])
+        tasks = [(uri, None) for uri in self._matched_uris(cfg, assets)]
         rows = DYN.run_config_per_asset(
-            self.spark, cfg["fields"], self._matched_uris(cfg, assets),
-            cfg["template_id"], self.qualify, errors=kw.get("_errors"),
+            self.spark, cfg["fields"], tasks, cfg["template_id"], self.qualify,
+            errors=kw.get("_errors"),
         )
         return DYN.raw_rows_to_df(self.spark, rows)
 
     def _run_dynamic_column(self, cfg, assets, **kw):
-        """Thread-pooled per-(asset, column) statements, each fusing the
-        config's fields like the reference's combine_queries. One
-        aggregation pass over all columns was measured slower on
-        count-distinct profiles (the multi-distinct Expand multiplies
-        scan rows by #aggregates; see SCALE.md), so it is not offered.
-        An asset whose column discovery or evaluation fails is recorded
-        in the job's errors; the other assets proceed."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        """One per-asset run over every discovered (asset, column) pair,
+        each statement fusing the config's fields like the reference's
+        combine_queries. One aggregation pass over all columns was
+        measured slower on count-distinct profiles (the multi-distinct
+        Expand multiplies scan rows by #aggregates; see SCALE.md), so it
+        is not offered. A failing column discovery or evaluation is
+        recorded in the job's errors; the other tasks proceed."""
         matched = URI.expand_included_excluded(
             assets, cfg["included_uris"], cfg.get("excluded_uris")
         )
@@ -407,19 +406,10 @@ class TagEngine:
         errors = kw.get("_errors")
         discovered = self._discover_columns(cfg, matched, uris, errors)
         tasks = [(uri, col) for uri, columns in discovered.items() for col in columns]
-
-        def one(task):
-            uri, col = task
-            return DYN.run_config_per_asset(
-                self.spark, cfg["fields"], [uri], cfg["template_id"],
-                self.qualify, column=col, errors=errors,
-            )
-
-        all_rows: list[dict] = []
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            for rows in pool.map(one, tasks):
-                all_rows.extend(rows)
-        return DYN.raw_rows_to_df(self.spark, all_rows)
+        rows = DYN.run_config_per_asset(
+            self.spark, cfg["fields"], tasks, cfg["template_id"], self.qualify, errors=errors
+        )
+        return DYN.raw_rows_to_df(self.spark, rows)
 
     def _discover_columns(
         self, cfg: dict, matched: DataFrame, uris: list[str], errors: list | None = None
@@ -436,17 +426,15 @@ class TagEngine:
           the execution loop already iterates.
         - ``constant`` (no substitution variables): asset-independent —
           evaluated once, shared by every asset.
-        - ``opaque``: arbitrary per-asset user SQL; thread-pooled, the
-          reference's per-asset semantics (the measured fallback). An
-          asset whose query fails is left out and recorded in ``errors``
-          (raised when ``errors`` is None), like ``run_config_per_asset``.
+        - ``opaque``: arbitrary per-asset user SQL, run through
+          ``DYN.run_tasks`` with the reference's per-asset semantics (the
+          measured fallback). An asset whose query fails is left out and
+          recorded in ``errors`` (raised when ``errors`` is None).
 
         Every regime reads ALL rows x cells of the query result —
         reference DataCatalogController.py:380-384 (a first-row-only
         read would see one column of a one-column-per-row query).
         """
-        from concurrent.futures import ThreadPoolExecutor
-
         query = cfg["included_columns_query"]
         kind = DYN.classify_columns_query(query)
         if kind == "schema":
@@ -469,19 +457,12 @@ class TagEngine:
             ]
             return {u: list(cols) for u in uris}
 
-        def discover(uri):
-            cols_q = parse_query_expression(uri, query, None, self.qualify)
-            try:
-                rows = self.spark.sql(cols_q).collect()
-            except Exception as ex:
-                if errors is None:
-                    raise
-                errors.append((uri, f"{type(ex).__name__}: {ex}"))
-                return uri, None
-            return uri, [c for row in rows for c in row if c]
+        def discover(uri, _column):
+            rows = self.spark.sql(parse_query_expression(uri, query, None, self.qualify)).collect()
+            return [c for row in rows for c in row if c]
 
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            return {uri: cols for uri, cols in pool.map(discover, uris) if cols is not None}
+        found = DYN.run_tasks(discover, [(uri, None) for uri in uris], errors)
+        return {uri: cols for uri, cols in zip(uris, found) if cols is not None}
 
     def _run_static(self, cfg, assets, **kw):
         """Static tags = matched assets x config fields, entirely as a
@@ -633,51 +614,6 @@ class TagEngine:
         moved = src.withColumn("asset_uri", F.lit(target_uri))
         job_uuid = self._uuid("copy")
         events = self.store.merge(moved, overwrite=overwrite)
-        return self._append_history(events, job_uuid)
-
-    def copy_and_update_tags(
-        self,
-        source_uri: str,
-        target_uri: str,
-        template_id: str,
-        raw_rows: list[dict],
-        column: str | None = None,
-        overwrite: bool = True,
-    ) -> int:
-        """Fused copy_tags + update_tag_subset (the reference's
-        /copy_tags then /update_tag route pair issued back-to-back on
-        the same target, DataCatalogController.py:1946-2056 +
-        :2091-2178): ONE MERGE applies both, so the store pays one
-        checkpoint + one history append instead of two.
-
-        The incoming batch pre-resolves key collisions (a subset-update
-        field also present in the copied tag): update rows win, exactly
-        what the sequential pair converges to. History differs only in
-        shape — the updated field logs one CREATE-with-final-value
-        instead of CREATE then UPDATE; final state is identical.
-        """
-        from .store.tagstore import TAG_KEY
-
-        src = self.store.all().filter(F.col("asset_uri") == source_uri)
-        moved = src.withColumn("asset_uri", F.lit(target_uri))
-        rows = [
-            {
-                "asset_uri": target_uri,
-                "column": column,
-                "template_id": template_id,
-                "field_id": r["field_id"],
-                "field_type": r["field_type"],
-                "raw_value": r.get("raw_value"),
-            }
-            for r in raw_rows
-        ]
-        upd = DYN.coerce_long_rows(DYN.raw_rows_to_df(self.spark, rows), bool_mode="csv")
-        cond = [moved[k].eqNullSafe(upd[k]) for k in TAG_KEY]
-        merged_in = moved.join(upd, cond, "left_anti").unionByName(
-            upd, allowMissingColumns=True
-        )
-        job_uuid = self._uuid("copyupd")
-        events = self.store.merge(merged_in, overwrite=overwrite)
         return self._append_history(events, job_uuid)
 
     def update_tag_subset(self, template_id: str, asset_uri: str, column: str | None, raw_rows: list[dict]) -> int:

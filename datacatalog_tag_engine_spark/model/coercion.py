@@ -55,12 +55,6 @@ def coerce_string(col: Column) -> Column:
     return col.cast("string")
 
 
-def coerce_richtext(values: Column) -> Column:
-    """Multi-row richtext render: join collected rows with '<br>'
-    (reference: DataCatalogController.py:1880-1884)."""
-    return F.concat_ws("<br>", values)
-
-
 def richtext_import_swap(col: Column) -> Column:
     """On CSV import, ',' separators become '<br>' (reference:
     DataCatalogController.py:1533-1537)."""
@@ -101,22 +95,6 @@ def coerce_enum(col: Column, enum_values: Column) -> Column:
     return F.when(F.array_contains(enum_values, v), v)
 
 
-def typed_value_columns(field_type_col: Column, value_col: Column) -> dict[str, Column]:
-    """Route one stringly-typed value into the tags table's typed value
-    columns according to field_type. Exactly one output is non-null."""
-    ft = field_type_col
-    is_ts = ft.isin("datetime", "timestamp")
-    is_bool = ft == "bool"
-    is_double = ft == "double"
-    is_stringish = ft.isin("string", "enum", "richtext")
-    return {
-        "field_value_string": F.when(is_stringish, coerce_string(value_col)),
-        "field_value_double": F.when(is_double, coerce_double(value_col)),
-        "field_value_bool": F.when(is_bool, coerce_bool_from_string(value_col)),
-        "field_value_ts": F.when(is_ts, coerce_timestamp(value_col)),
-    }
-
-
 def render_tag_value(
     field_type_col: Column,
     string_col: Column,
@@ -124,9 +102,10 @@ def render_tag_value(
     bool_col: Column,
     ts_col: Column,
 ) -> Column:
-    """Inverse of typed_value_columns: render one display string from the
-    typed columns (used by export/report/history writers — reference
-    export stringifies every value, BigQueryUtils.py:263-305)."""
+    """Inverse of the typed routing in ``dynamic.coerce_long_rows``:
+    render one display string from the typed columns (used by
+    export/report/history writers — reference export stringifies every
+    value, BigQueryUtils.py:263-305)."""
     return F.coalesce(
         string_col,
         F.when(field_type_col == "double", double_col.cast("string")),

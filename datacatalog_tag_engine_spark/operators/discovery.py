@@ -7,17 +7,16 @@ The reference lists BigQuery datasets/tables via API calls and infers
 GCS parquet schemas by reading file footers. Here:
 
 * ``discover_catalog_assets`` — the Spark-catalog analogue of the
-  BQ listing (spark.catalog.listTables per database);
+  BQ listing (spark.catalog.listTables per database, temporary views
+  skipped);
 * ``discover_parquet_assets`` — file-based assets: one row per parquet
   file with footer-only schema, num_rows and size_bytes (no data read);
 * entry creation (S15) is just appending these rows to the inventory —
   the file->entry id normalization (F14) is provided for parity.
 
 Footer reads in ``discover_parquet_assets`` are driver-side pyarrow
-calls — fine into the thousands of files.
-``discover_parquet_assets_distributed`` is the cluster form: the path
-list parallelizes and executors parse footers with pyarrow (seek to
-metadata, no data pages) — the shape for millions of files.
+calls that read the footer only, no data pages — fine into the
+thousands of files.
 """
 
 from __future__ import annotations
@@ -79,74 +78,19 @@ def discover_parquet_assets(
     return local_df(spark, rows, ASSETS_SCHEMA)
 
 
-def discover_parquet_assets_distributed(
-    spark: SparkSession,
-    directory: str,
-    project: str = "local",
-    dataset: str | None = None,
-    tasks: int = 64,
-) -> DataFrame:
-    """Cluster form of ``discover_parquet_assets`` (the S4 scale path):
-    the file list — a cheap object-store LIST — parallelizes into path
-    batches, and each executor opens its files with pyarrow and parses
-    ONLY the footer (pyarrow seeks to the metadata; no data pages are
-    read). At millions of files this is the difference between a
-    driver-side loop and a short cluster job; the driver never touches
-    file contents. Output rows are identical to the driver-side form.
-    """
-    import glob as globmod
-
-    dataset = dataset or os.path.basename(os.path.normpath(directory))
-    paths = sorted(globmod.glob(os.path.join(directory, "*.parquet")))
-    if not paths:
-        return spark.createDataFrame([], ASSETS_SCHEMA)
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        min(len(paths), tasks)
-    )
-
-    def parse_footers(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            out = []
-            for path in b["path"]:
-                meta = pq.ParquetFile(path)
-                stat = os.stat(path)
-                table = entry_id_from_path(os.path.basename(path))
-                ts = datetime.datetime.fromtimestamp(stat.st_mtime, tz=datetime.timezone.utc)
-                out.append(
-                    {
-                        "asset_uri": f"{project}/datasets/{dataset}/tables/{table}",
-                        "asset_type": "fileset",
-                        "project": project,
-                        "dataset": dataset,
-                        "table": table,
-                        "schema": [
-                            {"name": f.name, "type": str(f.type), "mode": "NULLABLE",
-                             "subcolumns": None}
-                            for f in meta.schema_arrow
-                        ],
-                        "num_rows": meta.metadata.num_rows,
-                        "size_bytes": stat.st_size,
-                        "created_ts": ts,
-                        "updated_ts": ts,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return pdf.mapInPandas(parse_footers, ASSETS_SCHEMA)
-
-
 def discover_catalog_assets(spark: SparkSession, project: str = "spark") -> DataFrame:
     """S1: inventory from the Spark catalog (databases x tables) — the
-    engine-native analogue of the reference's BQ project listing."""
+    engine-native analogue of the reference's BQ project listing.
+    ``listTables`` also returns the session's temporary views, which
+    belong to no database; they are skipped."""
     rows = []
     for db in spark.catalog.listDatabases():
         for t in spark.catalog.listTables(db.name):
+            if t.isTemporary:
+                continue
             schema = [
                 {"name": c.name, "type": c.dataType, "mode": "NULLABLE", "subcolumns": None}
-                for c in spark.catalog.listColumns(t.name, db.name)
+                for c in spark.catalog.listColumns(f"`{db.name}`.`{t.name}`")
             ]
             rows.append(
                 {

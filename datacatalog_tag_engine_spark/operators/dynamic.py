@@ -8,12 +8,14 @@ picks one from the config's shape alone, never from its asset count:
 
 * ``run_config_per_asset`` — the semantics-exact path, for every config
   that names no ``inventory_view`` and for every (asset, column) pair of
-  a column config. For each asset, ALL scalar field expressions fuse
-  into one single-row SELECT (the reference's column-path fusion,
-  applied to every config) and run as one Spark job; assets run as
-  concurrent jobs, and a failing asset is recorded, not fatal. Richtext
-  fields run separately because they collect all result rows (reference
-  run_query :1797-1806 first-row-wins vs richtext-collect).
+  a column config. It takes ``(asset_uri, column)`` tasks. For each
+  task, ALL scalar field expressions fuse into one single-row SELECT
+  (the reference's column-path fusion, applied to every config) and run
+  as one Spark job; richtext fields run separately because they collect
+  all result rows (reference run_query :1797-1806 first-row-wins vs
+  richtext-collect). Tasks run through ``run_tasks``, the one per-asset
+  pool: ``POOL_WIDTH`` concurrent jobs, a failing task recorded, not
+  fatal. The engine's per-asset column discovery uses it too.
 
 * ``run_config_fused`` — the scale path (SURVEY R9), for configs that
   name an ``inventory_view``: ONE DataFrame holding every matched
@@ -102,82 +104,81 @@ def _stringify(v) -> str | None:
     return str(v)
 
 
+# concurrent Spark jobs in one per-asset run: the driver-side analogue
+# of the reference's task fan-out (TaskManager.py:234-268)
+POOL_WIDTH = 8
+
+
+def run_tasks(
+    fn: Callable[[str, str | None], object],
+    tasks: list[tuple[str, str | None]],
+    errors: list | None,
+) -> list:
+    """``fn(asset_uri, column)`` for every task, ``POOL_WIDTH`` at a
+    time; results in task order. A failing task does not abort the
+    run: its result is None and ``(asset_uri, message)`` is appended to
+    ``errors``, the message naming the column when the task has one —
+    the reference's per-task error semantics (run_query catches and
+    logs, DataCatalogController.py:1813-1816; task status ERROR,
+    TaskManager.py:143-155). With ``errors`` None the failure raises."""
+
+    def guarded(task):
+        try:
+            return fn(*task)
+        except Exception as ex:
+            if errors is None:
+                raise
+            uri, column = task
+            where = "" if column is None else f"column {column}: "
+            errors.append((uri, f"{where}{type(ex).__name__}: {ex}"))
+            return None
+
+    with ThreadPoolExecutor(max_workers=POOL_WIDTH) as pool:
+        return list(pool.map(guarded, tasks))
+
+
 def run_config_per_asset(
     spark: SparkSession,
     fields: list[dict],
-    asset_uris: list[str],
+    tasks: list[tuple[str, str | None]],
     template_id: str,
     qualify: Callable[[str, str, str], str],
-    column: str | None = None,
-    max_workers: int = 8,
     errors: list | None = None,
 ) -> list[dict]:
-    """Evaluate config fields per asset; returns raw long rows as dicts
-    (feed through ``coerce_long_rows``). Assets run as concurrent Spark
-    jobs (the driver-side analogue of the reference's task fan-out,
-    TaskManager.py:234-268, minus the HTTP hop).
-
-    A failing asset does not abort the run: its error is appended to
-    ``errors`` as (asset_uri, message) and the other assets proceed —
-    the reference's per-task error semantics (run_query catches and
-    logs, DataCatalogController.py:1813-1816; task status ERROR,
-    TaskManager.py:143-155)."""
+    """Evaluate config fields per ``(asset_uri, column)`` task (column
+    None for table-level tags); returns raw long rows as dicts (feed
+    through ``coerce_long_rows``). Tasks run as concurrent Spark jobs
+    through ``run_tasks``, which records a failing task in ``errors``."""
 
     scalar_fields = [f for f in fields if f["field_type"] != "richtext"]
     richtext_fields = [f for f in fields if f["field_type"] == "richtext"]
 
-    def one_asset(uri: str) -> list[dict]:
+    def one_task(uri: str, column: str | None) -> list[dict]:
+        def row(f: dict, raw_value: str | None) -> dict:
+            return {
+                "asset_uri": uri,
+                "column": column,
+                "template_id": template_id,
+                "field_id": f["field_id"],
+                "field_type": f["field_type"],
+                "raw_value": raw_value,
+            }
+
         rows: list[dict] = []
         if scalar_fields:
             exprs = [
                 parse_query_expression(uri, f["query_expression"], column, qualify)
                 for f in scalar_fields
             ]
-            combined = combine_queries(exprs)
-            result = spark.sql(combined).first()
-            for i, f in enumerate(scalar_fields):
-                rows.append(
-                    {
-                        "asset_uri": uri,
-                        "column": column,
-                        "template_id": template_id,
-                        "field_id": f["field_id"],
-                        "field_type": f["field_type"],
-                        "raw_value": _stringify(result[i]),
-                    }
-                )
+            result = spark.sql(combine_queries(exprs)).first()
+            rows += [row(f, _stringify(result[i])) for i, f in enumerate(scalar_fields)]
         for f in richtext_fields:
             q = parse_query_expression(uri, f["query_expression"], column, qualify)
             values = [r[0] for r in spark.sql(q).collect()]
-            rows.append(
-                {
-                    "asset_uri": uri,
-                    "column": column,
-                    "template_id": template_id,
-                    "field_id": f["field_id"],
-                    "field_type": f["field_type"],
-                    "raw_value": "<br>".join(str(v) for v in values) if values else None,
-                }
-            )
+            rows.append(row(f, "<br>".join(str(v) for v in values) if values else None))
         return rows
 
-    def guarded(uri: str) -> list[dict]:
-        try:
-            return one_asset(uri)
-        except Exception as ex:
-            if errors is None:
-                raise
-            errors.append((uri, f"{type(ex).__name__}: {ex}"))
-            return []
-
-    out: list[dict] = []
-    if len(asset_uris) == 1:
-        out.extend(guarded(asset_uris[0]))
-    else:
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            for rows in pool.map(guarded, asset_uris):
-                out.extend(rows)
-    return out
+    return [r for rows in run_tasks(one_task, tasks, errors) for r in rows or ()]
 
 
 # ---------------------------------------------------------------------------

@@ -28,8 +28,6 @@ include-minus-exclude difference is an anti-join on asset_uri.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -146,21 +144,6 @@ def parse_spanner_fqn(fqn: str) -> dict:
         "database": parts[3],
         "table": parts[4],
     }
-
-
-def expand_folder(assets: DataFrame, projects: list[str]) -> DataFrame:
-    """S2 (reference Resources.py:104-128): folder-scoped discovery —
-    the folder resolves to a project list, then every table asset in
-    those projects. One isin filter over the inventory."""
-    return assets.filter(F.col("project").isin(projects) & F.col("table").isNotNull())
-
-
-def glob_to_regex(pattern: str) -> str:
-    """Convert the reference's '*' substring-conjunction pattern into an
-    anchored regex (used where a regex is handier than chained
-    contains, e.g. pushing the filter into SQL)."""
-    parts = [re.escape(p) for p in pattern.split("*")]
-    return "^.*" + ".*".join(parts) + ".*$" if "*" in pattern else "^" + re.escape(pattern) + "$"
 
 
 def table_resource_to_uri(table_resource: str) -> str:

@@ -135,7 +135,6 @@ class TagStore:
             self.set_state(spark.read.parquet(path))
         else:
             self._df = local_df(spark, [], TAGS_SCHEMA)
-            self._known_empty = True
             self._rows = []
 
     def all(self) -> DataFrame:
@@ -146,7 +145,6 @@ class TagStore:
         the driver-resident mirror consistent so the next merge takes
         the right path and classifies UPDATE vs CREATE correctly."""
         self._df = df
-        self._known_empty = False
         probe = df.limit(self.SMALL_STATE_MAX + 1).collect()
         if len(probe) <= self.SMALL_STATE_MAX:
             self._rows = [r.asDict() for r in probe]
@@ -176,7 +174,6 @@ class TagStore:
         if touched is None:
             self._rows = merged
             self._df = self._small_df(merged)
-            self._known_empty = not merged
         else:
             # the slice holds every state row of the batch's assets, so
             # the rest of the state passes through untouched; coalescing
@@ -189,7 +186,6 @@ class TagStore:
                 .coalesce(parts)
                 .localCheckpoint(eager=True)
             )
-            self._known_empty = False
         if self.path:
             self._persist()
 
@@ -241,10 +237,11 @@ class TagStore:
                 existing = [r.asDict() for r in sliced.limit(room + 1).collect()]
             if len(existing) <= room:
                 return self._merge_small(existing, batch, overwrite, delete_when_empty, touched)
+        empty = self._rows == []
         self._rows = None
 
         parallelism = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        if self._known_empty:
+        if empty:
             # first merge onto an empty store (every engine's cold start,
             # and a bulk first load): every row with a value is kept as a
             # CREATE, and no row with a value is in an all-empty tag, so
@@ -267,7 +264,6 @@ class TagStore:
                 .cogroup(inc.groupBy(bucket))
                 .applyInArrow(_merge_bucket(overwrite, delete_when_empty), _BUCKET_SCHEMA)
             )
-        self._known_empty = False
 
         # ONE eager checkpoint materializes new state AND history events
         # together: the checkpoint truncates the self-referential merge

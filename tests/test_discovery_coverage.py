@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from datacatalog_tag_engine_spark.operators.coverage import coverage_report
 from datacatalog_tag_engine_spark.operators.discovery import (
+    discover_catalog_assets,
     discover_parquet_assets,
     entry_id_from_path,
 )
@@ -15,7 +16,7 @@ def test_entry_id_normalization():
     assert entry_id_from_path("a/b/c.snappy") == "a_b_c"
 
 
-def test_discover_parquet_assets(spark, sf_dir):
+def test_discover_parquet_assets(spark, sf_dir, tmp_path):
     assets = discover_parquet_assets(spark, sf_dir, project="local")
     rows = {r["table"]: r for r in assets.collect()}
     assert set(rows) == {
@@ -27,30 +28,25 @@ def test_discover_parquet_assets(spark, sf_dir):
     assert li["size_bytes"] > 0
     assert [c["name"] for c in li["schema"]][:2] == ["l_orderkey", "l_partkey"]
     assert li["asset_uri"] == "local/datasets/sf0.001/tables/lineitem"
-
-
-def test_discover_parquet_assets_distributed_matches_driver(spark, sf_dir):
-    """The executor-side footer parse (S4 scale path) produces exactly
-    the driver-side inventory."""
-    from datacatalog_tag_engine_spark.operators.discovery import (
-        discover_parquet_assets_distributed,
-    )
-
-    drv = discover_parquet_assets(spark, sf_dir, project="local")
-    dist = discover_parquet_assets_distributed(spark, sf_dir, project="local")
-
-    def key(rows):
-        return {
-            r["asset_uri"]: (r["num_rows"], r["size_bytes"],
-                             tuple((c["name"], c["type"]) for c in r["schema"]))
-            for r in rows
-        }
-
-    assert key(dist.collect()) == key(drv.collect())
     # empty directory -> empty inventory, not an error
-    import tempfile
+    assert discover_parquet_assets(spark, str(tmp_path)).count() == 0
 
-    assert discover_parquet_assets_distributed(spark, tempfile.mkdtemp()).count() == 0
+
+def test_discover_catalog_assets_skips_temp_views(spark, tmp_path):
+    """S1: every session here holds temporary views (register_testdata);
+    they belong to no database, so the listing skips them instead of
+    looking their columns up in ``default``."""
+    spark.range(1).createOrReplaceTempView("discovery_tv")
+    spark.sql(f"create database discovery_db location '{tmp_path}'")
+    try:
+        spark.sql("create table discovery_db.owners (id bigint, name string) using parquet")
+        rows = {r["asset_uri"]: r for r in discover_catalog_assets(spark).collect()}
+    finally:
+        spark.sql("drop database discovery_db cascade")
+    owners = rows["spark/datasets/discovery_db/tables/owners"]
+    assert (owners["dataset"], owners["table"]) == ("discovery_db", "owners")
+    assert [(c["name"], c["type"]) for c in owners["schema"]] == [("id", "bigint"), ("name", "string")]
+    assert not any(r["table"] in ("discovery_tv", "lineitem") for r in rows.values())
 
 
 def test_coverage_report(spark, sf_dir):
@@ -115,50 +111,6 @@ def test_copy_tags_and_update_subset(spark):
     }
     assert vals[("p/datasets/d/tables/dst", "owner")] == "bob"
     assert vals[("p/datasets/d/tables/dst", "domain")] == "OPS"
-
-
-def test_copy_and_update_fused_matches_sequential(spark):
-    from datacatalog_tag_engine_spark.engine import TagEngine
-    from datacatalog_tag_engine_spark.model.schemas import ASSETS_SCHEMA
-
-    def build():
-        eng = TagEngine(spark)
-        eng.create_template("t", [
-            {"field_id": "owner", "field_type": "string"},
-            {"field_id": "domain", "field_type": "string"},
-        ])
-        assets = spark.createDataFrame(
-            [{"asset_uri": "p/datasets/d/tables/src", "asset_type": "bigquery",
-              "project": "p", "dataset": "d", "table": "src"}],
-            ASSETS_SCHEMA,
-        )
-        cfg = eng.create_config(
-            "STATIC_TAG_ASSET", "t", included_uris="bigquery/project/p/dataset/d/src",
-            fields=[{"field_id": "owner", "field_value": "alice"},
-                    {"field_id": "domain", "field_value": "OPS"}],
-        )
-        eng.trigger_job(cfg, assets)
-        return eng
-
-    upd = [{"field_id": "owner", "field_type": "string", "raw_value": "bob"}]
-
-    seq = build()
-    seq.copy_tags("p/datasets/d/tables/src", "p/datasets/d/tables/dst")
-    seq.update_tag_subset("t", "p/datasets/d/tables/dst", None, upd)
-
-    fused = build()
-    n = fused.copy_and_update_tags(
-        "p/datasets/d/tables/src", "p/datasets/d/tables/dst", "t", upd)
-    assert n == 2  # one history row per dst field, single append
-
-    def state(eng):
-        return sorted(
-            (r["asset_uri"], r["column"], r["field_id"], r["field_value_string"])
-            for r in eng.store.all().collect()
-        )
-
-    assert state(fused) == state(seq)
-    assert ("p/datasets/d/tables/dst", None, "owner", "bob") in state(fused)
 
 
 def test_coverage_exclusion_keeps_null_table_rows(spark):

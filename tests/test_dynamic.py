@@ -66,7 +66,7 @@ def to_map(rows):
 
 
 def test_per_asset_path(spark, expected):
-    raw = D.run_config_per_asset(spark, FIELDS, [URI], "data_governance", short_name)
+    raw = D.run_config_per_asset(spark, FIELDS, [(URI, None)], "data_governance", short_name)
     rows = D.coerce_long_rows(D.raw_rows_to_df(spark, raw)).collect()
     assert to_map(rows) == expected
     assert all(r["template_id"] == "data_governance" for r in rows)
@@ -112,7 +112,7 @@ def test_fused_inventory_form_matches_per_asset(spark):
 
     fused = by_asset(D.run_config_fused(spark, FIELDS, inv, "t"))
     per_asset = by_asset(
-        D.raw_rows_to_df(spark, D.run_config_per_asset(spark, FIELDS, uris, "t", short_name))
+        D.raw_rows_to_df(spark, D.run_config_per_asset(spark, FIELDS, [(u, None) for u in uris], "t", short_name))
     )
     assert fused == per_asset
     assert all(len(fields) == len(FIELDS) for fields in fused.values())
@@ -148,7 +148,7 @@ def test_richtext_collects_all_rows(spark):
             "query_expression": "select distinct l_returnflag from $table order by l_returnflag",
         }
     ]
-    raw = D.run_config_per_asset(spark, fields, [URI], "t", short_name)
+    raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
     assert raw[0]["raw_value"] == "A<br>N<br>R"
 
 

@@ -209,6 +209,27 @@ def test_column_discovery_error_capture(spark, engine, assets):
     assert "TABLE_OR_VIEW_NOT_FOUND" in msg or "missing_table" in msg
 
 
+def test_column_evaluation_error_names_the_column(spark, engine, assets):
+    # a constant included_columns_query names one real and one missing
+    # column: the missing column's statement fails, and its error says
+    # which column, while the real column is still tagged
+    cfg = engine.create_config(
+        "DYNAMIC_TAG_COLUMN", "data_sensitivity",
+        included_uris="bigquery/project/p/dataset/d/lineitem",
+        included_columns_query="select 'l_orderkey', 'bad_a'",
+        fields=[{"field_id": "row_count", "query_expression": "select count(distinct $column) from $table"}],
+    )
+    job = engine.trigger_job(cfg, assets)
+    jobs = {j["job_uuid"]: j for j in engine.jobs}
+    assert jobs[job]["job_status"] == "ERROR"
+    assert jobs[job]["tasks_failed"] == 1
+    tags = {(r["asset_uri"], r["column"]) for r in engine.store.all().collect()}
+    assert tags == {("p/datasets/d/tables/lineitem", "l_orderkey")}
+    (bad_uri, msg), = engine.job_errors[job]
+    assert bad_uri == "p/datasets/d/tables/lineitem"
+    assert msg.startswith("column bad_a: ")
+
+
 def test_export_reports(spark, engine, assets, tmp_path):
     cfg = engine.create_config(
         "STATIC_TAG_ASSET", "data_sensitivity",

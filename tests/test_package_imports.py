@@ -1,5 +1,6 @@
 """Every module of the package imports, every import statement in it
-resolves, the tag-engine modules never import the corpus pipeline, and
+resolves, the tag-engine modules never import the corpus pipeline,
+every public definition of a tag-engine module is used somewhere, and
 the query contract builds.
 
 Modules import some dependencies lazily inside functions, so importing
@@ -10,6 +11,7 @@ catches a dangling name in the contract before any Spark work runs."""
 import ast
 import importlib
 import importlib.util
+import pathlib
 import pkgutil
 
 import pytest
@@ -69,6 +71,50 @@ def test_engine_module_does_not_import_the_corpus_pipeline(name):
         assert not any(_is_corpus(f"{target}.{n}") for n in names), (
             f"{name}: from {target} import {names}"
         )
+
+
+REPO = pathlib.Path(PKG.__file__).parents[1]
+
+
+def _refs(nodes):
+    """Names the nodes use as code: loaded or stored names, attributes
+    and imported names (docstrings and comments do not count)."""
+    out = set()
+    for top in nodes:
+        for n in ast.walk(top):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, (ast.Import, ast.ImportFrom)):
+                out.update(a.name.rpartition(".")[2] for a in n.names)
+    return out
+
+
+def test_engine_definitions_are_used():
+    """Every public top-level function or class of a tag-engine module
+    is referenced somewhere in the repository outside its own
+    definition: the package, its tests, the query contract, the
+    benchmark or the tools."""
+    trees = {
+        p: ast.parse(p.read_text())
+        for p in REPO.rglob("*.py")
+        if not any(part.startswith(".") or part == "spark-warehouse" for part in p.relative_to(REPO).parts)
+    }
+    refs = {p: _refs(t.body) for p, t in trees.items()}
+    unused = []
+    for name in MODULES:
+        if _is_corpus(name):
+            continue
+        path = pathlib.Path(importlib.util.find_spec(name).origin)
+        elsewhere = set().union(*(r for p, r in refs.items() if p != path))
+        body = trees[path].body
+        for node in body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)) or node.name.startswith("_"):
+                continue
+            if node.name not in elsewhere | _refs(n for n in body if n is not node):
+                unused.append(f"{name}.{node.name}")
+    assert not unused, f"defined but never referenced: {unused}"
 
 
 def test_query_contract_builds():

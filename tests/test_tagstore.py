@@ -124,6 +124,24 @@ def test_persistence_roundtrip(spark, tmp_path):
     assert state(reloaded) == {("a", None, "t", "owner"): "alice"}
 
 
+def test_store_loaded_empty_merges_past_the_cap(spark, tmp_path):
+    # a store reopened on an empty state directory is an empty store: a
+    # batch past the driver-resident cap keeps every valued row as a
+    # CREATE and drops the all-empty one
+    path = str(tmp_path / "tags.parquet")
+    mk(spark, []).write.parquet(path)
+    ts = TagStore(spark, path=path)
+    ts.SMALL_STATE_MAX = 2
+    batch = [tag_row(f"a{i}", "owner", f"u{i}") for i in range(3)] + [tag_row("b", "owner")]
+    hist = ts.merge(mk(spark, batch)).collect()
+    assert ts._rows is None  # promoted
+    assert sorted((h["asset_uri"], h["action"]) for h in hist) == [
+        ("a0", "CREATE"), ("a1", "CREATE"), ("a2", "CREATE")
+    ]
+    assert state(ts) == {(f"a{i}", None, "t", "owner"): f"u{i}" for i in range(3)}
+    assert state(TagStore(spark, path=path)) == state(ts)
+
+
 def test_small_state_promotes_to_distributed(spark, monkeypatch):
     # shrink the driver-resident threshold so the third merge crosses it:
     # the store must promote one-way to the distributed MERGE and keep

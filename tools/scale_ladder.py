@@ -350,7 +350,8 @@ def main() -> None:
         if n <= 256:
             t0 = time.time()
             DYN.run_config_per_asset(
-                spark, E.FUSED_FIELDS, uris, "t", qualify=lambda p, d, t: "lineitem", max_workers=8
+                spark, E.FUSED_FIELDS, [(u, None) for u in uris], "t",
+                qualify=lambda p, d, t: "lineitem",
             )
             per_asset = time.time() - t0
 
