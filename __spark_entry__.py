@@ -5664,16 +5664,17 @@ SELECT t.cluster_id, t.n_docs::BIGINT AS n_docs,
 FROM tot t JOIN top USING (cluster_id)""",
     )
 
-def sigstore_replay_sql(n_batches: int = 3, threshold: float = 0.5) -> str:
+def _sigstore_stages_sql(n_batches: int, threshold: float, final: str) -> str:
     """The d19 sigs/buckets derivation UNROLLED over sequential crawl
-    drops — the relational form of the continuous signature-store
-    ingest loop: residents are doc_id % 4 = 0, drop b (0-based) is
-    doc_id % 4 = b+1, and each stage's pair adjudication runs against
-    the store AS GROWN by the earlier stages' survivors (store_b =
-    residents + acc_0..b-1). Per stage, the loser rule is the stream's
-    exactly: a batch doc in any cross pair (one side resident) loses;
-    the larger id of a within-batch pair loses. Signatures are
-    doc-local, so one sigs/buckets CTE serves every stage.
+    drops, closed by ``final``: residents are doc_id % 4 = 0, drop b
+    (0-based) is doc_id % 4 = b+1, and each stage's pair adjudication
+    runs against the store AS GROWN by the earlier stages' survivors
+    (store_b = residents + acc_0..b-1). Per stage, the loser rule is the
+    stream's exactly: a batch doc in any cross pair (one side resident)
+    loses; the larger id of a within-batch pair loses. Signatures are
+    doc-local, so one sigs/buckets CTE serves every stage. Stage b's
+    CTEs are p{b}, e{b} (adjudicated pairs with a_res/b_res), lose{b},
+    acc{b} (its survivors) and store{b+1}.
 
     sigs, each stage's store and its adjudicated pairs e{b} are read
     several times downstream, and store{b+1} reads store{b}: without
@@ -5715,9 +5716,6 @@ acc{b} AS (
     AND doc_id NOT IN (SELECT doc_id FROM lose{b})),
 store{b + 1} AS MATERIALIZED (
   SELECT doc_id FROM store{b} UNION ALL SELECT doc_id FROM acc{b})""")
-    final = "\nUNION ALL\n".join(
-        f"SELECT {b}::INT AS batch, doc_id FROM acc{b}" for b in range(n_batches)
-    )
     return f"""
 WITH toks AS (SELECT doc_id, (doc_id % 4)::INT AS grp,
                      regexp_split_to_array(text, '\\s+') w FROM documents),
@@ -5736,6 +5734,16 @@ buckets AS (
 store0 AS MATERIALIZED (SELECT doc_id FROM sigs WHERE grp = 0),{",".join(stages)}
 {final}
 """
+
+
+def sigstore_replay_sql(n_batches: int = 3, threshold: float = 0.5) -> str:
+    """The relational form of the continuous signature-store ingest
+    loop: every stage's accepted docs, tagged with their batch
+    (``_sigstore_stages_sql`` has the stage rules)."""
+    final = "\nUNION ALL\n".join(
+        f"SELECT {b}::INT AS batch, doc_id FROM acc{b}" for b in range(n_batches)
+    )
+    return _sigstore_stages_sql(n_batches, threshold, final)
 
 
 # --- round-14 rotation oracle generators: the proven drafts from
@@ -5869,71 +5877,20 @@ def sigstore_metrics_sql(n_batches: int = 3, threshold: float = 0.5) -> str:
     """The q102 unrolled per-stage derivation with a METRICS final
     select: per batch, input size, accepted size, and the two loser
     evidence counts (cross = near-dup of the store-so-far, within =
-    larger id of a batch-internal pair). Same split rule as q102:
-    residents doc_id % 4 = 0, drop b is doc_id % 4 = b + 1. The
-    MATERIALIZED hints are load-bearing, as in sigstore_replay_sql."""
-    sig_exprs = ",\n         ".join(
-        f"min(md5('{j}:' || shingle)) AS sig_{j}" for j in range(8)
-    )
-    band_cases = " ".join(
-        f"WHEN {b} THEN md5(sig_{2*b} || '|' || sig_{2*b+1})" for b in range(4)
-    )
-    agree = " + ".join(f"(sa.sig_{j} = sb.sig_{j})::INT" for j in range(8))
-    stages = []
-    finals = []
-    for b in range(n_batches):
-        g = b + 1
-        stages.append(f"""
-p{b} AS (
-  SELECT DISTINCT least(a.doc_id, b.doc_id) AS da, greatest(a.doc_id, b.doc_id) AS db
-  FROM buckets a JOIN buckets b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id <> b.doc_id
-  WHERE a.grp = {g}
-    AND (b.grp = {g} OR b.doc_id IN (SELECT doc_id FROM store{b}))),
-e{b} AS MATERIALIZED (
-  SELECT p.da, p.db,
-         p.da IN (SELECT doc_id FROM store{b}) AS a_res,
-         p.db IN (SELECT doc_id FROM store{b}) AS b_res
-  FROM p{b} p
-  JOIN sigs sa ON sa.doc_id = p.da
-  JOIN sigs sb ON sb.doc_id = p.db
-  WHERE round(({agree}) / 8.0, 4) >= {threshold}),
-lose{b} AS (
-  SELECT db AS doc_id FROM e{b} WHERE NOT a_res AND NOT b_res
-  UNION
-  SELECT CASE WHEN a_res THEN db ELSE da END AS doc_id
-  FROM e{b} WHERE a_res <> b_res),
-acc{b} AS (
-  SELECT doc_id FROM sigs WHERE grp = {g}
-    AND doc_id NOT IN (SELECT doc_id FROM lose{b})),
-store{b + 1} AS MATERIALIZED (
-  SELECT doc_id FROM store{b} UNION ALL SELECT doc_id FROM acc{b})""")
-        finals.append(f"""
+    larger id of a batch-internal pair). Same stages and split rule as
+    q102 (``_sigstore_stages_sql``)."""
+    final = " UNION ALL ".join(
+        f"""
 SELECT {b}::INT AS batch,
-       (SELECT count(*) FROM sigs WHERE grp = {g})::BIGINT AS n_in,
+       (SELECT count(*) FROM sigs WHERE grp = {b + 1})::BIGINT AS n_in,
        (SELECT count(*) FROM acc{b})::BIGINT AS n_accepted,
        (SELECT count(DISTINCT CASE WHEN a_res THEN db ELSE da END)
         FROM e{b} WHERE a_res <> b_res)::BIGINT AS n_cross_losers,
        (SELECT count(DISTINCT db)
-        FROM e{b} WHERE NOT a_res AND NOT b_res)::BIGINT AS n_within_losers""")
-    return f"""
-WITH toks AS (SELECT doc_id, (doc_id % 4)::INT AS grp,
-                     regexp_split_to_array(text, '\\s+') w FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, grp,
-         unnest(CASE WHEN len(w) >= 3
-                THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
-                ELSE [array_to_string(w, ' ')] END) AS shingle
-  FROM toks),
-sigs AS MATERIALIZED (
-  SELECT doc_id, any_value(grp) AS grp, {sig_exprs}
-  FROM sh GROUP BY doc_id),
-buckets AS (
-  SELECT doc_id, grp, band, CASE band {band_cases} END AS bucket
-  FROM sigs, (SELECT unnest(range(4)) AS band)),
-store0 AS MATERIALIZED (SELECT doc_id FROM sigs WHERE grp = 0),{",".join(stages)}
-{" UNION ALL ".join(finals)}
-"""
+        FROM e{b} WHERE NOT a_res AND NOT b_res)::BIGINT AS n_within_losers"""
+        for b in range(n_batches)
+    )
+    return _sigstore_stages_sql(n_batches, threshold, final)
 
 
 def corpus_health_sql(t02_sql: str, t16_sql: str) -> str:

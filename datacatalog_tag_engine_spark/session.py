@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql.types import ArrayType, StructField, StructType, TimestampType
 
+# HotSpot's tier-4 (C2) compile thresholds at 10x the JDK 17 defaults.
+# A tag-engine job runs many short queries over small data, so the
+# driver JVM never leaves warm-up: C2 compiled Spark's own
+# infrastructure (closure cleaner, SQL parser, Janino, Catalyst) whose
+# optimized code never ran long enough to repay the compile, and took
+# about half of the JVM's CPU doing it. Lukewarm code stays in C1;
+# hot loops still reach C2 (SCALE.md "Driver JVM compile budget").
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
 
 def get_spark(app_name: str = "tag-engine-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -22,6 +34,15 @@ def get_spark(app_name: str = "tag-engine-spark", shuffle_partitions: int | None
     100 TB scale this is instead sized so post-shuffle partitions stay
     in the 128-256 MB range — AQE coalesces down from a high initial
     number, so we set a generous initial and let AQE shrink it.
+
+    The driver JVM starts with ``DRIVER_JIT_OPTIONS``. They go into
+    ``spark.driver.defaultJavaOptions``, which Spark places before
+    ``spark.driver.extraJavaOptions`` on the JVM command line, so a
+    caller's own flags (``--driver-java-options``, or extraJavaOptions
+    in PYSPARK_SUBMIT_ARGS) still apply and win on conflict. They only
+    take effect when this call launches the JVM; a session whose JVM
+    already runs keeps its flags. Executors on a cluster are untouched:
+    their JVMs take ``spark.executor.*JavaOptions``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -43,6 +64,7 @@ def get_spark(app_name: str = "tag-engine-spark", shuffle_partitions: int | None
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         # UI off for tests/bench (port + listener overhead); tools that
         # read per-stage shuffle metrics over the REST API opt in via
         # SPARK_GRAFT_UI=true

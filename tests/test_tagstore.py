@@ -362,3 +362,38 @@ def test_history_spill_with_held_handout_stays_readable(spark):
     assert len(rows) == 9
     # and the log stayed bounded: one compacted file plus the append since
     assert len(eng._history_log.files()) < 4
+
+
+def test_touched_slice_merge_of_many_assets_matches_merge_rows(spark):
+    # a distributed state takes a ~1,000-asset batch on the driver (the
+    # touched-slice path, whose predicate names every batch asset); its
+    # state and events must equal merge_rows over the plain row lists
+    from collections import Counter
+
+    from datacatalog_tag_engine_spark.store.tagstore import VALUE_COLS, merge_rows
+
+    odd = ["it's", 'q"uote', "back\\slash", "ü/€/😀", ""]
+    assets = [f"p/datasets/d{i % 7}/tables/t{i}" for i in range(2400)] + odd
+    initial = [tag_row(a, f, f"{f}-{i}") for i, a in enumerate(assets) for f in ("owner", "domain")]
+    batch = [tag_row(a, "owner", f"new-{i}") for i, a in enumerate(assets[:2400:3])]  # updates
+    batch += [tag_row(f"fresh{i}", "owner", "n") for i in range(150)]  # creates
+    batch += [tag_row(a, "owner") for a in assets[1:600:3]]  # all-empty tags: deletes
+    batch += [tag_row(a, "owner", "odd") for a in odd]
+    assert len({r["asset_uri"] for r in batch}) > 1000
+
+    ts = TagStore(spark)
+    ts.set_state(mk(spark, initial))
+    assert ts._rows is None  # distributed
+    events = ts.merge(mk(spark, batch))
+    assert hasattr(events, "_tag_engine_event_rows")  # merged on the driver
+
+    def typed(r):
+        return (r["asset_uri"], r["column"], r["template_id"], r["field_id"]) + tuple(
+            r[c] for c in VALUE_COLS
+        )
+
+    want_state, want_events = merge_rows(initial, batch, True, True)
+    assert Counter(typed(r) + (r["action"],) for r in events.collect()) == Counter(
+        typed(r) + (r["action"],) for r in want_events
+    )
+    assert Counter(typed(r) for r in ts.all().collect()) == Counter(typed(r) for r in want_state)
