@@ -7,10 +7,15 @@ of DataFrame plans:
   ``create_config`` with template validation and dedup-by-hash
   deactivation of prior configs (P11, TagEngineStoreHandler.py:370-391);
 * job trigger (POST /trigger_job -> /_split_work -> /_run_task,
-  main.py:2930-3656) -> ``trigger_job``: expand URIs against the assets
-  inventory, dispatch by config type, evaluate expressions, MERGE into
-  the tag store, append history, close the job ledger row. The
-  shard/task fan-out collapses into Spark's own scheduling (SURVEY R3);
+  main.py:2930-3656) -> ``trigger_job``: one job path for all nine
+  config types. ``_RUNNERS`` maps each type to its runner,
+  ``(cfg, assets, job_uuid, errors, **kw) -> int``, which returns the
+  job's count (history events for a tagging type, non-empty report
+  grains for TAG_EXPORT, entries discovered for ENTRY_CREATE) and
+  appends per-task failures to ``errors``. Every tagging runner ends in
+  ``_apply`` (coerce, MERGE into the tag store, append history), and
+  trigger_job writes the job's one ledger row. The shard/task fan-out
+  collapses into Spark's own scheduling (SURVEY R3);
 * cron refresh (POST /scheduled_auto_updates, main.py:3075-3110) ->
   ``run_ready_configs``: the ready-config predicate (P10,
   TagEngineStoreHandler.py:1374-1392) + version bump and
@@ -33,7 +38,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .model.schemas import TAG_HISTORY_SCHEMA
+from .model.schemas import ASSETS_SCHEMA, TAG_HISTORY_SCHEMA
 from .session import local_df
 from .operators import dynamic as DYN
 from .operators import uri as URI
@@ -54,14 +59,21 @@ _NON_INCREMENTAL_TYPES = ("TAG_EXPORT", "ENTRY_CREATE", "TAG_IMPORT", "TAG_RESTO
 # tag-row merges; no template required at create time
 _SIDE_EFFECT_TYPES = ("TAG_EXPORT", "ENTRY_CREATE")
 
-# the 9 reference config types (ConfigType.py:4-12) — everything
-# trigger_job can dispatch; validated at create time like the
+# the 9 reference config types (ConfigType.py:4-12) and the TagEngine
+# method that runs each one's job; validated at create time like the
 # reference's check_config_type (main.py)
-_CONFIG_TYPES = (
-    "DYNAMIC_TAG_TABLE", "DYNAMIC_TAG_COLUMN", "STATIC_TAG_ASSET",
-    "GLOSSARY_TAG_ASSET", "SENSITIVE_TAG_COLUMN", "TAG_IMPORT",
-    "TAG_RESTORE", "TAG_EXPORT", "ENTRY_CREATE",
-)
+_RUNNERS = {
+    "DYNAMIC_TAG_TABLE": "_run_dynamic_table",
+    "DYNAMIC_TAG_COLUMN": "_run_dynamic_column",
+    "STATIC_TAG_ASSET": "_run_static",
+    "GLOSSARY_TAG_ASSET": "_run_glossary",
+    "SENSITIVE_TAG_COLUMN": "_run_sensitive",
+    "TAG_IMPORT": "_run_import",
+    "TAG_RESTORE": "_run_restore",
+    "TAG_EXPORT": "_run_export",
+    "ENTRY_CREATE": "_run_entries",
+}
+_CONFIG_TYPES = tuple(_RUNNERS)
 
 
 class TagEngine:
@@ -80,8 +92,14 @@ class TagEngine:
         self.templates: dict[str, list[dict]] = {}
         self.configs: dict[str, dict] = {}
         self.jobs: list[dict] = []
+        # per-task failures of the jobs that had some, by job_uuid
+        self.job_errors: dict[str, list] = {}
         self.store = TagStore(spark, path=tags_path)
         self._job_metadata: list[dict] = []
+        # the create_entries inventory as driver rows by asset_uri, and
+        # its frame
+        self._entries: dict[str, dict] = {}
+        self.assets: DataFrame | None = None
         # the history log lives beside the tag state, so an engine
         # reopened on tags_path sees every earlier event; without one it
         # goes to a temp directory
@@ -240,7 +258,6 @@ class TagEngine:
             }
         )
         if errors:
-            self.job_errors = getattr(self, "job_errors", {})
             self.job_errors[job_uuid] = errors
 
     def trigger_job(self, config_uuid: str, assets: DataFrame | None = None, **kw) -> str:
@@ -271,92 +288,42 @@ class TagEngine:
         # the reference (main.py:2999-3017), independent of the job's
         # outcome, gated on the job_metadata settings doc
         self._record_job_metadata(job_uuid, kw.pop("job_metadata", None), started)
-        # side-effect config types: all 9 reference config types route
-        # through the job machinery (ConfigType.py:4-12, main.py:
-        # 3597-3628), so exports and entry syncs get the job ledger and
-        # the scheduled-refresh treatment like every tagging type — they
-        # just produce reports/entries instead of tag-row merges.
-        if cfg["config_type"] in _SIDE_EFFECT_TYPES:
-            try:
-                if cfg["config_type"] == "TAG_EXPORT":
-                    counts = self.export_reports(
-                        cfg["target_path"], truncate=cfg.get("truncate", False)
-                    )
-                    n = sum(1 for c in counts.values() if c)
-                else:
-                    self.create_entries(
-                        cfg["directory"],
-                        cfg.get("entry_project", "local"),
-                        cfg.get("entry_dataset"),
-                    )
-                    n = self._last_entries_created
-            except Exception as exc:
-                self._record_job(
-                    job_uuid, config_uuid, cfg["config_type"], started,
-                    status="ERROR", tasks_failed=1,
-                )
-                # explicit contract with run_ready_configs: this raise
-                # already has its ledger row — no scheduler fallback row
-                exc._ledger_recorded = True
-                raise
-            self._record_job(
-                job_uuid, config_uuid, cfg["config_type"], started,
-                status="SUCCESS", task_count=n, tasks_success=n,
-            )
-            cfg["scheduling_status"] = "READY"
-            return job_uuid
-        dispatch = {
-            "DYNAMIC_TAG_TABLE": self._run_dynamic_table,
-            "DYNAMIC_TAG_COLUMN": self._run_dynamic_column,
-            "STATIC_TAG_ASSET": self._run_static,
-            "GLOSSARY_TAG_ASSET": self._run_glossary,
-            "SENSITIVE_TAG_COLUMN": self._run_sensitive,
-            "TAG_IMPORT": self._run_import,
-            "TAG_RESTORE": self._run_restore,
-        }
-        if cfg["config_type"] not in dispatch:
+        # all 9 reference config types route through the job machinery
+        # (ConfigType.py:4-12, main.py:3597-3628): exports and entry
+        # syncs get the job ledger and the scheduled-refresh treatment
+        # like every tagging type
+        runner = _RUNNERS.get(cfg["config_type"])
+        if runner is None:
             raise ValueError(f"unsupported config_type {cfg['config_type']!r}")
         errors: list[tuple[str, str]] = []
-        kw["_errors"] = errors
-        # frames a job caches for its own consumers, released once its
-        # merge and history append have read them
-        cached: list[DataFrame] = []
-        kw["_cached"] = cached
         try:
-            raw = dispatch[cfg["config_type"]](cfg, assets, **kw)
-            tags = DYN.coerce_long_rows(
-                raw,
-                bool_mode="csv" if cfg["config_type"] in ("TAG_IMPORT", "TAG_RESTORE", "GLOSSARY_TAG_ASSET") else "query",
-            ).withColumn("job_uuid", F.lit(job_uuid))
-            history = self.store.merge(tags, overwrite=cfg.get("overwrite", True))
-            n = self._append_history(history, job_uuid)
-            failed = len(errors)
-            status = "ERROR" if failed else "SUCCESS"
-        except Exception as exc:
+            n = getattr(self, runner)(cfg, assets, job_uuid, errors, **kw)
+        except Exception:
             self._record_job(
                 job_uuid, config_uuid, cfg["config_type"], started,
                 status="ERROR", tasks_failed=1,
             )
-            exc._ledger_recorded = True
             raise
-        finally:
-            for df in cached:
-                df.unpersist()
         self._record_job(
             job_uuid, config_uuid, cfg["config_type"], started,
-            status=status, task_count=n + failed, tasks_success=n,
-            tasks_failed=failed, errors=errors,
+            status="ERROR" if errors else "SUCCESS", task_count=n + len(errors),
+            tasks_success=n, tasks_failed=len(errors), errors=errors,
         )
         cfg["scheduling_status"] = "READY"
         return job_uuid
 
-    def _matched_uris(self, cfg: dict, assets: DataFrame) -> list[str]:
-        matched = URI.expand_included_excluded(
-            assets, cfg["included_uris"], cfg.get("excluded_uris")
-        )
-        return [r["asset_uri"] for r in matched.select("asset_uri").collect()]
+    def _matched(self, cfg: dict, assets: DataFrame) -> DataFrame:
+        return URI.expand_included_excluded(assets, cfg["included_uris"], cfg.get("excluded_uris"))
 
-    def _run_dynamic_table(self, cfg, assets, **kw):
+    def _apply(self, cfg: dict, raw: DataFrame, job_uuid: str, bool_mode: str = "query") -> int:
+        """The end of every tagging job: coerce its raw long rows, MERGE
+        them into the tag store and append the history events; returns
+        the event count."""
+        tags = DYN.coerce_long_rows(raw, bool_mode=bool_mode).withColumn("job_uuid", F.lit(job_uuid))
+        events = self.store.merge(tags, overwrite=cfg.get("overwrite", True))
+        return self._append_history(events, job_uuid)
+
+    def _run_dynamic_table(self, cfg, assets, job_uuid, errors, **kw):
         """Fused over the config's ``inventory_view`` when it names one;
         otherwise per asset, whatever the asset count."""
         # scale form: cfg["inventory_view"] names a registered table/view
@@ -366,32 +333,31 @@ class TagEngine:
         # reference's 500k/1M-asset ladder — and asset matching is a
         # semi-join, never a driver-side uri collect.
         inv_view = cfg.get("inventory_view")
+        if inv_view and not DYN.fusable(cfg["fields"]):
+            # silently falling back to the per-asset uri-collect path
+            # would reintroduce exactly the driver-side shape the
+            # inventory form exists to avoid — fail loudly instead
+            opaque = [
+                f["field_id"] for f in cfg["fields"]
+                if DYN.classify_expression(f["query_expression"])[0] == "opaque"
+                or f["field_type"] == "richtext"
+            ]
+            raise ValueError(
+                f"inventory_view config requires fusable fields; not fusable: {opaque}"
+            )
+        matched = self._matched(cfg, assets).select("asset_uri")
         if inv_view:
-            if not DYN.fusable(cfg["fields"]):
-                # silently falling back to the per-asset uri-collect path
-                # would reintroduce exactly the driver-side shape the
-                # inventory form exists to avoid — fail loudly instead
-                opaque = [
-                    f["field_id"] for f in cfg["fields"]
-                    if DYN.classify_expression(f["query_expression"])[0] == "opaque"
-                    or f["field_type"] == "richtext"
-                ]
-                raise ValueError(
-                    f"inventory_view config requires fusable fields; not fusable: {opaque}"
-                )
-            matched = URI.expand_included_excluded(
-                assets, cfg["included_uris"], cfg.get("excluded_uris")
-            ).select("asset_uri")
             inv = self.spark.table(inv_view).join(matched, "asset_uri", "left_semi")
-            return DYN.run_config_fused(self.spark, cfg["fields"], inv, cfg["template_id"])
-        tasks = [(uri, None) for uri in self._matched_uris(cfg, assets)]
-        rows = DYN.run_config_per_asset(
-            self.spark, cfg["fields"], tasks, cfg["template_id"], self.qualify,
-            errors=kw.get("_errors"),
-        )
-        return DYN.raw_rows_to_df(self.spark, rows)
+            raw = DYN.run_config_fused(self.spark, cfg["fields"], inv, cfg["template_id"])
+        else:
+            tasks = [(r["asset_uri"], None) for r in matched.collect()]
+            rows = DYN.run_config_per_asset(
+                self.spark, cfg["fields"], tasks, cfg["template_id"], self.qualify, errors=errors
+            )
+            raw = DYN.raw_rows_to_df(self.spark, rows)
+        return self._apply(cfg, raw, job_uuid)
 
-    def _run_dynamic_column(self, cfg, assets, **kw):
+    def _run_dynamic_column(self, cfg, assets, job_uuid, errors, **kw):
         """One per-asset run over every discovered (asset, column) pair,
         each statement fusing the config's fields like the reference's
         combine_queries. One aggregation pass over all columns was
@@ -399,17 +365,14 @@ class TagEngine:
         Expand multiplies scan rows by #aggregates; see SCALE.md), so it
         is not offered. A failing column discovery or evaluation is
         recorded in the job's errors; the other tasks proceed."""
-        matched = URI.expand_included_excluded(
-            assets, cfg["included_uris"], cfg.get("excluded_uris")
-        )
+        matched = self._matched(cfg, assets)
         uris = [r["asset_uri"] for r in matched.select("asset_uri").collect()]
-        errors = kw.get("_errors")
         discovered = self._discover_columns(cfg, matched, uris, errors)
         tasks = [(uri, col) for uri, columns in discovered.items() for col in columns]
         rows = DYN.run_config_per_asset(
             self.spark, cfg["fields"], tasks, cfg["template_id"], self.qualify, errors=errors
         )
-        return DYN.raw_rows_to_df(self.spark, rows)
+        return self._apply(cfg, DYN.raw_rows_to_df(self.spark, rows), job_uuid)
 
     def _discover_columns(
         self, cfg: dict, matched: DataFrame, uris: list[str], errors: list | None = None
@@ -464,7 +427,10 @@ class TagEngine:
         found = DYN.run_tasks(discover, [(uri, None) for uri in uris], errors)
         return {uri: cols for uri, cols in zip(uris, found) if cols is not None}
 
-    def _run_static(self, cfg, assets, **kw):
+    def _run_static(self, cfg, assets, job_uuid, errors, **kw):
+        return self._apply(cfg, self._static_rows(cfg, assets), job_uuid)
+
+    def _static_rows(self, cfg: dict, assets: DataFrame) -> DataFrame:
         """Static tags = matched assets x config fields, entirely as a
         plan: the matched-URI DataFrame crossJoins a broadcast fields
         table (always dimension-sized: one row per template field).
@@ -473,9 +439,7 @@ class TagEngine:
         examples/load/configs/static_asset_1m.json:31) is a single
         distributed 7M-row job instead of 7M driver-side dicts through
         createDataFrame."""
-        matched = URI.expand_included_excluded(
-            assets, cfg["included_uris"], cfg.get("excluded_uris")
-        ).select("asset_uri")
+        matched = self._matched(cfg, assets).select("asset_uri")
         fields_df = local_df(
             self.spark,
             [
@@ -498,13 +462,11 @@ class TagEngine:
             "raw_value",
         )
 
-    def _run_glossary(self, cfg, assets, **kw):
-        matched = URI.expand_included_excluded(
-            assets, cfg["included_uris"], cfg.get("excluded_uris")
-        )
-        return glossary_tag_rows(matched, kw["mapping"], cfg["template_id"])
+    def _run_glossary(self, cfg, assets, job_uuid, errors, **kw):
+        raw = glossary_tag_rows(self._matched(cfg, assets), kw["mapping"], cfg["template_id"])
+        return self._apply(cfg, raw, job_uuid, bool_mode="csv")
 
-    def _run_sensitive(self, cfg, assets, **kw):
+    def _run_sensitive(self, cfg, assets, job_uuid, errors, **kw):
         """Sensitive-column classification over ALL matched assets in one
         pass (reference runs three generated statements per asset,
         DataCatalogController.py:873-984). Emits per-column tags:
@@ -517,9 +479,7 @@ class TagEngine:
         selection = kw["selection"]
         classification = kw["classification"]
 
-        matched = URI.expand_included_excluded(
-            assets, cfg["included_uris"], cfg.get("excluded_uris")
-        ).select("asset_uri")
+        matched = self._matched(cfg, assets).select("asset_uri")
         findings = findings.join(F.broadcast(matched), "asset_uri", "left_semi")
 
         per_field = SEN.field_infotypes(findings, keys=["asset_uri", "field"])
@@ -528,8 +488,8 @@ class TagEngine:
         # the containment join + min-by derivation runs once per job,
         # not once per consumer. Sized per tagged COLUMN, orders of
         # magnitude below the scanned data at any scale. The job releases
-        # both caches after its merge; the policy-tag requests recompute
-        # from lineage when read later.
+        # both caches once its merge and history append have read them;
+        # the policy-tag requests recompute from lineage when read later.
         notables = SEN.select_notable_infotype(
             per_field, selection, keys=["asset_uri", "field"]
         ).cache()
@@ -549,36 +509,40 @@ class TagEngine:
                 F.struct(F.size("notable_infotypes"), F.col("classification_result")),
             ).alias("classification_result")
         ).cache()  # consumed by both the keep-filter and policy requests
-        kw["_cached"].extend([notables, classed])
-        keep = classed.filter(F.col("classification_result") != "Public_Information")
+        cached = (notables, classed)  # notables is reassigned below
+        try:
+            keep = classed.filter(F.col("classification_result") != "Public_Information")
 
-        # policy-tag application (reference :1038-1042 gate, :1064-1097
-        # schema update): stash the requests; callers materialize the
-        # schema rewrite with apply_policy_tags(assets).
-        if cfg.get("create_policy_tags") and kw.get("taxonomy") is not None:
-            self.last_policy_tag_requests = SEN.policy_tag_requests(
-                notables, classed, kw["taxonomy"]
+            # policy-tag application (reference :1038-1042 gate, :1064-1097
+            # schema update): stash the requests; callers materialize the
+            # schema rewrite with apply_policy_tags(assets).
+            if cfg.get("create_policy_tags") and kw.get("taxonomy") is not None:
+                self.last_policy_tag_requests = SEN.policy_tag_requests(
+                    notables, classed, kw["taxonomy"]
+                )
+
+            notables = notables.join(F.broadcast(keep.select("asset_uri")), "asset_uri", "left_semi")
+
+            flag_rows = notables.select(
+                "asset_uri",
+                F.col("field").alias("column"),
+                F.lit(cfg["template_id"]).alias("template_id"),
+                F.lit("sensitive_field").alias("field_id"),
+                F.lit("bool").alias("field_type"),
+                F.lit("TRUE").alias("raw_value"),
             )
-
-        notables = notables.join(F.broadcast(keep.select("asset_uri")), "asset_uri", "left_semi")
-
-        flag_rows = notables.select(
-            "asset_uri",
-            F.col("field").alias("column"),
-            F.lit(cfg["template_id"]).alias("template_id"),
-            F.lit("sensitive_field").alias("field_id"),
-            F.lit("bool").alias("field_type"),
-            F.lit("TRUE").alias("raw_value"),
-        )
-        type_rows = notables.select(
-            "asset_uri",
-            F.col("field").alias("column"),
-            F.lit(cfg["template_id"]).alias("template_id"),
-            F.lit("sensitive_type").alias("field_id"),
-            F.lit("string").alias("field_type"),
-            F.col("notable_infotype").alias("raw_value"),
-        )
-        return flag_rows.unionByName(type_rows)
+            type_rows = notables.select(
+                "asset_uri",
+                F.col("field").alias("column"),
+                F.lit(cfg["template_id"]).alias("template_id"),
+                F.lit("sensitive_type").alias("field_id"),
+                F.lit("string").alias("field_type"),
+                F.col("notable_infotype").alias("raw_value"),
+            )
+            return self._apply(cfg, flag_rows.unionByName(type_rows), job_uuid)
+        finally:
+            for df in cached:
+                df.unpersist()
 
     def apply_policy_tags(self, assets: DataFrame) -> DataFrame:
         """Materialize the schema rewrite for the last sensitive job run
@@ -590,19 +554,30 @@ class TagEngine:
             return assets
         return SEN.apply_policy_tags(assets, self.last_policy_tag_requests)
 
-    def _run_import(self, cfg, assets, **kw):
+    def _run_import(self, cfg, assets, job_uuid, errors, **kw):
         csv_df = kw.get("csv_df")
         if csv_df is None:
             csv_df = read_tag_csv(self.spark, cfg["csv_path"])
-        return melt_to_tag_rows(
+        raw = melt_to_tag_rows(
             csv_df, self.template_fields_df(cfg["template_id"]), cfg["template_id"]
         )
+        return self._apply(cfg, raw, job_uuid, bool_mode="csv")
 
-    def _run_restore(self, cfg, assets, **kw):
+    def _run_restore(self, cfg, assets, job_uuid, errors, **kw):
         backup = kw.get("backup_df")
         if backup is None:
             backup = read_backup(self.spark, cfg["backup_path"])
-        return restore_tag_rows(backup, cfg["template_id"], cfg["project_id"])
+        raw = restore_tag_rows(backup, cfg["template_id"], cfg["project_id"])
+        return self._apply(cfg, raw, job_uuid, bool_mode="csv")
+
+    def _run_export(self, cfg, assets, job_uuid, errors, **kw):
+        counts = self.export_reports(cfg["target_path"], truncate=cfg.get("truncate", False))
+        return sum(1 for c in counts.values() if c)
+
+    def _run_entries(self, cfg, assets, job_uuid, errors, **kw):
+        return self._add_entries(
+            cfg["directory"], cfg.get("entry_project", "local"), cfg.get("entry_dataset")
+        )
 
     # -- synchronous tag operations (no job machinery, like the
     # reference's /copy_tags and /update_tag_subset routes) -----------------
@@ -642,20 +617,26 @@ class TagEngine:
         entries — one inventory row per file with footer schema — and
         keep them on the engine for subsequent config runs. Re-running
         replaces rows for the same asset_uri (idempotent)."""
+        self._add_entries(directory, project, dataset)
+        return self.assets
+
+    def _add_entries(self, directory: str, project: str, dataset: str | None) -> int:
+        """create_entries' work; returns this run's discovery count, the
+        ENTRY_CREATE job's count (the cumulative inventory would
+        overstate a job's work on every re-run)."""
         from .operators.discovery import discover_parquet_assets
 
-        found = discover_parquet_assets(self.spark, directory, project, dataset)
-        # this run's discovery count, for the job ledger — the return
-        # value is the CUMULATIVE inventory, which would overstate a
-        # job's work on every re-run
-        self._last_entries_created = found.count()
-        if not hasattr(self, "assets") or self.assets is None:
-            self.assets = found
-        else:
-            keys = found.select("asset_uri")
-            survivors = self.assets.join(keys, "asset_uri", "left_anti")
-            self.assets = survivors.unionByName(found)
-        return self.assets
+        # the discovery frame is built from driver rows (a LocalRelation
+        # up to local_df's cap), so collecting it runs no Spark job; an
+        # inventory rebuilt from driver rows stays one flat relation
+        # however many runs replaced its rows
+        found = [
+            r.asDict(recursive=True)
+            for r in discover_parquet_assets(self.spark, directory, project, dataset).collect()
+        ]
+        self._entries.update((r["asset_uri"], r) for r in found)
+        self.assets = local_df(self.spark, list(self._entries.values()), ASSETS_SCHEMA)
+        return len(found)
 
     def export_reports(self, base_path: str, truncate: bool = False) -> dict[str, int]:
         """TAG_EXPORT (reference export path, BigQueryUtils.py:234-313):
@@ -812,16 +793,15 @@ class TagEngine:
         JSON (they are Firestore-document sized in the reference —
         TagEngineStoreHandler.py:366-1131), tags and history as parquet.
 
-        Each part appears whole or not at all: tags/ and history/ are
-        written beside their targets and swapped in (``commit_dir``),
-        and meta.json is written last, via a temp file and
-        ``os.replace``. A first snapshot a crash cut short therefore has
-        no meta.json and does not load."""
+        save_state owns ``base_path``: tags/, history/ and meta.json are
+        written into a sibling temp directory that replaces the whole
+        of ``base_path`` in one swap (``commit_dir``). A snapshot
+        therefore appears whole or not at all: a save cut short leaves
+        the previous snapshot, or, on a first save, no directory."""
         import json
         import os
+        import shutil
         import uuid
-
-        os.makedirs(base_path, exist_ok=True)
 
         def default(o):
             if isinstance(o, datetime.datetime):
@@ -840,15 +820,17 @@ class TagEngine:
             "seq": self._seq,
             "settings": self.settings,
         }
-        for name, df in (("tags", self.store.all()), ("history", self.history())):
-            path = os.path.join(base_path, name)
-            tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-            df.write.parquet(tmp)
-            commit_dir(tmp, path)
-        tmp = os.path.join(base_path, f".meta.json.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f, default=default)
-        os.replace(tmp, os.path.join(base_path, "meta.json"))
+        base_path = os.path.normpath(base_path)
+        tmp = f"{base_path}.tmp-{uuid.uuid4().hex[:8]}"
+        try:
+            self.store.write(os.path.join(tmp, "tags"))
+            self.history().write.parquet(os.path.join(tmp, "history"))
+            with open(os.path.join(tmp, "meta.json"), "w") as f:
+                json.dump(meta, f, default=default)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        commit_dir(tmp, base_path)
 
     @classmethod
     def load_state(cls, spark: SparkSession, base_path: str, qualify=None) -> "TagEngine":
@@ -861,8 +843,7 @@ class TagEngine:
             return d
 
         eng = cls(spark, qualify=qualify)
-        for name in ("tags", "history"):
-            recover_dir(os.path.join(base_path, name))
+        recover_dir(os.path.normpath(base_path))
         with open(os.path.join(base_path, "meta.json")) as f:
             meta = json.load(f, object_hook=hook)
         eng.templates = meta["templates"]
@@ -1049,16 +1030,15 @@ class TagEngine:
             per_kw = dict(kw)
             if cfg["config_type"] in _NON_INCREMENTAL_TYPES:
                 per_kw.pop("incremental", None)
+            recorded = len(self.jobs)
             try:
                 job_ids.append(self.trigger_job(cfg["config_uuid"], assets, **per_kw))
             except Exception as exc:
                 cfg["scheduling_status"] = "READY"
-                if not getattr(exc, "_ledger_recorded", False):
-                    # the raise happened before trigger_job's ledger
-                    # writes (validation, bad dispatch — trigger_job
-                    # stamps _ledger_recorded on exceptions whose row it
-                    # already wrote): record the failure here so no cron
-                    # failure is ever silent
+                if len(self.jobs) == recorded:
+                    # the raise came before trigger_job wrote a ledger
+                    # row (validation, a type with no runner): record
+                    # the failure here so no cron failure is ever silent
                     self._record_job(
                         self._uuid("job"), cfg["config_uuid"],
                         cfg["config_type"],

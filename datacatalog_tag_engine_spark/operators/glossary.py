@@ -33,7 +33,9 @@ def glossary_matches(assets: DataFrame, mapping: DataFrame) -> DataFrame:
 
 def glossary_tag_rows(assets: DataFrame, mapping: DataFrame, template_id: str) -> DataFrame:
     """Emit raw long tag rows: canonical_name fields set to 'TRUE' for
-    each matched asset (coerce with coerce_long_rows(bool_mode='csv'))."""
+    each matched asset (coerce with coerce_long_rows(bool_mode='csv')).
+    One row per (asset_uri, canonical_name): two schema columns that map
+    to one canonical name set one tag field, not two."""
     return glossary_matches(assets, mapping).select(
         "asset_uri",
         F.lit(None).cast("string").alias("column"),
@@ -41,4 +43,4 @@ def glossary_tag_rows(assets: DataFrame, mapping: DataFrame, template_id: str) -
         F.col("canonical_name").alias("field_id"),
         F.lit("bool").alias("field_type"),
         F.lit("TRUE").alias("raw_value"),
-    )
+    ).distinct()

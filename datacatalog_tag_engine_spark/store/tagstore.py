@@ -304,17 +304,22 @@ class TagStore:
 
         return combined.filter(F.col("_role") == "event").drop("_role")
 
+    def write(self, path: str) -> None:
+        """Write the state as parquet into the new directory ``path``: a
+        driver-resident state from the driver, a distributed one with
+        one Spark write."""
+        if self._rows is None:
+            self._df.write.parquet(path)
+        else:
+            os.makedirs(path)
+            data = [tuple(r.get(f.name) for f in TAGS_SCHEMA.fields) for r in self._rows]
+            pq.write_table(arrow_table(data, TAGS_SCHEMA), os.path.join(path, "part-00000.parquet"))
+
     def _persist(self) -> None:
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        if self._rows is None:
-            self._df.write.parquet(tmp)
-        else:
-            # driver-resident state is written from the driver, and the
-            # in-plan frame stays the store's view of it
-            os.makedirs(tmp)
-            data = [tuple(r.get(f.name) for f in TAGS_SCHEMA.fields) for r in self._rows]
-            pq.write_table(arrow_table(data, TAGS_SCHEMA), os.path.join(tmp, "part-00000.parquet"))
+        self.write(tmp)
         commit_dir(tmp, self.path)
+        # a driver-resident state's in-plan frame stays the store's view
         if self._rows is None:
             self._df = self.spark.read.parquet(self.path)
 

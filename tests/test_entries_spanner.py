@@ -12,9 +12,12 @@ def test_create_entries_then_tag(spark, sf_dir):
     inventory = eng.create_entries(sf_dir, project="local", dataset="raw")
     assert inventory.count() == 10
 
-    # re-running is idempotent (replace-by-uri)
-    eng.create_entries(sf_dir, project="local", dataset="raw")
+    # re-running is idempotent (replace-by-uri), and the inventory stays
+    # one flat relation: no run stacks a join onto the last one's plan
+    for _ in range(3):
+        eng.create_entries(sf_dir, project="local", dataset="raw")
     assert eng.assets.count() == 10
+    assert "Join" not in eng.assets._jdf.queryExecution().optimizedPlan().toString()
 
     cfg = eng.create_config(
         "STATIC_TAG_ASSET", "t",

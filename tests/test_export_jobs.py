@@ -228,6 +228,11 @@ def test_cron_cycle_isolates_failures_and_drops_inapplicable_incremental(spark, 
         "TAG_EXPORT", None, target_path=str(blocked / "sub"),
         refresh_mode="AUTO", refresh_frequency=1, refresh_unit="hours", next_run=t0,
     )
+    # a failing tagging job on the cron path: its CSV does not exist
+    bad_import = eng.create_config(
+        "TAG_IMPORT", "gov", csv_path=str(tmp_path / "missing.csv"),
+        refresh_mode="AUTO", refresh_frequency=1, refresh_unit="hours", next_run=t0,
+    )
     good_export = eng.create_config(
         "TAG_EXPORT", None, target_path=str(tmp_path / "reports"),
         refresh_mode="AUTO", refresh_frequency=1, refresh_unit="hours", next_run=t0,
@@ -239,15 +244,16 @@ def test_cron_cycle_isolates_failures_and_drops_inapplicable_incremental(spark, 
     )
     eng.trigger_job(tag_cfg, assets)  # populate the store so exports write
     jobs = eng.run_ready_configs(assets, now=t0, incremental=True)
-    # the failing export didn't block the good export after it
+    # the failing export and import didn't block the good export after them
     assert len(jobs) == 1
     good_job = next(j for j in eng.jobs if j["job_uuid"] == jobs[0])
     assert good_job["config_uuid"] == good_export and good_job["job_status"] == "SUCCESS"
-    # the failure got its ERROR ledger row and stays schedulable —
-    # exactly ONE row: trigger_job wrote it and stamped the exception
-    # _ledger_recorded, so the scheduler adds no duplicate fallback row
-    assert [j["job_status"] for j in eng.jobs if j["config_uuid"] == bad] == ["ERROR"]
-    assert eng.configs[bad]["scheduling_status"] == "READY"
+    # each failure got its ERROR ledger row and stays schedulable —
+    # exactly ONE row: trigger_job wrote it, so the scheduler, which
+    # sees the ledger grew, adds no duplicate fallback row
+    for failed in (bad, bad_import):
+        assert [j["job_status"] for j in eng.jobs if j["config_uuid"] == failed] == ["ERROR"]
+        assert eng.configs[failed]["scheduling_status"] == "READY"
     # direct calls keep the loud contract
     import pytest
 

@@ -37,10 +37,14 @@ def test_glossary_match_and_miss(spark):
 
 
 def test_glossary_tag_rows_bool_true(spark):
-    mapping = spark.createDataFrame([("email", "email_address")], "source_name string, canonical_name string")
-    rows = G.glossary_tag_rows(_assets(spark), mapping, "glossary").collect()
-    assert rows[0]["field_id"] == "email_address"
-    assert rows[0]["raw_value"] == "TRUE"
+    # the second mapping sends both schema columns to one canonical
+    # name: still one row for the one tag field
+    for pairs in ([("email", "email_address")], [("email", "email_address"), ("misc", "email_address")]):
+        mapping = spark.createDataFrame(pairs, "source_name string, canonical_name string")
+        rows = G.glossary_tag_rows(_assets(spark), mapping, "glossary").collect()
+        assert len(rows) == 1
+        assert rows[0]["field_id"] == "email_address"
+        assert rows[0]["raw_value"] == "TRUE"
 
 
 FINDINGS = [

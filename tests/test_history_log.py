@@ -221,15 +221,20 @@ def test_save_state_crash_leaves_previous_snapshot_loadable(spark, tmp_path, mon
     eng = governance_engine(spark)
     eng.update_tag_subset("g", T1, None, owner("a"))
     eng.save_state(base)
+    # the tags, the history and the metadata all change before the
+    # second save, which fails on its last part
+    eng.update_tag_subset("g", T1, None, owner("b"))
     eng.create_template("later", [{"field_id": "x", "field_type": "string"}])
     with monkeypatch.context() as m:
         fail_on_call(m, json, "dump", 1)
         with pytest.raises(OSError, match="injected"):
             eng.save_state(base)
-        # a first snapshot cut short has no meta.json, so it never loads
+        # a first snapshot cut short leaves no directory to load
         with pytest.raises(OSError, match="injected"):
             eng.save_state(str(tmp_path / "fresh"))
-    assert "meta.json" not in os.listdir(tmp_path / "fresh")
+    assert sorted(os.listdir(tmp_path)) == ["state"]
+    with pytest.raises(FileNotFoundError):
+        TagEngine.load_state(spark, str(tmp_path / "fresh"))
     loaded = TagEngine.load_state(spark, base)
     assert set(loaded.templates) == {"g"}
     assert owners(loaded) == ["a"]

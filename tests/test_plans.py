@@ -87,7 +87,7 @@ def test_exact_dedup_single_shuffle(spark):
 
 
 def test_static_config_is_a_plan_not_a_collect(spark):
-    # the static path (engine._run_static) must emit matched x fields as
+    # the static path (engine._static_rows) must emit matched x fields as
     # a crossJoin with a broadcast dimension table — the reference's 1M-
     # asset static load (examples/load/configs/static_asset_1m.json)
     # must never materialize assets x fields dicts on the driver
@@ -105,7 +105,7 @@ def test_static_config_is_a_plan_not_a_collect(spark):
         "'bigquery' as asset_type", "'p' as project", "'d' as dataset",
         "format_string('t_%03d', id) as table",
     )
-    df = eng._run_static(eng.configs[cfg_uuid], assets)
+    df = eng._static_rows(eng.configs[cfg_uuid], assets)
     p = plan_of(df)
     # distributed range scan survives into the plan (not a LocalTableScan
     # of collected rows) and the fields side is broadcast

@@ -17,7 +17,7 @@ fused-inventory runs every rung.
 `--static` instead runs the STATIC_TAG_ASSET ladder (the reference's
 flagship load shape, examples/load/configs/static_asset_1m.json: N
 assets x 7 constant fields): a spark.range-derived synthetic inventory
-through the engine's _run_static crossJoin plan + type coercion to a
+through the engine's _static_rows crossJoin plan + type coercion to a
 noop sink — no createDataFrame-from-list anywhere in the path, so the
 1M rung is a single distributed job.
 
@@ -94,7 +94,7 @@ def static_ladder(rungs: list[int]) -> None:
             F.format_string("t_%07d", F.col("id")).alias("table"),
         )
         t0 = time.time()
-        raw = eng._run_static(cfg, assets)
+        raw = eng._static_rows(cfg, assets)
         DYN.coerce_long_rows(raw).write.mode("overwrite").format("noop").save()
         print(f"{n:>9} {time.time() - t0:>10.2f}")
 
