@@ -38,7 +38,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .model.schemas import ASSETS_SCHEMA, TAG_HISTORY_SCHEMA
+from .model.schemas import ASSETS_SCHEMA, FIELD_TYPES, TAG_HISTORY_SCHEMA
 from .session import local_df
 from .operators import dynamic as DYN
 from .operators import uri as URI
@@ -126,7 +126,7 @@ class TagEngine:
     def create_template(self, template_id: str, fields: list[dict]) -> None:
         """fields: [{field_id, field_type[, enum_values][, order]}]."""
         for f in fields:
-            if f["field_type"] not in ("bool", "string", "double", "enum", "richtext", "datetime", "timestamp"):
+            if f["field_type"] not in FIELD_TYPES:
                 raise ValueError(f"unknown field_type {f['field_type']!r}")
         self.templates[template_id] = fields
 
@@ -494,21 +494,9 @@ class TagEngine:
             per_field, selection, keys=["asset_uri", "field"]
         ).cache()
 
-        # per-asset classification: smallest superset over the asset's
-        # distinct notable infotypes; Public_Information assets drop
-        table_sets = notables.groupBy("asset_uri").agg(
-            F.array_sort(F.collect_set("notable_infotype")).alias("have")
-        )
-        classed = table_sets.join(
-            F.broadcast(classification),
-            F.size(F.array_except(F.col("have"), F.col("notable_infotypes"))) == 0,
-            "inner",
-        ).groupBy("asset_uri").agg(
-            F.min_by(
-                F.col("classification_result"),
-                F.struct(F.size("notable_infotypes"), F.col("classification_result")),
-            ).alias("classification_result")
-        ).cache()  # consumed by both the keep-filter and policy requests
+        # per-asset classification; Public_Information assets drop.
+        # Consumed by both the keep-filter and the policy requests.
+        classed = SEN.classify_table(notables, classification, keys=["asset_uri"]).cache()
         cached = (notables, classed)  # notables is reassigned below
         try:
             keep = classed.filter(F.col("classification_result") != "Public_Information")
@@ -834,8 +822,15 @@ class TagEngine:
 
     @classmethod
     def load_state(cls, spark: SparkSession, base_path: str, qualify=None) -> "TagEngine":
+        """An engine with the state ``save_state`` wrote to ``base_path``.
+        Nothing it returns reads under ``base_path``: the snapshot's
+        history, and a tag state too large to hold on the driver, are
+        read from the engine's own file copies, so a later save_state
+        to the same path (which replaces it) leaves the engine whole."""
         import json
         import os
+        import shutil
+        import tempfile
 
         def hook(d):
             if "__dt__" in d:
@@ -854,13 +849,19 @@ class TagEngine:
         # older snapshots predate the settings store: keep the
         # constructor default (tag_history enabled)
         eng.settings = meta.get("settings", eng.settings)
+        own = tempfile.mkdtemp(prefix="tag_engine_snapshot_")
+        copy = {
+            name: shutil.copytree(os.path.join(base_path, name), os.path.join(own, name))
+            for name in ("tags", "history")
+        }
         # set_state keeps the store's driver-resident mirror in sync —
         # without it the next merge would take the empty-store fast path
         # and duplicate same-key tags
-        eng.store.set_state(spark.read.parquet(os.path.join(base_path, "tags")))
-        eng._history_snapshot = spark.read.schema(TAG_HISTORY_SCHEMA).parquet(
-            os.path.join(base_path, "history")
-        )
+        eng.store.set_state(spark.read.parquet(copy["tags"]))
+        if eng.store._rows is not None:
+            # held on the driver: the copy is not read again
+            shutil.rmtree(copy["tags"])
+        eng._history_snapshot = spark.read.schema(TAG_HISTORY_SCHEMA).parquet(copy["history"])
         return eng
 
     def jobs_df(self) -> DataFrame:

@@ -1,9 +1,11 @@
 """Public table schemas of the engine (SURVEY.md section 1.4).
 
 These are the Spark equivalents of the reference's storage surfaces:
-Firestore config docs, Data Catalog tag protos, and the BigQuery
-reporting/history tables (reference: BigQueryUtils.py:234-305, :344-387,
-:504-521; JobManager.py:168-178; TaskManager.py:192-202).
+Data Catalog templates and tag protos, the asset inventory, and the
+BigQuery history and job tables (reference: BigQueryUtils.py:344-387,
+:504-521; JobManager.py:168-178; TaskManager.py:192-202). Configs stay
+JSON-shaped dicts (``TagEngine.configs``), and the export builds its
+report tables' columns itself (``operators/export.py``).
 
 The ``tags`` table uses a long/EAV layout: one row per
 (asset, column, template, field). That is the shape the reference's own
@@ -30,38 +32,6 @@ TEMPLATES_SCHEMA = T.StructType(
         T.StructField("is_required", T.BooleanType(), True),
         T.StructField("order", T.IntegerType(), True),
         T.StructField("enum_values", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-# One row per config; fields is the subset of template fields the config
-# computes, each with either a static field_value or a query_expression
-# (reference: ConfigType.py:4-12, TagEngineStoreHandler.py:366-1131).
-CONFIG_FIELD_SCHEMA = T.StructType(
-    [
-        T.StructField("field_id", T.StringType(), False),
-        T.StructField("field_type", T.StringType(), False),
-        T.StructField("field_value", T.StringType(), True),
-        T.StructField("query_expression", T.StringType(), True),
-    ]
-)
-
-CONFIGS_SCHEMA = T.StructType(
-    [
-        T.StructField("config_uuid", T.StringType(), False),
-        T.StructField("config_type", T.StringType(), False),
-        T.StructField("config_status", T.StringType(), True),
-        T.StructField("template_id", T.StringType(), False),
-        T.StructField("included_uris", T.StringType(), True),
-        T.StructField("excluded_uris", T.StringType(), True),
-        T.StructField("included_columns_query", T.StringType(), True),
-        T.StructField("fields", T.ArrayType(CONFIG_FIELD_SCHEMA), True),
-        T.StructField("refresh_mode", T.StringType(), True),
-        T.StructField("refresh_frequency", T.IntegerType(), True),
-        T.StructField("refresh_unit", T.StringType(), True),
-        T.StructField("scheduling_status", T.StringType(), True),
-        T.StructField("next_run", T.TimestampType(), True),
-        T.StructField("version", T.IntegerType(), True),
-        T.StructField("overwrite", T.BooleanType(), True),
     ]
 )
 
@@ -132,31 +102,6 @@ TAG_HISTORY_SCHEMA = T.StructType(
         T.StructField("job_uuid", T.StringType(), True),
         T.StructField("event_date", T.DateType(), True),  # partition column
     ]
-)
-
-# The three reporting tables (reference: BigQueryUtils.py:263-305), all
-# day-partitioned on export_time.
-REPORT_DATASET_SCHEMA = T.StructType(
-    [
-        T.StructField("project", T.StringType(), True),
-        T.StructField("dataset", T.StringType(), True),
-        T.StructField("tag_template", T.StringType(), True),
-        T.StructField("tag_field", T.StringType(), True),
-        T.StructField("tag_value", T.StringType(), True),
-        T.StructField("export_time", T.TimestampType(), True),
-    ]
-)
-
-REPORT_TABLE_SCHEMA = T.StructType(
-    REPORT_DATASET_SCHEMA.fields[:2]
-    + [T.StructField("table", T.StringType(), True)]
-    + REPORT_DATASET_SCHEMA.fields[2:]
-)
-
-REPORT_COLUMN_SCHEMA = T.StructType(
-    REPORT_TABLE_SCHEMA.fields[:3]
-    + [T.StructField("column", T.StringType(), True)]
-    + REPORT_TABLE_SCHEMA.fields[3:]
 )
 
 # Job ledger (reference: JobManager.py:168-178, :119-135). Task-level

@@ -186,7 +186,9 @@ def copy_policy_tags(assets: DataFrame, source_uri: str, target_uri: str) -> Dat
     return apply_policy_tags(assets, requests)
 
 
-def classify_table(notables: DataFrame, classification: DataFrame) -> DataFrame:
+def classify_table(
+    notables: DataFrame, classification: DataFrame, keys: list[str] | None = None
+) -> DataFrame:
     """J4: one classification_result for the table: smallest
     classification row whose notable_infotypes contains ALL the table's
     distinct notable infotypes (reference c_sql :948-984).
@@ -194,30 +196,35 @@ def classify_table(notables: DataFrame, classification: DataFrame) -> DataFrame:
     notables: (field, notable_infotype) from select_notable_infotype().
     classification: (notable_infotypes ARRAY<STRING>, classification_result STRING).
     Returns a 1-row DataFrame (classification_result STRING), or ZERO
-    rows when there is nothing to classify: either ``notables`` is
-    empty — a table with no DLP findings has no classification (the
-    unguarded global agg produced have=[], which superset-matches every
-    classification row and mislabeled a clean table) — or no
-    classification row superset-matches the table's infotype set.
-    Callers must treat the empty frame as "unclassified", not index a
-    guaranteed first row.
+    rows when there is nothing to classify: either the table has no
+    non-null notable infotype — a table with no DLP findings has no
+    classification (the empty set superset-matches every classification
+    row and would mislabel a clean table) — or no classification row
+    superset-matches the table's infotype set. Callers must treat the
+    empty frame as "unclassified", not index a guaranteed first row.
+    ``keys`` widens the grain to one row per table for multi-asset
+    batches (e.g. ['asset_uri']), with the key columns first.
     """
-    table_set = notables.agg(
-        F.array_sort(F.collect_set("notable_infotype")).alias("have")
-    ).filter(F.size("have") > 0)
+    keys = keys or []
+    # grouped (not global) aggs: zero input rows -> zero output rows
+    grain = [F.col(k) for k in keys] or [F.lit(1).alias("_g")]
+    table_set = (
+        notables.groupBy(*grain)
+        .agg(F.array_sort(F.collect_set("notable_infotype")).alias("have"))
+        .filter(F.size("have") > 0)
+    )
     joined = table_set.join(
         F.broadcast(classification),
         F.size(F.array_except(F.col("have"), F.col("notable_infotypes"))) == 0,
         "inner",
     )
     return (
-        # grouped (not global) agg: zero input rows -> zero output rows
-        joined.groupBy(F.lit(1).alias("_g"))
+        joined.groupBy(*grain)
         .agg(
             F.min_by(
                 F.col("classification_result"),
                 F.struct(F.size("notable_infotypes"), F.col("classification_result")),
             ).alias("classification_result")
         )
-        .select("classification_result")
+        .select(*keys, "classification_result")
     )

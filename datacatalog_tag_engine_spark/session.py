@@ -1,9 +1,15 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and its driver-rows rule.
 
 Local testing runs on local[N]; the same settings are what we would ship
 on a multi-executor cluster: AQE on (runtime re-plan + skew-join
 handling), shuffle partitions sized for the data scale, Arrow enabled for
 the few Pandas-UDF paths (pipeline/ operators).
+
+The driver-rows rule: a tag state, batch, touched slice or history
+entry of at most ``DRIVER_ROWS_MAX`` rows lives on the driver, as dicts,
+pyarrow-written files and in-plan ``LocalRelation``s; anything larger
+stays in Spark. ``driver_rows`` is its one probe, ``local_df`` and
+``arrow_table`` its one way from dict rows to Spark and to Arrow.
 """
 
 from __future__ import annotations
@@ -102,29 +108,37 @@ def get_spark(app_name: str = "tag-engine-spark", shuffle_partitions: int | None
     return builder.getOrCreate()
 
 
-# the largest driver-row frame local_df hands to Spark as an in-plan
-# LocalRelation instead of a parallelized RDD
-LOCAL_RELATION_MAX_ROWS = 4096
+# The driver-rows cap (module docstring). The reference writes tags one
+# entry at a time (DataCatalogController.py:1608-1652), so a
+# driver-sized unit of work is its own regime. ``local_df``,
+# ``TagStore`` and ``HistoryLog`` all read this one cap.
+DRIVER_ROWS_MAX = 4096
+
+
+def driver_rows(df, cap: int) -> list[dict] | None:
+    """The rows of ``df`` as dicts when it has at most ``cap`` rows,
+    else None. One limit-collect, which stops past the cap; over a
+    ``LocalRelation`` it runs no Spark job."""
+    rows = df.limit(cap + 1).collect()
+    return [r.asDict() for r in rows] if len(rows) <= cap else None
 
 
 def local_df(spark: SparkSession, data, schema, slices: int | None = None):
-    """createDataFrame for dimension-sized driver rows.
+    """createDataFrame for driver rows (tuples in field order, or dicts
+    keyed by field name).
 
-    Up to 4096 rows become an Arrow-backed ``LocalRelation``: the rows
-    live inside the plan, and Catalyst folds project, filter and limit
-    over them, so collecting such a frame (a tag-state mirror, the
-    incoming rows of a synchronous call, merge events, the job ledger)
-    runs no Spark job. Nested struct and array fields come back
-    nullable: PySpark's Arrow input path rebuilds nested arrays without
-    their non-null flags.
+    Up to ``DRIVER_ROWS_MAX`` rows become an Arrow-backed
+    ``LocalRelation``: the rows live inside the plan, and Catalyst folds
+    project, filter and limit over them, so collecting such a frame (a
+    tag-state mirror, the incoming rows of a synchronous call, merge
+    events, the job ledger) runs no Spark job. Nested struct and array
+    fields come back nullable: PySpark's Arrow input path rebuilds
+    nested arrays without their non-null flags.
 
-    Above 4096 rows, or when ``slices`` is given, the rows are
-    parallelized at one slice per 4096 rows instead of the
-    defaultParallelism-wide default, which would schedule a full task
-    wave for every action on a handful of rows.
-
-    Accepts tuples or dicts (dicts are mapped through the StructType
-    field order)."""
+    Above the cap, or when ``slices`` is given, the rows are
+    parallelized at one slice per ``DRIVER_ROWS_MAX`` rows instead of
+    the defaultParallelism-wide default, which would schedule a full
+    task wave for every action on a handful of rows."""
     data = list(data)
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
@@ -136,14 +150,15 @@ def local_df(spark: SparkSession, data, schema, slices: int | None = None):
             unknown = r.keys() - names
             if unknown:
                 raise ValueError(f"local_df: keys {sorted(unknown)} not in schema {sorted(names)}")
-        data = [tuple(r.get(f.name) for f in schema.fields) for r in data]
-    if slices is None and len(data) <= LOCAL_RELATION_MAX_ROWS:
+    if slices is None and len(data) <= DRIVER_ROWS_MAX:
+        if data and not isinstance(data[0], dict):
+            data = [dict(zip(schema.names, r)) for r in data]
         schema = StructType(
             [StructField(f.name, _nullable_nested(f.dataType), f.nullable) for f in schema.fields]
         )
         return spark.createDataFrame(arrow_table(data, schema), schema)
     if slices is None:
-        slices = max(1, (len(data) + 4095) // 4096)
+        slices = (len(data) + DRIVER_ROWS_MAX - 1) // DRIVER_ROWS_MAX
     return spark.createDataFrame(spark.sparkContext.parallelize(data, slices), schema)
 
 
@@ -155,30 +170,30 @@ def _nullable_nested(dt):
     return dt
 
 
-def arrow_table(rows: list[tuple], schema):
-    """A pyarrow Table of driver rows (tuples in ``schema`` field order)
-    typed by a Spark StructType. Naive datetimes in timestamp columns
-    are read as local time, as PySpark's own createDataFrame reads them;
-    a None in a non-nullable column raises."""
+def arrow_table(rows: list[dict], schema):
+    """A pyarrow Table of driver rows (dicts keyed by field name: a
+    missing key is null, an extra key is ignored) typed by a Spark
+    StructType. Naive datetimes in timestamp columns are read as local
+    time, as PySpark's own createDataFrame reads them; a None in a
+    non-nullable column raises."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
-    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
-    arrays = []
-    for field, values in zip(schema.fields, columns):
+    table = pa.Table.from_pylist(rows, schema=arrow_schema)
+    for i, field in enumerate(schema.fields):
         if isinstance(field.dataType, TimestampType):
-            values = [
-                v.astimezone(datetime.timezone.utc)
-                if isinstance(v, datetime.datetime) and v.tzinfo is None
-                else v
-                for v in values
-            ]
-        arr = pa.array(values, type=arrow_schema.field(field.name).type)
-        if not field.nullable and arr.null_count:
+            values = pa.array([_as_utc(r.get(field.name)) for r in rows], type=arrow_schema.field(i).type)
+            table = table.set_column(i, arrow_schema.field(i), values)
+        if not field.nullable and table.column(i).null_count:
             raise ValueError(f"field {field.name}: not nullable, but got None")
-        arrays.append(arr)
-    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return table
+
+
+def _as_utc(v):
+    if isinstance(v, datetime.datetime) and v.tzinfo is None:
+        return v.astimezone(datetime.timezone.utc)
+    return v
 
 
 def free_local_checkpoint(df) -> None:

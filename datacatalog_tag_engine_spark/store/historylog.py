@@ -3,22 +3,21 @@ history table written once per tag mutation, BigQueryUtils.py:344-387).
 
 Every append is written at once as one entry of the log directory,
 named by the append range it covers: ``00000007-00000007.parquet``.
-The events of a merge run on the driver (a small state, or a small
-batch's touched slice of a distributed state) are written with pyarrow
-as one file. A bucket merge's events are written by one Spark write,
-and its event count comes from the written parquet footers; when that
-count is small the part files are joined into one file on the driver,
-otherwise the entry stays a directory of part files. Entries hold the typed tag
-columns plus ``action``, ``event_time`` and ``job_uuid``; rendering
-(asset_name, field_value) happens at read time, in
-``TagEngine.history``.
+The log follows the driver-rows rule (``session.DRIVER_ROWS_MAX``): the
+events of a merge run on the driver (a small state, or a small batch's
+touched slice of a distributed state) are written with pyarrow as one
+file; a bucket merge's events are written by one Spark write as a
+directory of part files, and its event count comes from the written
+parquet footers. Entries hold the typed tag columns plus ``action``,
+``event_time`` and ``job_uuid``; rendering (asset_name, field_value)
+happens at read time, in ``TagEngine.history``.
 
 Compaction bounds the number of files a read opens: every
-``compact_every`` appends, each run of consecutive small entries (at
-most ``TagStore.SMALL_STATE_MAX`` rows, the previous compacted file
-included) is merged on the driver with pyarrow into one file named by
-the range it covers. Larger entries stay as written, so no run spans
-them and a range always covers exactly the entries merged into it.
+``compact_every`` appends, each run of consecutive entries of at most
+``DRIVER_ROWS_MAX`` rows (the previous compacted file included) is
+merged on the driver with pyarrow into one file named by the range it
+covers. Larger entries stay as written, so no run spans them and a
+range always covers exactly the entries merged into it.
 
 Crash safety: entries and compactions appear via a hidden temp name
 plus ``os.replace``, so a reader sees an entry whole or not at all. The
@@ -43,8 +42,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..model.schemas import TAGS_SCHEMA
-from ..session import arrow_table
-from .tagstore import TagStore
+from ..session import DRIVER_ROWS_MAX, arrow_table
 
 # the typed tag columns (no per-tag job_uuid/updated_ts: the event's
 # job_uuid is the job that appended it) plus the event columns
@@ -130,15 +128,7 @@ class HistoryLog:
         tag columns and ``action``) as one file; returns the event
         count."""
         if events:
-            rows = [
-                tuple(
-                    event_time if f.name == "event_time"
-                    else job_uuid if f.name == "job_uuid"
-                    else e.get(f.name)
-                    for f in LOG_SCHEMA.fields
-                )
-                for e in events
-            ]
+            rows = [{**e, "event_time": event_time, "job_uuid": job_uuid} for e in events]
             tmp = self._temp()
             pq.write_table(arrow_table(rows, LOG_SCHEMA), tmp)
             self._commit(tmp, len(rows))
@@ -154,13 +144,6 @@ class HistoryLog:
             F.lit(job_uuid).alias("job_uuid"),
         ).write.parquet(tmp)
         rows = _footer_rows(tmp)
-        if rows <= TagStore.SMALL_STATE_MAX:
-            # a small write's part files become one file, so a read
-            # opens one file per small append
-            single = self._temp()
-            pq.write_table(_read_table(tmp), single)
-            shutil.rmtree(tmp)
-            tmp = single
         self._commit(tmp, rows)
         return rows
 
@@ -182,7 +165,7 @@ class HistoryLog:
         one file, on the driver."""
         runs: list[list[str]] = [[]]
         for n in self._live:
-            if self._count(n) <= TagStore.SMALL_STATE_MAX:
+            if self._count(n) <= DRIVER_ROWS_MAX:
                 runs[-1].append(n)
             else:
                 runs.append([])

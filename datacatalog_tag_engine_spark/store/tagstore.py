@@ -20,12 +20,14 @@ one function, ``merge_rows``:
 MERGE is retried-task idempotent (SURVEY R6): re-applying the same
 incoming batch converges to the same table.
 
-``TagStore`` applies ``merge_rows`` in one of two places. On the
-driver, it merges a small state held as dicts, or, once the state is
-distributed, the batch's touched slice: the state rows of the assets
-the batch names, collected, merged and swapped back into the state.
-Larger batches are merged per hash bucket of ``asset_uri`` in Python
-workers, over the state rows of the tags the batch touches. Every rule
+``TagStore`` applies ``merge_rows`` in one of two places, by the
+driver-rows rule (``session.DRIVER_ROWS_MAX``). On the driver, it
+merges a state of at most that many rows held as dicts, or, once the
+state is distributed, a batch that fits under the cap together with its
+touched slice: the state rows of the assets the batch names, collected,
+merged and swapped back into the state. Larger batches are merged per
+hash bucket of ``asset_uri`` in Python workers, over the state rows of
+the tags the batch touches. Every rule
 is local to one tag and a tag's rows share one ``asset_uri``, so all
 three give the same result. Parquet persistence writes a temp
 directory and swaps it in with the old one renamed aside
@@ -48,16 +50,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model.schemas import TAGS_SCHEMA
-from ..session import arrow_table, local_df
+from ..session import DRIVER_ROWS_MAX, arrow_table, driver_rows, local_df
 
-TAG_KEY = ["asset_uri", "column", "template_id", "field_id"]
 TAG_GROUP_KEY = ["asset_uri", "column", "template_id"]
 VALUE_COLS = ["field_value_string", "field_value_double", "field_value_bool", "field_value_ts"]
+# the events a merge returns: the tag columns plus CREATE/UPDATE/DELETE
+EVENT_SCHEMA = T.StructType(list(TAGS_SCHEMA.fields) + [T.StructField("action", T.StringType())])
 # a bucket merge returns state rows (null action) and event rows in one
 # frame, told apart by _role
 _BUCKET_SCHEMA = T.StructType(
-    list(TAGS_SCHEMA.fields)
-    + [T.StructField("action", T.StringType()), T.StructField("_role", T.StringType(), False)]
+    list(EVENT_SCHEMA.fields) + [T.StructField("_role", T.StringType(), False)]
 )
 
 
@@ -109,9 +111,7 @@ def _merge_bucket(overwrite: bool, delete_when_empty: bool):
         )
         rows = [{**r, "action": None, "_role": "state"} for r in merged]
         rows += [{**r, "_role": "event"} for r in events]
-        return arrow_table(
-            [tuple(r.get(f.name) for f in _BUCKET_SCHEMA.fields) for r in rows], _BUCKET_SCHEMA
-        )
+        return arrow_table(rows, _BUCKET_SCHEMA)
 
     return apply
 
@@ -130,14 +130,13 @@ def _isin(spark: SparkSession, name: str, values) -> Column:
 
 class TagStore:
     # The most rows ``merge_rows`` takes on the driver at once (batch plus
-    # the state rows it reads), the reference's own regime: tags are
-    # Firestore documents written one entry at a time,
-    # DataCatalogController.py:1608-1652. While the whole state fits,
-    # it is held on the driver and a merge runs no Spark job of its own.
-    # Past the cap the store promotes one-way to a distributed state; a
-    # batch whose touched slice still fits merges on the driver, and the
-    # rest merge per hash bucket of the touched tags.
-    SMALL_STATE_MAX = 4096
+    # the state rows it reads): the driver-rows rule. While the whole
+    # state fits, it is held on the driver and a merge runs no Spark job
+    # of its own. Past the cap the store promotes one-way to a
+    # distributed state; a batch whose touched slice still fits merges
+    # on the driver, and the rest merge per hash bucket of the touched
+    # tags. Tests lower it per instance to force a path.
+    SMALL_STATE_MAX = DRIVER_ROWS_MAX
 
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
@@ -157,17 +156,8 @@ class TagStore:
         """Inject externally-persisted state (engine load_state), keeping
         the driver-resident mirror consistent so the next merge takes
         the right path and classifies UPDATE vs CREATE correctly."""
-        self._df = df
-        probe = df.limit(self.SMALL_STATE_MAX + 1).collect()
-        if len(probe) <= self.SMALL_STATE_MAX:
-            self._rows = [r.asDict() for r in probe]
-            self._df = self._small_df(self._rows)
-        else:
-            self._rows = None
-
-    def _small_df(self, rows: list[dict]) -> DataFrame:
-        data = [tuple(r.get(f.name) for f in TAGS_SCHEMA.fields) for r in rows]
-        return local_df(self.spark, data, TAGS_SCHEMA)
+        self._rows = driver_rows(df, self.SMALL_STATE_MAX)
+        self._df = df if self._rows is None else local_df(self.spark, self._rows, TAGS_SCHEMA)
 
     def _merge_small(
         self,
@@ -186,7 +176,7 @@ class TagStore:
         merged, events = merge_rows(existing, inc_rows, overwrite, delete_when_empty)
         if touched is None:
             self._rows = merged
-            self._df = self._small_df(merged)
+            self._df = local_df(self.spark, merged, TAGS_SCHEMA)
         else:
             # the slice holds every state row of the batch's assets, so
             # the rest of the state passes through untouched; coalescing
@@ -195,18 +185,14 @@ class TagStore:
             parts = self._df.rdd.getNumPartitions()
             self._df = (
                 self._df.filter(~touched)
-                .unionByName(self._small_df(merged))
+                .unionByName(local_df(self.spark, merged, TAGS_SCHEMA))
                 .coalesce(parts)
                 .localCheckpoint(eager=True)
             )
         if self.path:
             self._persist()
 
-        event_schema = T.StructType(
-            list(TAGS_SCHEMA.fields) + [T.StructField("action", T.StringType(), False)]
-        )
-        data = [tuple(r.get(f.name) for f in event_schema.fields) for r in events]
-        out = local_df(self.spark, data, event_schema)
+        out = local_df(self.spark, events, EVENT_SCHEMA)
         # the caller's history append writes these rows from the driver
         # instead of running a Spark write over the frame
         out._tag_engine_event_rows = events
@@ -234,21 +220,20 @@ class TagStore:
         # cap). Otherwise the batch is merged per bucket, re-evaluating
         # its plan; a driver-resident store promotes to the distributed
         # path for good.
-        batch = [r.asDict() for r in inc.limit(self.SMALL_STATE_MAX + 1).collect()]
-        room = self.SMALL_STATE_MAX - len(batch)
-        if room >= 0:
+        batch = driver_rows(inc, self.SMALL_STATE_MAX)
+        if batch is not None:
             touched = None
-            if self._rows is not None:
-                existing = self._rows
-            else:
+            existing = self._rows
+            if existing is None:
                 # a limit-collect scans partitions in waves, the first
                 # this wide; coalescing the slice to it keeps the
                 # collect to one job however many partitions the state has
                 wave = int(self.spark.conf.get("spark.sql.limit.initialNumPartitions"))
                 touched = _isin(self.spark, "asset_uri", {r["asset_uri"] for r in batch})
-                sliced = self._df.filter(touched).coalesce(wave)
-                existing = [r.asDict() for r in sliced.limit(room + 1).collect()]
-            if len(existing) <= room:
+                existing = driver_rows(
+                    self._df.filter(touched).coalesce(wave), self.SMALL_STATE_MAX - len(batch)
+                )
+            if existing is not None and len(existing) + len(batch) <= self.SMALL_STATE_MAX:
                 return self._merge_small(existing, batch, overwrite, delete_when_empty, touched)
         empty = self._rows == []
         self._rows = None
@@ -312,8 +297,7 @@ class TagStore:
             self._df.write.parquet(path)
         else:
             os.makedirs(path)
-            data = [tuple(r.get(f.name) for f in TAGS_SCHEMA.fields) for r in self._rows]
-            pq.write_table(arrow_table(data, TAGS_SCHEMA), os.path.join(path, "part-00000.parquet"))
+            pq.write_table(arrow_table(self._rows, TAGS_SCHEMA), os.path.join(path, "part-00000.parquet"))
 
     def _persist(self) -> None:
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"

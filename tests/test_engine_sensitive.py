@@ -269,3 +269,36 @@ def test_sensitive_job_releases_its_caches(spark, engine, assets):
                        classification=classification)
     assert persistent() - before == set()
     assert {r["field_value_string"] for r in engine.store.all().collect()} == {None, "EMAIL"}
+
+
+def test_asset_with_only_null_notable_infotypes_is_unclassified(spark, engine, assets):
+    # users' one field maps to a selection row whose notable_infotype is
+    # null, so the asset has no notable infotype to classify: the empty
+    # set must not superset-match the smallest classification and tag
+    # the field sensitive
+    findings = spark.createDataFrame(
+        [
+            ("p/datasets/d/tables/users", "email", "EMAIL_ADDRESS"),
+            ("p/datasets/d/tables/lineitem", "name", "PERSON_NAME"),
+        ],
+        "asset_uri string, field string, infotype string",
+    )
+    selection = spark.createDataFrame(
+        [(["EMAIL_ADDRESS"], None), (["PERSON_NAME"], "NAME")],
+        "field_infotypes array<string>, notable_infotype string",
+    )
+    classification = spark.createDataFrame(
+        [(["NAME"], "Sensitive_Personal_Identifiable_Information")],
+        "notable_infotypes array<string>, classification_result string",
+    )
+    cfg = engine.create_config(
+        "SENSITIVE_TAG_COLUMN", "data_sensitivity",
+        included_uris="bigquery/project/p/dataset/d/*",
+    )
+    engine.trigger_job(cfg, assets, findings=findings, selection=selection,
+                       classification=classification)
+    got = {(r["asset_uri"], r["column"], r["field_id"]) for r in engine.store.all().collect()}
+    assert got == {
+        ("p/datasets/d/tables/lineitem", "name", "sensitive_field"),
+        ("p/datasets/d/tables/lineitem", "name", "sensitive_type"),
+    }

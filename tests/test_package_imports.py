@@ -91,10 +91,22 @@ def _refs(nodes):
     return out
 
 
+def _defined(node):
+    """The names a top-level statement defines: a function, a class or
+    the plain names an assignment binds."""
+    if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        return [t.id for t in node.targets if isinstance(t, ast.Name)]
+    if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+        return [node.target.id]
+    return []
+
+
 def test_engine_definitions_are_used():
-    """Every public top-level function or class of a tag-engine module
-    is referenced somewhere in the repository outside its own
-    definition: the package, its tests, the query contract, the
+    """Every public top-level function, class or module constant of a
+    tag-engine module is referenced somewhere in the repository outside
+    its own definition: the package, its tests, the query contract, the
     benchmark or the tools."""
     trees = {
         p: ast.parse(p.read_text())
@@ -110,10 +122,11 @@ def test_engine_definitions_are_used():
         elsewhere = set().union(*(r for p, r in refs.items() if p != path))
         body = trees[path].body
         for node in body:
-            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)) or node.name.startswith("_"):
-                continue
-            if node.name not in elsewhere | _refs(n for n in body if n is not node):
-                unused.append(f"{name}.{node.name}")
+            for defined in _defined(node):
+                if defined.startswith("_"):
+                    continue
+                if defined not in elsewhere | _refs(n for n in body if n is not node):
+                    unused.append(f"{name}.{defined}")
     assert not unused, f"defined but never referenced: {unused}"
 
 

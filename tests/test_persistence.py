@@ -2,6 +2,8 @@
 
 import datetime
 
+import pytest
+
 from datacatalog_tag_engine_spark.engine import TagEngine
 from datacatalog_tag_engine_spark.model.schemas import ASSETS_SCHEMA
 
@@ -128,3 +130,40 @@ def test_config_with_retired_executor_knobs_loads_and_runs(spark, tmp_path):
     }
     got = {(r["asset_uri"], r["column"]): r["field_value_double"] for r in loaded.store.all().collect()}
     assert got == expected
+
+
+@pytest.mark.parametrize("cap", [None, 0], ids=["driver_resident", "past_the_cap"])
+def test_load_then_save_to_the_same_path(spark, tmp_path, monkeypatch, cap):
+    # load_state leaves nothing reading under its path, so saving back
+    # to it (which replaces the directory) keeps the engine readable;
+    # cap=0 keeps the loaded tag state distributed
+    from datacatalog_tag_engine_spark.store.tagstore import TagStore
+
+    if cap is not None:
+        monkeypatch.setattr(TagStore, "SMALL_STATE_MAX", cap)
+    eng = TagEngine(spark)
+    eng.create_template("t", [{"field_id": "owner", "field_type": "string"}])
+    assets = spark.createDataFrame(
+        [{"asset_uri": "p/datasets/d/tables/lineitem", "asset_type": "bigquery",
+          "project": "p", "dataset": "d", "table": "lineitem"}],
+        ASSETS_SCHEMA,
+    )
+    cfg = eng.create_config(
+        "STATIC_TAG_ASSET", "t",
+        included_uris="bigquery/project/p/dataset/d/lineitem",
+        fields=[{"field_id": "owner", "field_value": "alice"}],
+    )
+    eng.trigger_job(cfg, assets)
+    base = str(tmp_path / "state")
+    eng.save_state(base)
+
+    loaded = TagEngine.load_state(spark, base)
+    assert (loaded.store._rows is None) == (cap is not None)
+    loaded.save_state(base)
+    assert loaded.store.all().count() == 1
+    assert loaded.history().count() == 1
+    loaded.save_state(base)
+
+    again = TagEngine.load_state(spark, base)
+    assert [r["field_value_string"] for r in again.store.all().collect()] == ["alice"]
+    assert [r["action"] for r in again.history().collect()] == ["CREATE"]
