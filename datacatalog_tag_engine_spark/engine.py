@@ -102,7 +102,7 @@ class TagEngine:
         self.assets: DataFrame | None = None
         # the history log lives beside the tag state, so an engine
         # reopened on tags_path sees every earlier event; without one it
-        # goes to a temp directory
+        # goes to a temp directory, removed with the engine
         self._history_log = HistoryLog(
             spark,
             f"{tags_path}.history" if tags_path else None,
@@ -337,11 +337,7 @@ class TagEngine:
             # silently falling back to the per-asset uri-collect path
             # would reintroduce exactly the driver-side shape the
             # inventory form exists to avoid — fail loudly instead
-            opaque = [
-                f["field_id"] for f in cfg["fields"]
-                if DYN.classify_expression(f["query_expression"])[0] == "opaque"
-                or f["field_type"] == "richtext"
-            ]
+            opaque = [f["field_id"] for f in cfg["fields"] if not DYN.fusable([f])]
             raise ValueError(
                 f"inventory_view config requires fusable fields; not fusable: {opaque}"
             )
@@ -359,12 +355,11 @@ class TagEngine:
 
     def _run_dynamic_column(self, cfg, assets, job_uuid, errors, **kw):
         """One per-asset run over every discovered (asset, column) pair,
-        each statement fusing the config's fields like the reference's
-        combine_queries. One aggregation pass over all columns was
+        one statement each. One aggregation pass over all columns was
         measured slower on count-distinct profiles (the multi-distinct
-        Expand multiplies scan rows by #aggregates; see SCALE.md), so it
-        is not offered. A failing column discovery or evaluation is
-        recorded in the job's errors; the other tasks proceed."""
+        Expand multiplies scan rows by #aggregates; see SCALE.md). A
+        failing column discovery or evaluation is recorded in the job's
+        errors; the other tasks proceed."""
         matched = self._matched(cfg, assets)
         uris = [r["asset_uri"] for r in matched.select("asset_uri").collect()]
         discovered = self._discover_columns(cfg, matched, uris, errors)
@@ -826,11 +821,14 @@ class TagEngine:
         Nothing it returns reads under ``base_path``: the snapshot's
         history, and a tag state too large to hold on the driver, are
         read from the engine's own file copies, so a later save_state
-        to the same path (which replaces it) leaves the engine whole."""
+        to the same path (which replaces it) leaves the engine whole.
+        The copies are removed when the engine is collected or the
+        process exits."""
         import json
         import os
         import shutil
         import tempfile
+        import weakref
 
         def hook(d):
             if "__dt__" in d:
@@ -850,6 +848,8 @@ class TagEngine:
         # constructor default (tag_history enabled)
         eng.settings = meta.get("settings", eng.settings)
         own = tempfile.mkdtemp(prefix="tag_engine_snapshot_")
+        # the copies go with the engine, or at exit
+        weakref.finalize(eng, shutil.rmtree, own, True)
         copy = {
             name: shutil.copytree(os.path.join(base_path, name), os.path.join(own, name))
             for name in ("tags", "history")

@@ -8,14 +8,16 @@ picks one from the config's shape alone, never from its asset count:
 
 * ``run_config_per_asset`` — the semantics-exact path, for every config
   that names no ``inventory_view`` and for every (asset, column) pair of
-  a column config. It takes ``(asset_uri, column)`` tasks. For each
-  task, ALL scalar field expressions fuse into one single-row SELECT
-  (the reference's column-path fusion, applied to every config) and run
-  as one Spark job; richtext fields run separately because they collect
-  all result rows (reference run_query :1797-1806 first-row-wins vs
-  richtext-collect). Tasks run through ``run_tasks``, the one per-asset
-  pool: ``POOL_WIDTH`` concurrent jobs, a failing task recorded, not
-  fatal. The engine's per-asset column discovery uses it too.
+  a column config. It takes ``(asset_uri, column)`` tasks. A task whose
+  scalar fields all belong to the profiling family below runs them as
+  one row of aggregate passes over its relation (``aggregate_passes``);
+  any other runs the reference's column-path fusion, one ``select (q1),
+  (q2), ...``, with the same values. Richtext fields run separately
+  because they collect all result rows (reference run_query :1797-1806
+  first-row-wins vs richtext-collect). Tasks run through ``run_tasks``,
+  the one per-asset pool: ``POOL_WIDTH`` concurrent jobs, a failing
+  task recorded, not fatal. The engine's per-asset column discovery
+  uses it too.
 
 * ``run_config_fused`` — the scale path (SURVEY R9), for configs that
   name an ``inventory_view``: ONE DataFrame holding every matched
@@ -32,16 +34,18 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable
+from contextlib import suppress
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
 
 from ..model import coercion
 from ..session import local_df
-from .substitution import combine_queries, parse_query_expression
+from .substitution import combine_queries, parse_query_expression, split_resource_uri
 
 # ---------------------------------------------------------------------------
 # shared: raw (stringly) field values -> typed long tag rows
@@ -147,8 +151,10 @@ def run_config_per_asset(
 ) -> list[dict]:
     """Evaluate config fields per ``(asset_uri, column)`` task (column
     None for table-level tags); returns raw long rows as dicts (feed
-    through ``coerce_long_rows``). Tasks run as concurrent Spark jobs
-    through ``run_tasks``, which records a failing task in ``errors``."""
+    through ``coerce_long_rows``). A task's scalar fields run as its
+    ``aggregate_passes``, else as the reference's ``combine_queries``
+    statement. Tasks run as concurrent Spark jobs through
+    ``run_tasks``, which records a failing task in ``errors``."""
 
     scalar_fields = [f for f in fields if f["field_type"] != "richtext"]
     richtext_fields = [f for f in fields if f["field_type"] == "richtext"]
@@ -166,11 +172,14 @@ def run_config_per_asset(
 
         rows: list[dict] = []
         if scalar_fields:
-            exprs = [
-                parse_query_expression(uri, f["query_expression"], column, qualify)
-                for f in scalar_fields
-            ]
-            result = spark.sql(combine_queries(exprs)).first()
+            result = None
+            with suppress(PySparkException):  # e.g. an Expand-ed distinct FILTER dividing by zero
+                passes = aggregate_passes(spark, scalar_fields, uri, column, qualify)
+                result = None if passes is None else passes.first()
+            if result is None:
+                exprs = [parse_query_expression(uri, f["query_expression"], column, qualify)
+                         for f in scalar_fields]
+                result = spark.sql(combine_queries(exprs)).first()
             rows += [row(f, _stringify(result[i])) for i, f in enumerate(scalar_fields)]
         for f in richtext_fields:
             q = parse_query_expression(uri, f["query_expression"], column, qualify)
@@ -182,7 +191,7 @@ def run_config_per_asset(
 
 
 # ---------------------------------------------------------------------------
-# fused executor (R9)
+# one compiler for both executors: a field expression -> aggregate columns
 
 _SIMPLE_RE = re.compile(
     r"^\s*select\s+(?P<agg>.+?)\s+from\s+\$table\s*(?:where\s+(?P<pred>.+?))?\s*$",
@@ -195,39 +204,112 @@ _DAILY_RE = re.compile(
 )
 # clauses after a WHERE that a FILTER (WHERE ...) aggregate cannot carry
 _TRAILING_CLAUSE_RE = re.compile(r"\b(?:group\s+by|order\s+by|having|limit)\b", re.IGNORECASE)
+# a pass needs an aggregate call: select 'x' from t gives one row over any table
+_AGG_CALL_RE = re.compile(
+    r"\b(?:count|count_if|sum|try_sum|avg|try_avg|mean|min|max|min_by|max_by|median|mode|first|last|"
+    r"any_value|every|bool_and|bool_or|stddev\w*|var_pop|var_samp|variance|percentile\w*|corr|covar_\w+|"
+    r"approx_count_distinct|approx_percentile|collect_list|collect_set|\w+_agg)\s*\(", re.IGNORECASE)
+# FILTER binds to one aggregate call (max(a) - min(a) FILTER ... filters min only)
+_ONE_CALL_RE = re.compile(r"\s*\w+\s*\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)\s*")
 
 
 def classify_expression(query_expression: str) -> tuple[str, dict]:
-    """Classify one field expression into a fusable family:
-    'constant' (no $table), 'simple' (agg [+ filter]), 'daily'
-    (avg-of-daily-counts), or 'opaque' (not fusable)."""
+    """Classify one field expression into a fusable family: 'constant'
+    (no $table), 'simple' (agg [+ filter]), 'daily' (avg-of-daily-counts)
+    or 'opaque'. A family member's aggregate pass gives its scalar
+    statement's value: no $table outside ``from $table``; a simple select
+    list calls an aggregate outside a window, one call under a predicate;
+    a daily form groups by its day, and its predicated outer reads only
+    the count (NULL on a no-match day)."""
     if "$table" not in query_expression:
         return "constant", {"sql": query_expression}
-    m = _DAILY_RE.match(query_expression)
-    if m:
-        return "daily", {
-            "outer": m.group("outer"),
-            "day": m.group("day"),
-            "dayalias": m.group("dayalias"),
-            "cntalias": m.group("cntalias"),
-            "pred": m.group("pred"),
-        }
-    m = _SIMPLE_RE.match(query_expression)
-    if (
-        m
-        and " from " not in m.group("agg").lower()
-        and not (m.group("pred") and _TRAILING_CLAUSE_RE.search(m.group("pred")))
-    ):
-        return "simple", {"agg": m.group("agg"), "pred": m.group("pred")}
-    return "opaque", {}
+    m = _DAILY_RE.match(query_expression) or _SIMPLE_RE.match(query_expression)
+    info = m.groupdict() if m else {}
+    if not m or any("$table" in (v or "") for v in info.values()):
+        return "opaque", {}
+    pred = info["pred"]
+    if "day" in info:
+        args = re.findall(r"\(([^()]*)\)", info["outer"])
+        exact = info["grp"].lower() == info["dayalias"].lower() and not (
+            pred and any(a.strip() != info["cntalias"] for a in args))
+        return ("daily", info) if exact else ("opaque", {})
+    agg = re.sub(r"'(?:[^']|'')*'", "", info["agg"])
+    exact = (
+        " from " not in info["agg"].lower()
+        and _AGG_CALL_RE.search(agg)
+        and not re.search(r"\bover\b", agg, re.I)
+        and not (pred and (_TRAILING_CLAUSE_RE.search(pred) or not _ONE_CALL_RE.fullmatch(agg)
+                           or not _AGG_CALL_RE.match(agg.lstrip())))
+    )
+    return ("simple", info) if exact else ("opaque", {})
+
+
+def _aggregate(info: dict):
+    """A 'simple' field's aggregate column: AGG [FILTER (WHERE PRED)]."""
+    return F.expr(f"{info['agg']} FILTER (WHERE {info['pred']})" if info["pred"] else info["agg"])
+
+
+def _daily_pass(rel: DataFrame, keys: list[str], day_expr: str, members: list[tuple[str, dict]]) -> DataFrame:
+    """The daily (name, info) ``members`` of ``day_expr`` in one two-level
+    aggregation by ``keys``, with per-field FILTER counts. A predicated
+    field's own inner query only emits days having >= 1 matching row, so
+    its count wraps in nullif(cnt, 0): the outer avg skips no-match days."""
+    cnt_aggs, outer_aggs = [], []
+    for i, (name, info) in enumerate(members):
+        cnt = f"_cnt_{i}"
+        pred = info["pred"]
+        cnt_aggs.append((F.expr(f"count(*) FILTER (WHERE {pred})") if pred else F.count("*")).alias(cnt))
+        outer_sql = re.sub(rf"\b{re.escape(info['cntalias'])}\b", f"nullif({cnt}, 0)", info["outer"])
+        outer_aggs.append(F.expr(outer_sql).alias(name))
+    daily = rel.groupBy(*keys, F.expr(day_expr).alias("_day")).agg(*cnt_aggs)
+    # re-expose the day under each member's alias in case the outer
+    # expression references it (distinct aliases only)
+    for alias in {info["dayalias"] for _, info in members} - {"_day"}:
+        daily = daily.withColumn(alias, F.col("_day"))
+    return daily.groupBy(*keys).agg(*outer_aggs)
 
 
 def fusable(fields: list[dict]) -> bool:
+    """Whether the inventory form runs every field: none opaque or
+    richtext, none naming a per-asset variable it cannot substitute."""
     return all(
         classify_expression(f["query_expression"])[0] != "opaque"
         and f["field_type"] != "richtext"
+        and not re.search(r"\$(?:project|dataset|column)\b", f["query_expression"])
         for f in fields
     )
+
+
+def aggregate_passes(spark: SparkSession, fields: list[dict], uri: str, column: str | None,
+                     qualify: Callable[[str, str, str], str]) -> DataFrame | None:
+    """One task's scalar fields (column i is field i) as one row of aggregate
+    passes over the relation ``parse_query_expression`` names: plain aggregates
+    in one pass, each distinct one in its own (several in one Expand every row,
+    SCALE.md), one per daily day expression, constants as scalar subqueries.
+    None unless every field has a pass and one reads the relation."""
+    classified = [classify_expression(parse_query_expression(uri, f["query_expression"], column,
+                                                             lambda *_: "$table")) for f in fields]
+    if any(k == "opaque" for k, _ in classified) or all(k == "constant" for k, _ in classified):
+        return None
+    project, dataset, table = split_resource_uri(uri)
+    rel = spark.sql(f"select * from {qualify(project, dataset or '', table or '')}")
+    plain, passes, days = [], [], {}
+    for i, (kind, info) in enumerate(classified):
+        if kind == "simple" and re.search(r"\bdistinct\b", info["agg"], re.I):
+            passes.append(rel.groupBy().agg(_aggregate(info).alias(f"_{i}")))
+        elif kind == "simple":
+            plain.append(_aggregate(info).alias(f"_{i}"))
+        elif kind == "daily":
+            days.setdefault(info["day"], []).append((f"_{i}", info))
+    passes = ([rel.groupBy().agg(*plain)] if plain else []) + passes
+    passes += [_daily_pass(rel, [], day, members) for day, members in days.items()]
+    columns = [F.expr(f"({info['sql']})") if k == "constant" else F.col(f"_{i}")
+               for i, (k, info) in enumerate(classified)]
+    return reduce(DataFrame.crossJoin, passes).select(*columns)
+
+
+# ---------------------------------------------------------------------------
+# fused executor (R9)
 
 
 def run_config_fused_wide(
@@ -258,51 +340,18 @@ def run_config_fused_wide(
     if "_asset_uri" not in inv.columns:
         raise ValueError("inventory DataFrame needs an asset_uri column")
 
-    simple_aggs = []
-    for f, kind, info in classified:
-        if kind == "simple":
-            agg_sql = info["agg"]
-            if info["pred"]:
-                agg_sql = f"{agg_sql} FILTER (WHERE {info['pred']})"
-            simple_aggs.append(F.expr(agg_sql).alias(f["field_id"]))
-
+    simple_aggs = [_aggregate(info).alias(f["field_id"]) for f, kind, info in classified if kind == "simple"]
     parts: list[DataFrame] = []
     if simple_aggs:
         parts.append(inv.groupBy("_asset_uri").agg(*simple_aggs))
 
-    # daily (avg-of-daily-counts) fields FUSE per day expression: one
-    # two-level aggregation computes every field sharing a day key, with
-    # per-field FILTER counts. A predicated field's original inner query
-    # only emits days having >= 1 matching row, so the fused count wraps
-    # in nullif(cnt, 0) — the outer avg then skips no-match days exactly
-    # like the standalone form. This turns N daily fields into
-    # ceil(distinct day exprs) scans of the inventory instead of N.
-    daily_groups: dict[str, list[tuple[dict, dict]]] = {}
+    # N daily fields: one scan of the inventory per day expression
+    daily_groups: dict[str, list[tuple[str, dict]]] = {}
     for f, kind, info in classified:
         if kind == "daily":
-            daily_groups.setdefault(info["day"], []).append((f, info))
-
+            daily_groups.setdefault(info["day"], []).append((f["field_id"], info))
     for day_expr, members in daily_groups.items():
-        cnt_aggs = []
-        outer_aggs = []
-        for i, (f, info) in enumerate(members):
-            cnt = f"_cnt_{i}"
-            if info["pred"]:
-                cnt_aggs.append(
-                    F.expr(f"count(*) FILTER (WHERE {info['pred']})").alias(cnt)
-                )
-            else:
-                cnt_aggs.append(F.count("*").alias(cnt))
-            outer_sql = re.sub(
-                rf"\b{re.escape(info['cntalias'])}\b", f"nullif({cnt}, 0)", info["outer"]
-            )
-            outer_aggs.append(F.expr(outer_sql).alias(f["field_id"]))
-        daily = inv.groupBy("_asset_uri", F.expr(day_expr).alias("_day")).agg(*cnt_aggs)
-        # re-expose the day under each member's alias in case the outer
-        # expression references it (distinct aliases only)
-        for alias in {info["dayalias"] for _, info in members} - {"_day"}:
-            daily = daily.withColumn(alias, F.col("_day"))
-        parts.append(daily.groupBy("_asset_uri").agg(*outer_aggs))
+        parts.append(_daily_pass(inv, ["_asset_uri"], day_expr, members))
 
     constants = [(f, info) for f, kind, info in classified if kind == "constant"]
     if not parts and constants:

@@ -33,6 +33,7 @@ import re
 import shutil
 import tempfile
 import uuid
+import weakref
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -114,6 +115,8 @@ class HistoryLog:
     def _temp(self) -> str:
         if self.directory is None:
             self.directory = tempfile.mkdtemp(prefix="tag_engine_history_")
+            # a temp log goes with its owner, or at exit
+            weakref.finalize(self, shutil.rmtree, self.directory, True)
         os.makedirs(self.directory, exist_ok=True)
         return self._path(f".tmp-{uuid.uuid4().hex}")
 

@@ -5,7 +5,9 @@ direct SQL."""
 import pytest
 from pyspark.sql import functions as F
 
+from datacatalog_tag_engine_spark.engine import TagEngine
 from datacatalog_tag_engine_spark.operators import dynamic as D
+from datacatalog_tag_engine_spark.operators.substitution import combine_queries, parse_query_expression
 
 FIELDS = [
     {"field_id": "row_count", "field_type": "double", "query_expression": "select count(*) from $table"},
@@ -265,3 +267,167 @@ def test_classify_columns_schema_rejects_prefix_not():
     assert D.classify_columns_query(
         _IS + "table_name = '$table' and not data_type = 'STRING'"
     ) == "opaque"
+
+
+# --- per-task aggregate passes against the reference statement ---------
+
+
+def reference_values(spark, fields, uri, column=None):
+    """The reference's one statement per task: select (q1), (q2), ..."""
+    exprs = [parse_query_expression(uri, f["query_expression"], column, short_name) for f in fields]
+    return [D._stringify(v) for v in spark.sql(combine_queries(exprs)).first()]
+
+
+def pass_values(spark, fields, uri, column=None):
+    passes = D.aggregate_passes(spark, fields, uri, column, short_name)
+    assert passes is not None
+    return [D._stringify(v) for v in passes.first()]
+
+
+def field(field_id, query_expression, field_type="string"):
+    return {"field_id": field_id, "field_type": field_type, "query_expression": query_expression}
+
+
+TYPED_FIELDS = [
+    field("rows", "select count(*) from $table", "double"),
+    field("orders", "select count(distinct l_orderkey) from $table", "double"),
+    field("parts", "select count(distinct l_partkey) from $table", "double"),
+    field("open", "select count(*) from $table where l_linestatus = 'O'", "double"),
+    field("any_big", "select max(l_quantity) > 10 from $table", "bool"),
+    field("last_ship", "select max(cast(l_shipdate as date)) from $table", "datetime"),
+    field("last_ts", "select max(cast(l_shipdate as timestamp)) from $table", "datetime"),
+    field("qty_dec", "select sum(cast(l_quantity as decimal(12, 2))) from $table", "double"),
+    field("avg_dec", "select avg(cast(l_quantity as decimal(12, 2))) from $table", "double"),
+    field("none", "select max(l_quantity) from $table where l_linestatus = 'none'", "double"),
+    field("in_sub", "select count(*) from $table where l_orderkey in "
+          "(select o_orderkey from orders where o_totalprice > 100000)", "double"),
+    field("exists_sub", "select count(*) from $table where exists "
+          "(select 1 from orders where o_orderkey = l_orderkey and o_orderstatus = 'F')", "double"),
+    field("scalar_sub", "select count(*) from $table where l_quantity > "
+          "(select avg(l_quantity) from lineitem)", "double"),
+    field("avg_daily", "select ifnull(round(avg(daily), 2), 0) from (select cast(l_shipdate as date) "
+          "as d, count(*) as daily from $table group by d)", "double"),
+    field("avg_daily_open", "select ifnull(round(avg(daily), 2), 0) from (select cast(l_shipdate as date) "
+          "as d, count(*) as daily from $table where l_linestatus = 'O' group by d)", "double"),
+    field("max_daily_r", "select max(daily) from (select cast(l_shipdate as date) d, count(*) daily "
+          "from $table where l_returnflag = 'R' group by d)", "double"),
+    field("domain", "select 'LOGISTICS'"),
+    field("dataset", "select '$dataset'"),
+]
+
+
+@pytest.fixture(scope="module")
+def empty_lineitem(spark):
+    spark.table("lineitem").limit(0).createOrReplaceTempView("lineitem_empty")
+    return "p/datasets/d/tables/lineitem_empty"
+
+
+def test_passes_match_reference_statement(spark, empty_lineitem):
+    """Every value of the per-task passes is the reference statement's,
+    byte for byte through _stringify: bool, date, timestamp, decimal and
+    null results, subquery predicates, predicated daily fields, a
+    constant and a substituted $dataset; also on an empty table."""
+    for uri in (URI, empty_lineitem):
+        got = pass_values(spark, TYPED_FIELDS, uri)
+        assert got == reference_values(spark, TYPED_FIELDS, uri), uri
+    got = dict(zip([f["field_id"] for f in TYPED_FIELDS], pass_values(spark, TYPED_FIELDS, URI)))
+    assert (got["any_big"], got["dataset"], got["none"]) == ("TRUE", "d", None)
+    assert got["last_ts"] == got["last_ship"] + " 00:00:00" and "." in got["avg_dec"]
+
+
+COLUMN_FIELDS = [
+    field("distinct", "select count(distinct $column) from $table", "double"),
+    field("nulls", "select count(*) from $table where $column is null", "double"),
+    field("top", "select cast(max($column) as string) from $table"),
+    field("name", "select '$column'"),
+]
+
+
+def test_column_passes_match_reference_statement(spark, empty_lineitem):
+    for uri in (URI, empty_lineitem):
+        for column in ("l_orderkey", "l_shipdate", "l_returnflag"):
+            got = pass_values(spark, COLUMN_FIELDS, uri, column)
+            assert got == reference_values(spark, COLUMN_FIELDS, uri, column), (uri, column)
+            assert got[3] == column
+
+
+def test_distinct_aggregates_run_without_expand(spark):
+    """Each distinct aggregate gets its own pass: two count(distinct)
+    fields in one aggregate would Expand every row once per distinct
+    group."""
+    passes = D.aggregate_passes(spark, TYPED_FIELDS[:3], URI, None, short_name)
+    plan = passes._jdf.queryExecution().optimizedPlan().toString()
+    assert "Expand" not in plan
+    assert plan.count("Aggregate") == 3
+
+
+def test_fields_without_a_pass_fall_back_to_the_reference_statement(spark):
+    """A task with any field that has no exact pass runs the reference
+    statement; so does one whose passes fail. Either way the tags are the
+    reference statement's."""
+    opaque = field("joined", "select count(*) from $table l join orders o on l.l_orderkey = o.o_orderkey",
+                   "double")
+    no_pass = [
+        opaque,
+        field("bare", "select 'x' from $table"),  # foldable: one row over any table
+        field("window", "select count(*) over () from $table", "double"),
+        field("named", "select count(*) from $table where l_returnflag <> '$table'", "double"),
+        # a FILTER would bind to min() alone
+        field("range", "select max(l_quantity) - min(l_quantity) from $table where l_linestatus = 'O'",
+              "double"),
+        field("rounded", "select round(avg(l_quantity), 2) from $table where l_linestatus = 'O'", "double"),
+        field("regrouped", "select avg(c) from (select cast(l_shipdate as date) d, count(*) c "
+              "from $table group by l_shipdate)", "double"),
+        field("day_read", "select max(d) from (select cast(l_shipdate as date) d, count(*) c "
+              "from $table where l_linestatus = 'O' group by d)", "datetime"),
+    ]
+    for f in no_pass:
+        assert D.aggregate_passes(spark, TYPED_FIELDS[:4] + [f], URI, None, short_name) is None, f
+        assert not D.fusable([f]), f  # the inventory form shares the rule
+    assert D.aggregate_passes(spark, TYPED_FIELDS[-2:], URI, None, short_name) is None  # constants only
+
+    mixed = [f for f in TYPED_FIELDS + no_pass if f["field_id"] not in ("bare", "window")]
+    # a distinct aggregate with a FILTER is Expanded: its input is computed
+    # for every row, and 10 div 0 fails where the WHERE clause skips it
+    failing = TYPED_FIELDS[:4] + [
+        field("div", "select count(distinct 10 div (l_linenumber - 1)) from $table where l_linenumber > 1",
+              "double")
+    ]
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        D.aggregate_passes(spark, failing, URI, None, short_name).first()
+    for fields in (mixed, failing):
+        raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
+        assert [r["raw_value"] for r in raw] == reference_values(spark, fields, URI)
+
+
+def test_asset_variables_are_not_fusable(spark, engine_assets):
+    """The inventory form substitutes no per-asset variable, so a field
+    naming $project, $dataset or $column is not fusable and an
+    inventory_view config holding one fails loudly; the per-asset path
+    substitutes it."""
+    dataset_field = field("ds", "select '$dataset'")
+    assert not D.fusable([dataset_field])
+    for var in ("$project", "$dataset", "$column"):
+        assert not D.fusable([field("n", f"select count(*) from $table where l_returnflag <> '{var}'")])
+    raw = D.run_config_per_asset(spark, [dataset_field], [("p/datasets/sales/tables/t1", None)], "t", short_name)
+    assert raw[0]["raw_value"] == "sales"
+
+    eng = TagEngine(spark)
+    eng.create_template("t", [{"field_id": "ds", "field_type": "string"}])
+    spark.table("lineitem").withColumn("asset_uri", F.lit(URI)).createOrReplaceTempView("inv_lineitem")
+    cfg = eng.create_config(
+        "DYNAMIC_TAG_TABLE", "t", included_uris="bigquery/project/p/dataset/d/*",
+        fields=[{"field_id": "ds", "query_expression": "select '$dataset'"}], inventory_view="inv_lineitem",
+    )
+    with pytest.raises(ValueError, match=r"requires fusable fields; not fusable: \['ds'\]"):
+        eng.trigger_job(cfg, engine_assets)
+
+
+@pytest.fixture(scope="module")
+def engine_assets(spark):
+    from datacatalog_tag_engine_spark.model.schemas import ASSETS_SCHEMA
+
+    return spark.createDataFrame(
+        [{"asset_uri": URI, "asset_type": "bigquery", "project": "p", "dataset": "d", "table": "lineitem"}],
+        ASSETS_SCHEMA,
+    )

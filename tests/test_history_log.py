@@ -3,8 +3,13 @@ calls run no Spark job, history renders the same on both merge paths,
 and the state on disk survives a crash at any step."""
 
 import datetime
+import gc
+import glob
 import json
 import os
+import subprocess
+import sys
+import tempfile
 
 import pytest
 
@@ -239,3 +244,43 @@ def test_save_state_crash_leaves_previous_snapshot_loadable(spark, tmp_path, mon
     assert set(loaded.templates) == {"g"}
     assert owners(loaded) == ["a"]
     assert [r["field_value_string"] for r in loaded.store.all().collect()] == ["a"]
+
+
+def _snapshot_copies() -> set[str]:
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "tag_engine_snapshot_*")))
+
+
+def test_temp_directories_go_with_the_engine(spark, tmp_path):
+    """An engine built without tags_path logs its history to a temp
+    directory, and load_state copies the snapshot into another: both
+    are removed once the engine is collected."""
+    eng = governance_engine(spark)
+    eng.update_tag_subset("g", T1, None, owner("alice"))
+    log_dir = eng._history_log.directory
+    eng.save_state(str(tmp_path / "snap"))
+    before = _snapshot_copies()
+    loaded = TagEngine.load_state(spark, str(tmp_path / "snap"))
+    (copy,) = _snapshot_copies() - before
+    assert os.path.isdir(log_dir) and os.path.isdir(copy)
+    del eng, loaded
+    gc.collect()
+    assert not os.path.exists(log_dir)
+    assert not os.path.exists(copy)
+
+
+def test_temp_history_directory_removed_at_exit():
+    """A process that exits with a temp history log leaves no directory."""
+    script = (
+        "import datetime\n"
+        "from datacatalog_tag_engine_spark.store.historylog import HistoryLog\n"
+        "log = HistoryLog(None, None, 32)\n"
+        "event = {'asset_uri': 'a', 'template_id': 't', 'field_id': 'f', 'field_type': 'string',"
+        " 'action': 'CREATE'}\n"
+        "log.append_rows([event], datetime.datetime(2024, 1, 1), 'j')\n"
+        "print(log.directory)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", script], cwd=root, capture_output=True, text=True, check=True)
+    directory = out.stdout.strip()
+    assert os.path.basename(directory).startswith("tag_engine_history_")
+    assert not os.path.exists(directory)
