@@ -76,6 +76,14 @@ _RUNNERS = {
 _CONFIG_TYPES = tuple(_RUNNERS)
 
 
+def _reject_repeated_field_ids(fields: list[dict]) -> None:
+    """A tag key holds one value per field: a repeated id would write two rows."""
+    ids = [f["field_id"] for f in fields]
+    for fid in ids:
+        if ids.count(fid) > 1:
+            raise ValueError(f"field {fid!r} given twice")
+
+
 class TagEngine:
     # the history log's compaction cadence: after this many appends its
     # small files are merged into one (store/historylog.py)
@@ -177,6 +185,7 @@ class TagEngine:
             raise ValueError(f"unknown template {template_id!r}")
         else:
             tfields = {f["field_id"]: f for f in self.templates[template_id]}
+        _reject_repeated_field_ids(kw.get("fields", []))
         for f in kw.get("fields", []):
             if f["field_id"] not in tfields:
                 raise ValueError(f"field {f['field_id']!r} not in template {template_id!r}")
@@ -578,6 +587,7 @@ class TagEngine:
         """Overwrite-merge of a field subset (reference main.py:2868-2919
         -> DataCatalogController.py:2091-2178): only the named fields
         change, other fields of the tag survive."""
+        _reject_repeated_field_ids(raw_rows)
         rows = [
             {
                 "asset_uri": asset_uri,

@@ -4,15 +4,16 @@ The reference evaluates one SQL statement per (asset, field) in BigQuery
 (reference: apply_dynamic_table_config, DataCatalogController.py:250-330)
 and only fuses per-column field queries into a single multi-subquery
 statement (combine_queries, :488-495). Two executors here; the engine
-picks one from the config's shape alone, never from its asset count:
+picks one from the config's shape alone, never from its asset count.
+Both build their aggregate passes with one function, ``_passes``.
 
 * ``run_config_per_asset`` — the semantics-exact path, for every config
   that names no ``inventory_view`` and for every (asset, column) pair of
-  a column config. It takes ``(asset_uri, column)`` tasks. A task whose
-  scalar fields all belong to the profiling family below runs them as
-  one row of aggregate passes over its relation (``aggregate_passes``);
-  any other runs the reference's column-path fusion, one ``select (q1),
-  (q2), ...``, with the same values. Richtext fields run separately
+  a column config. It takes ``(asset_uri, column)`` tasks and runs a
+  task's scalar fields as one statement (``task_statement``): fields of
+  the profiling family below read the task's passes over its relation,
+  constants and opaque SQL run as scalar subqueries of the same select,
+  the reference's column-path fusion. Richtext fields run separately
   because they collect all result rows (reference run_query :1797-1806
   first-row-wins vs richtext-collect). Tasks run through ``run_tasks``,
   the one per-asset pool: ``POOL_WIDTH`` concurrent jobs, a failing
@@ -25,16 +26,14 @@ picks one from the config's shape alone, never from its asset count:
   belong to the profiling family the reference's own load tests use
   (examples/load/configs/dynamic_table_500.json) — ``select AGG from
   $table [where PRED]``, the nested avg-of-daily-counts form, or a
-  constant. They compile to aggregate columns with FILTER clauses, and
-  every asset x every field is computed in one groupBy(asset) pass over
-  a plan with a single scan leaf, whatever the asset count.
+  constant. Its passes group by asset over a plan with a single scan
+  leaf, whatever the asset count.
 """
 
 from __future__ import annotations
 
 import re
 from collections.abc import Callable
-from contextlib import suppress
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
@@ -152,9 +151,9 @@ def run_config_per_asset(
     """Evaluate config fields per ``(asset_uri, column)`` task (column
     None for table-level tags); returns raw long rows as dicts (feed
     through ``coerce_long_rows``). A task's scalar fields run as its
-    ``aggregate_passes``, else as the reference's ``combine_queries``
-    statement. Tasks run as concurrent Spark jobs through
-    ``run_tasks``, which records a failing task in ``errors``."""
+    ``task_statement``; the reference's ``combine_queries`` statement
+    runs only when that one fails. Tasks run as concurrent Spark jobs
+    through ``run_tasks``, which records a failing task in ``errors``."""
 
     scalar_fields = [f for f in fields if f["field_type"] != "richtext"]
     richtext_fields = [f for f in fields if f["field_type"] == "richtext"]
@@ -172,22 +171,30 @@ def run_config_per_asset(
 
         rows: list[dict] = []
         if scalar_fields:
-            result = None
-            with suppress(PySparkException):  # e.g. an Expand-ed distinct FILTER dividing by zero
-                passes = aggregate_passes(spark, scalar_fields, uri, column, qualify)
-                result = None if passes is None else passes.first()
-            if result is None:
+            try:
+                statement = task_statement(spark, scalar_fields, uri, column, qualify)
+                result = _timestamps_as_text(statement).first()
+            except PySparkException:  # e.g. an Expand-ed distinct FILTER dividing by zero
                 exprs = [parse_query_expression(uri, f["query_expression"], column, qualify)
                          for f in scalar_fields]
-                result = spark.sql(combine_queries(exprs)).first()
+                result = _timestamps_as_text(spark.sql(combine_queries(exprs))).first()
             rows += [row(f, _stringify(result[i])) for i, f in enumerate(scalar_fields)]
         for f in richtext_fields:
             q = parse_query_expression(uri, f["query_expression"], column, qualify)
-            values = [r[0] for r in spark.sql(q).collect()]
+            values = [r[0] for r in _timestamps_as_text(spark.sql(q)).collect()]
             rows.append(row(f, "<br>".join(str(v) for v in values) if values else None))
         return rows
 
     return [r for rows in run_tasks(one_task, tasks, errors) for r in rows or ()]
+
+
+def _timestamps_as_text(df: DataFrame) -> DataFrame:
+    """``df`` with its timestamps rendered to text by the JVM in the
+    session time zone: collected, they would be naive host-local
+    datetimes, whose text ``coerce_timestamp`` reads as UTC."""
+    df = df.toDF(*(f"_{i}" for i in range(len(df.columns))))
+    return df.select(*(F.col(c.name).cast("string") if isinstance(c.dataType, T.TimestampType) else c.name
+                       for c in df.schema))
 
 
 # ---------------------------------------------------------------------------
@@ -280,32 +287,45 @@ def fusable(fields: list[dict]) -> bool:
     )
 
 
-def aggregate_passes(spark: SparkSession, fields: list[dict], uri: str, column: str | None,
-                     qualify: Callable[[str, str, str], str]) -> DataFrame | None:
-    """One task's scalar fields (column i is field i) as one row of aggregate
-    passes over the relation ``parse_query_expression`` names: plain aggregates
-    in one pass, each distinct one in its own (several in one Expand every row,
-    SCALE.md), one per daily day expression, constants as scalar subqueries.
-    None unless every field has a pass and one reads the relation."""
-    classified = [classify_expression(parse_query_expression(uri, f["query_expression"], column,
-                                                             lambda *_: "$table")) for f in fields]
-    if any(k == "opaque" for k, _ in classified) or all(k == "constant" for k, _ in classified):
-        return None
-    project, dataset, table = split_resource_uri(uri)
-    rel = spark.sql(f"select * from {qualify(project, dataset or '', table or '')}")
+def _passes(rel: DataFrame, keys: list[str], classified: list[tuple[str, dict]]) -> DataFrame | None:
+    """Every aggregate pass of the ``classified`` fields over ``rel``, grouped
+    by ``keys`` and joined on them; field i with a pass is column ``_i``.
+    Plain aggregates share one pass; each distinct one gets its own
+    (several in one Expand every row, SCALE.md); each daily day expression
+    gets one two-level pass. Every pass holds one row per key of ``rel``,
+    so the inner join loses none (a full outer one plans dearer joins,
+    SCALE.md). None when no field has a pass."""
     plain, passes, days = [], [], {}
     for i, (kind, info) in enumerate(classified):
         if kind == "simple" and re.search(r"\bdistinct\b", info["agg"], re.I):
-            passes.append(rel.groupBy().agg(_aggregate(info).alias(f"_{i}")))
+            passes.append(rel.groupBy(*keys).agg(_aggregate(info).alias(f"_{i}")))
         elif kind == "simple":
             plain.append(_aggregate(info).alias(f"_{i}"))
         elif kind == "daily":
             days.setdefault(info["day"], []).append((f"_{i}", info))
-    passes = ([rel.groupBy().agg(*plain)] if plain else []) + passes
-    passes += [_daily_pass(rel, [], day, members) for day, members in days.items()]
-    columns = [F.expr(f"({info['sql']})") if k == "constant" else F.col(f"_{i}")
-               for i, (k, info) in enumerate(classified)]
-    return reduce(DataFrame.crossJoin, passes).select(*columns)
+    passes = ([rel.groupBy(*keys).agg(*plain)] if plain else []) + passes
+    passes += [_daily_pass(rel, keys, day, members) for day, members in days.items()]
+    return reduce(lambda a, b: a.join(b, keys or None, "inner"), passes) if passes else None
+
+
+def task_statement(spark: SparkSession, fields: list[dict], uri: str, column: str | None,
+                   qualify: Callable[[str, str, str], str]) -> DataFrame:
+    """One task's scalar fields (column i is field i) as one single-row
+    select: a field with a pass reads it from the passes over the relation
+    ``parse_query_expression`` names; constants and opaque SQL run as scalar
+    subqueries, over the one-row relation of the reference statement when
+    no field has a pass."""
+    classified = [classify_expression(parse_query_expression(uri, f["query_expression"], column,
+                                                             lambda *_: "$table")) for f in fields]
+    passes = None
+    if any(k in ("simple", "daily") for k, _ in classified):
+        project, dataset, table = split_resource_uri(uri)
+        passes = _passes(spark.sql(f"select * from {qualify(project, dataset or '', table or '')}"), [],
+                         classified)
+    return (spark.sql("select 1") if passes is None else passes).select(*(
+        F.col(f"_{i}") if kind in ("simple", "daily")
+        else F.expr(f"({parse_query_expression(uri, f['query_expression'], column, qualify)})")
+        for i, ((kind, _), f) in enumerate(zip(classified, fields))))
 
 
 # ---------------------------------------------------------------------------
@@ -317,8 +337,8 @@ def run_config_fused_wide(
     fields: list[dict],
     inventory: DataFrame,
 ) -> DataFrame:
-    """The R9 plan, wide shape: one groupBy(asset) pass, one
-    naturally-typed column per field.
+    """The R9 plan, wide shape: the fields' ``_passes`` grouped by asset,
+    one naturally-typed column per field.
 
     ``inventory`` is ONE DataFrame carrying an ``asset_uri`` column (a
     single scan of a partitioned inventory: e.g.
@@ -328,44 +348,19 @@ def run_config_fused_wide(
     reference's 500k/1M-asset load ladder
     (examples/load/configs/dynamic_table_500k.json), where a
     union-of-N-scans logical plan dies in driver analysis long before
-    execution.
-
-    Simple aggregates compile to FILTER-clause aggregate columns;
-    nested avg-of-daily forms run as a two-level groupBy joined back on
-    the asset key; constants evaluate once and broadcast as literals.
+    execution. Constants run as scalar subqueries; a constants-only
+    config reads the asset list in one pruned scan.
     """
-    classified = [(f, *classify_expression(f["query_expression"])) for f in fields]
-
     inv = inventory.withColumnRenamed("asset_uri", "_asset_uri")
     if "_asset_uri" not in inv.columns:
         raise ValueError("inventory DataFrame needs an asset_uri column")
-
-    simple_aggs = [_aggregate(info).alias(f["field_id"]) for f, kind, info in classified if kind == "simple"]
-    parts: list[DataFrame] = []
-    if simple_aggs:
-        parts.append(inv.groupBy("_asset_uri").agg(*simple_aggs))
-
-    # N daily fields: one scan of the inventory per day expression
-    daily_groups: dict[str, list[tuple[str, dict]]] = {}
-    for f, kind, info in classified:
-        if kind == "daily":
-            daily_groups.setdefault(info["day"], []).append((f["field_id"], info))
-    for day_expr, members in daily_groups.items():
-        parts.append(_daily_pass(inv, ["_asset_uri"], day_expr, members))
-
-    constants = [(f, info) for f, kind, info in classified if kind == "constant"]
-    if not parts and constants:
-        # constants-only config still needs the asset list — one pruned scan
-        parts.append(inv.select("_asset_uri").distinct())
-
-    result = parts[0]
-    for p in parts[1:]:
-        result = result.join(p, "_asset_uri", "full_outer")
-    # constants evaluate once on the driver and attach as literals —
-    # never worth a scan of the inventory
-    for f, info in constants:
-        result = result.withColumn(f["field_id"], F.lit(spark.sql(info["sql"]).first()[0]))
-    return result
+    classified = [classify_expression(f["query_expression"]) for f in fields]
+    result = _passes(inv, ["_asset_uri"], classified)
+    if result is None:
+        result = inv.select("_asset_uri").distinct()
+    return result.select("_asset_uri", *(
+        (F.expr(f"({info['sql']})") if kind == "constant" else F.col(f"_{i}")).alias(f["field_id"])
+        for i, ((kind, info), f) in enumerate(zip(classified, fields))))
 
 
 def run_config_fused(
@@ -376,27 +371,20 @@ def run_config_fused(
 ) -> DataFrame:
     """R9 plan, long shape: the wide result stacked into raw long rows
     (asset_uri, column, template_id, field_id, field_type, raw_value)
-    for the coercion/MERGE path. ``inventory`` as in
-    ``run_config_fused_wide``."""
+    for the coercion/MERGE path, booleans as TRUE/FALSE like
+    ``_stringify``. ``inventory`` as in ``run_config_fused_wide``."""
     result = run_config_fused_wide(spark, fields, inventory)
-
-    field_meta = {f["field_id"]: f["field_type"] for f in fields}
-    stack_cols = []
-    for fid in field_meta:
-        stack_cols.append(F.lit(fid))
-        stack_cols.append(F.col(fid).cast("string"))
-    long_df = result.select(
+    stacked = []
+    for f in fields:
+        value = F.col(f["field_id"]).cast("string")
+        if isinstance(result.schema[f["field_id"]].dataType, T.BooleanType):
+            value = F.upper(value)
+        stacked += [F.lit(f["field_id"]), F.lit(f["field_type"]), value]
+    return result.select(
         F.col("_asset_uri").alias("asset_uri"),
-        F.stack(F.lit(len(field_meta)), *stack_cols).alias("field_id", "raw_value"),
-    )
-    type_map = F.create_map(*[F.lit(x) for kv in field_meta.items() for x in kv])
-    return long_df.select(
-        "asset_uri",
         F.lit(None).cast("string").alias("column"),
         F.lit(template_id).alias("template_id"),
-        "field_id",
-        type_map[F.col("field_id")].alias("field_type"),
-        "raw_value",
+        F.stack(F.lit(len(fields)), *stacked).alias("field_id", "field_type", "raw_value"),
     )
 
 

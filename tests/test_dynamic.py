@@ -2,6 +2,8 @@
 (R9 single-pass over an inventory) paths agree with each other and with
 direct SQL."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -279,9 +281,7 @@ def reference_values(spark, fields, uri, column=None):
 
 
 def pass_values(spark, fields, uri, column=None):
-    passes = D.aggregate_passes(spark, fields, uri, column, short_name)
-    assert passes is not None
-    return [D._stringify(v) for v in passes.first()]
+    return [D._stringify(v) for v in D.task_statement(spark, fields, uri, column, short_name).first()]
 
 
 def field(field_id, query_expression, field_type="string"):
@@ -352,19 +352,21 @@ def test_column_passes_match_reference_statement(spark, empty_lineitem):
 
 
 def test_distinct_aggregates_run_without_expand(spark):
-    """Each distinct aggregate gets its own pass: two count(distinct)
-    fields in one aggregate would Expand every row once per distinct
-    group."""
-    passes = D.aggregate_passes(spark, TYPED_FIELDS[:3], URI, None, short_name)
-    plan = passes._jdf.queryExecution().optimizedPlan().toString()
-    assert "Expand" not in plan
-    assert plan.count("Aggregate") == 3
+    """Each distinct aggregate gets its own pass, in both executors: two
+    count(distinct) fields in one aggregate would Expand every row once
+    per distinct group."""
+    inv = spark.table("lineitem").withColumn("asset_uri", F.lit(URI))
+    for df in (D.task_statement(spark, TYPED_FIELDS[:3], URI, None, short_name),
+               D.run_config_fused_wide(spark, TYPED_FIELDS[:3], inv)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Expand" not in plan
+        assert plan.count("Aggregate") == 3
 
 
 def test_fields_without_a_pass_fall_back_to_the_reference_statement(spark):
-    """A task with any field that has no exact pass runs the reference
-    statement; so does one whose passes fail. Either way the tags are the
-    reference statement's."""
+    """A field that has no exact pass runs as a scalar subquery of the
+    task's statement; a task whose statement fails runs the reference
+    statement. Either way the tags are the reference statement's."""
     opaque = field("joined", "select count(*) from $table l join orders o on l.l_orderkey = o.o_orderkey",
                    "double")
     no_pass = [
@@ -382,9 +384,7 @@ def test_fields_without_a_pass_fall_back_to_the_reference_statement(spark):
               "from $table where l_linestatus = 'O' group by d)", "datetime"),
     ]
     for f in no_pass:
-        assert D.aggregate_passes(spark, TYPED_FIELDS[:4] + [f], URI, None, short_name) is None, f
         assert not D.fusable([f]), f  # the inventory form shares the rule
-    assert D.aggregate_passes(spark, TYPED_FIELDS[-2:], URI, None, short_name) is None  # constants only
 
     mixed = [f for f in TYPED_FIELDS + no_pass if f["field_id"] not in ("bare", "window")]
     # a distinct aggregate with a FILTER is Expanded: its input is computed
@@ -394,10 +394,76 @@ def test_fields_without_a_pass_fall_back_to_the_reference_statement(spark):
               "double")
     ]
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        D.aggregate_passes(spark, failing, URI, None, short_name).first()
+        D.task_statement(spark, failing, URI, None, short_name).first()
     for fields in (mixed, failing):
         raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
         assert [r["raw_value"] for r in raw] == reference_values(spark, fields, URI)
+
+
+def test_mixed_task_reads_its_table_once_per_pass(spark):
+    """10 fusable fields and 1 opaque one run as one statement: the passes
+    read lineitem 4 times, the opaque field's scalar subquery once more
+    (the reference statement reads it 11 times); the tags are the
+    reference statement's."""
+    opaque = field("joined", "select count(*) from $table l join orders o on l.l_orderkey = o.o_orderkey",
+                   "double")
+    fields = TYPED_FIELDS[:9] + [TYPED_FIELDS[13], opaque]
+    statement = D.task_statement(spark, fields, URI, None, short_name)
+    assert statement._jdf.queryExecution().optimizedPlan().toString().count("Relation [l_") == 5
+    raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
+    assert [r["raw_value"] for r in raw] == reference_values(spark, fields, URI)
+
+
+AGREEMENT_FIELDS = [
+    field("big", "select bool_or(l_quantity > 10) from $table"),
+    field("last_ts", "select max(cast(l_shipdate as timestamp)) from $table", "datetime"),
+    field("last_day", "select max(cast(l_shipdate as date)) from $table", "datetime"),
+    field("nothing", "select 'x' where false"),
+]
+
+
+def test_executors_agree_on_text_and_tags(spark):
+    """The same fields over one lineitem clone give the same raw text and
+    the same typed tags in both executors: booleans as TRUE/FALSE,
+    timestamps and dates in the session zone, a no-row constant NULL."""
+    spark.table("lineitem").createOrReplaceTempView("lineitem_clone")
+    uri = "p/datasets/d/tables/lineitem_clone"
+    per_asset = D.raw_rows_to_df(
+        spark, D.run_config_per_asset(spark, AGREEMENT_FIELDS, [(uri, None)], "t", short_name))
+    fused = D.run_config_fused(
+        spark, AGREEMENT_FIELDS, spark.table("lineitem_clone").withColumn("asset_uri", F.lit(uri)), "t")
+
+    def text(raw):
+        return {r["field_id"]: r["raw_value"] for r in raw.collect()}
+
+    def tags(raw):
+        return {r["field_id"]: r.asDict() for r in D.coerce_long_rows(raw).drop("updated_ts").collect()}
+
+    assert text(per_asset) == text(fused)
+    assert tags(per_asset) == tags(fused)
+    assert text(fused) == {"big": "TRUE", "last_ts": "2001-11-04 00:00:00", "last_day": "2001-11-04",
+                           "nothing": None}
+
+
+def test_per_asset_timestamps_ignore_the_host_zone(spark, monkeypatch):
+    """Scalar and richtext timestamps are the session zone's text, also
+    when the Python host runs in another zone."""
+    fields = [
+        field("last_ts", "select max(cast(l_shipdate as timestamp)) from $table", "datetime"),
+        field("first_ts", "select distinct cast(l_shipdate as timestamp) from $table order by 1 limit 2",
+              "richtext"),
+    ]
+    in_utc = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        in_new_york = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert in_new_york == in_utc
+    assert in_utc[0]["raw_value"] == spark.sql(
+        "select cast(max(cast(l_shipdate as timestamp)) as string) from lineitem").first()[0]
 
 
 def test_asset_variables_are_not_fusable(spark, engine_assets):

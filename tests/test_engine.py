@@ -221,6 +221,23 @@ def test_unknown_field_rejected(engine):
         )
 
 
+def test_repeated_field_ids_rejected(engine):
+    """One tag key holds one value per field, so a config or a subset
+    update naming a field twice is refused before any row is written."""
+    with pytest.raises(ValueError, match="'data_owner' given twice"):
+        engine.create_config(
+            "STATIC_TAG_ASSET",
+            "data_governance",
+            included_uris="x",
+            fields=[{"field_id": "data_owner", "field_value": v} for v in ("a", "b")],
+        )
+    owner = {"field_id": "data_owner", "field_type": "string"}
+    with pytest.raises(ValueError, match="'data_owner' given twice"):
+        engine.update_tag_subset("data_governance", "p/datasets/d/tables/lineitem", None,
+                                 [dict(owner, raw_value="a"), dict(owner, raw_value="b")])
+    assert engine.configs == {} and engine.store.all().count() == 0
+
+
 def test_config_dedup_by_hash(engine):
     c1 = engine.create_config(
         "STATIC_TAG_ASSET", "data_governance",
