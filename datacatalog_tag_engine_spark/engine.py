@@ -79,9 +79,8 @@ _CONFIG_TYPES = tuple(_RUNNERS)
 def _reject_repeated_field_ids(fields: list[dict]) -> None:
     """A tag key holds one value per field: a repeated id would write two rows."""
     ids = [f["field_id"] for f in fields]
-    for fid in ids:
-        if ids.count(fid) > 1:
-            raise ValueError(f"field {fid!r} given twice")
+    if repeated := [fid for fid in ids if ids.count(fid) > 1]:
+        raise ValueError(f"field {repeated[0]!r} given twice")
 
 
 class TagEngine:

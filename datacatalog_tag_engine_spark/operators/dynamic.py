@@ -151,9 +151,9 @@ def run_config_per_asset(
     """Evaluate config fields per ``(asset_uri, column)`` task (column
     None for table-level tags); returns raw long rows as dicts (feed
     through ``coerce_long_rows``). A task's scalar fields run as its
-    ``task_statement``; the reference's ``combine_queries`` statement
-    runs only when that one fails. Tasks run as concurrent Spark jobs
-    through ``run_tasks``, which records a failing task in ``errors``."""
+    ``task_statement``, or as the reference's ``combine_queries``
+    statement when that one reads passes and fails; ``run_tasks`` runs
+    the tasks as concurrent Spark jobs and records a failing one in ``errors``."""
 
     scalar_fields = [f for f in fields if f["field_type"] != "richtext"]
     richtext_fields = [f for f in fields if f["field_type"] == "richtext"]
@@ -171,10 +171,13 @@ def run_config_per_asset(
 
         rows: list[dict] = []
         if scalar_fields:
+            has_passes = None
             try:
-                statement = task_statement(spark, scalar_fields, uri, column, qualify)
+                statement, has_passes = task_statement(spark, scalar_fields, uri, column, qualify)
                 result = _timestamps_as_text(statement).first()
             except PySparkException:  # e.g. an Expand-ed distinct FILTER dividing by zero
+                if has_passes is False:  # it ran the reference statement
+                    raise
                 exprs = [parse_query_expression(uri, f["query_expression"], column, qualify)
                          for f in scalar_fields]
                 result = _timestamps_as_text(spark.sql(combine_queries(exprs))).first()
@@ -309,12 +312,12 @@ def _passes(rel: DataFrame, keys: list[str], classified: list[tuple[str, dict]])
 
 
 def task_statement(spark: SparkSession, fields: list[dict], uri: str, column: str | None,
-                   qualify: Callable[[str, str, str], str]) -> DataFrame:
+                   qualify: Callable[[str, str, str], str]) -> tuple[DataFrame, bool]:
     """One task's scalar fields (column i is field i) as one single-row
-    select: a field with a pass reads it from the passes over the relation
-    ``parse_query_expression`` names; constants and opaque SQL run as scalar
-    subqueries, over the one-row relation of the reference statement when
-    no field has a pass."""
+    select, and whether any field reads a pass: a field with a pass reads
+    it from the passes over the relation ``parse_query_expression`` names;
+    constants and opaque SQL run as scalar subqueries, over the one-row
+    relation of the reference statement when no field has a pass."""
     classified = [classify_expression(parse_query_expression(uri, f["query_expression"], column,
                                                              lambda *_: "$table")) for f in fields]
     passes = None
@@ -325,7 +328,7 @@ def task_statement(spark: SparkSession, fields: list[dict], uri: str, column: st
     return (spark.sql("select 1") if passes is None else passes).select(*(
         F.col(f"_{i}") if kind in ("simple", "daily")
         else F.expr(f"({parse_query_expression(uri, f['query_expression'], column, qualify)})")
-        for i, ((kind, _), f) in enumerate(zip(classified, fields))))
+        for i, ((kind, _), f) in enumerate(zip(classified, fields)))), passes is not None
 
 
 # ---------------------------------------------------------------------------
@@ -355,9 +358,7 @@ def run_config_fused_wide(
     if "_asset_uri" not in inv.columns:
         raise ValueError("inventory DataFrame needs an asset_uri column")
     classified = [classify_expression(f["query_expression"]) for f in fields]
-    result = _passes(inv, ["_asset_uri"], classified)
-    if result is None:
-        result = inv.select("_asset_uri").distinct()
+    result = _passes(inv, ["_asset_uri"], classified) or inv.select("_asset_uri").distinct()
     return result.select("_asset_uri", *(
         (F.expr(f"({info['sql']})") if kind == "constant" else F.col(f"_{i}")).alias(f["field_id"])
         for i, ((kind, info), f) in enumerate(zip(classified, fields))))

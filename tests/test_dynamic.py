@@ -281,7 +281,13 @@ def reference_values(spark, fields, uri, column=None):
 
 
 def pass_values(spark, fields, uri, column=None):
-    return [D._stringify(v) for v in D.task_statement(spark, fields, uri, column, short_name).first()]
+    """The task statement's values; every field but a constant reads a pass."""
+    for f in fields:
+        q = parse_query_expression(uri, f["query_expression"], column, lambda *_: "$table")
+        assert D.classify_expression(q)[0] in ("simple", "daily", "constant"), f
+    statement, has_passes = D.task_statement(spark, fields, uri, column, short_name)
+    assert has_passes
+    return [D._stringify(v) for v in statement.first()]
 
 
 def field(field_id, query_expression, field_type="string"):
@@ -356,7 +362,7 @@ def test_distinct_aggregates_run_without_expand(spark):
     count(distinct) fields in one aggregate would Expand every row once
     per distinct group."""
     inv = spark.table("lineitem").withColumn("asset_uri", F.lit(URI))
-    for df in (D.task_statement(spark, TYPED_FIELDS[:3], URI, None, short_name),
+    for df in (D.task_statement(spark, TYPED_FIELDS[:3], URI, None, short_name)[0],
                D.run_config_fused_wide(spark, TYPED_FIELDS[:3], inv)):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "Expand" not in plan
@@ -394,10 +400,20 @@ def test_fields_without_a_pass_fall_back_to_the_reference_statement(spark):
               "double")
     ]
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        D.task_statement(spark, failing, URI, None, short_name).first()
+        D.task_statement(spark, failing, URI, None, short_name)[0].first()
     for fields in (mixed, failing):
         raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
         assert [r["raw_value"] for r in raw] == reference_values(spark, fields, URI)
+
+
+def test_failing_task_without_a_pass_runs_once(spark, monkeypatch):
+    """A task whose fields have no pass runs the reference statement: when
+    it fails at run time, the failure is reported without running it twice."""
+    failing = [field("div", "select 1 div 0", "double")]
+    assert D.task_statement(spark, failing, URI, None, short_name)[1] is False
+    monkeypatch.setattr(D, "combine_queries", lambda exprs: pytest.fail("reference statement run twice"))
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        D.run_config_per_asset(spark, failing, [(URI, None)], "t", short_name)
 
 
 def test_mixed_task_reads_its_table_once_per_pass(spark):
@@ -408,7 +424,7 @@ def test_mixed_task_reads_its_table_once_per_pass(spark):
     opaque = field("joined", "select count(*) from $table l join orders o on l.l_orderkey = o.o_orderkey",
                    "double")
     fields = TYPED_FIELDS[:9] + [TYPED_FIELDS[13], opaque]
-    statement = D.task_statement(spark, fields, URI, None, short_name)
+    statement, _ = D.task_statement(spark, fields, URI, None, short_name)
     assert statement._jdf.queryExecution().optimizedPlan().toString().count("Relation [l_") == 5
     raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
     assert [r["raw_value"] for r in raw] == reference_values(spark, fields, URI)
@@ -419,13 +435,15 @@ AGREEMENT_FIELDS = [
     field("last_ts", "select max(cast(l_shipdate as timestamp)) from $table", "datetime"),
     field("last_day", "select max(cast(l_shipdate as date)) from $table", "datetime"),
     field("nothing", "select 'x' where false"),
+    field("half_s", "select max(cast(l_shipdate as timestamp) + interval 500 milliseconds) from $table"),
 ]
 
 
 def test_executors_agree_on_text_and_tags(spark):
     """The same fields over one lineitem clone give the same raw text and
     the same typed tags in both executors: booleans as TRUE/FALSE,
-    timestamps and dates in the session zone, a no-row constant NULL."""
+    timestamps and dates in the session zone (fractional seconds without
+    trailing zeros), a no-row constant NULL."""
     spark.table("lineitem").createOrReplaceTempView("lineitem_clone")
     uri = "p/datasets/d/tables/lineitem_clone"
     per_asset = D.raw_rows_to_df(
@@ -442,7 +460,7 @@ def test_executors_agree_on_text_and_tags(spark):
     assert text(per_asset) == text(fused)
     assert tags(per_asset) == tags(fused)
     assert text(fused) == {"big": "TRUE", "last_ts": "2001-11-04 00:00:00", "last_day": "2001-11-04",
-                           "nothing": None}
+                           "nothing": None, "half_s": "2001-11-04 00:00:00.5"}
 
 
 def test_per_asset_timestamps_ignore_the_host_zone(spark, monkeypatch):
