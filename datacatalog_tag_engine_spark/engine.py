@@ -306,10 +306,12 @@ class TagEngine:
         errors: list[tuple[str, str]] = []
         try:
             n = getattr(self, runner)(cfg, assets, job_uuid, errors, **kw)
-        except Exception:
+        except Exception as ex:
+            # the ledger keeps the task failures recorded before the raise
+            errors.append(("job", f"{type(ex).__name__}: {ex}"))
             self._record_job(
                 job_uuid, config_uuid, cfg["config_type"], started,
-                status="ERROR", tasks_failed=1,
+                status="ERROR", tasks_failed=len(errors), errors=errors,
             )
             raise
         self._record_job(

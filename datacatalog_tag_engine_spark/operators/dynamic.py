@@ -5,20 +5,20 @@ The reference evaluates one SQL statement per (asset, field) in BigQuery
 and only fuses per-column field queries into a single multi-subquery
 statement (combine_queries, :488-495). Two executors here; the engine
 picks one from the config's shape alone, never from its asset count.
-Both build their aggregate passes with one function, ``_passes``.
+Both build their aggregate passes with one function, ``_passes``, and
+a pass computes a field's expressions only on the rows its WHERE keeps.
 
-* ``run_config_per_asset`` — the semantics-exact path, for every config
-  that names no ``inventory_view`` and for every (asset, column) pair of
-  a column config. It takes ``(asset_uri, column)`` tasks and runs a
-  task's scalar fields as one statement (``task_statement``): fields of
-  the profiling family below read the task's passes over its relation,
-  constants and opaque SQL run as scalar subqueries of the same select,
-  the reference's column-path fusion. Richtext fields run separately
-  because they collect all result rows (reference run_query :1797-1806
-  first-row-wins vs richtext-collect). Tasks run through ``run_tasks``,
-  the one per-asset pool: ``POOL_WIDTH`` concurrent jobs, a failing
-  task recorded, not fatal. The engine's per-asset column discovery
-  uses it too.
+* ``run_config_per_asset`` — for every config that names no
+  ``inventory_view`` and every (asset, column) pair of a column config.
+  A task's scalar fields run as one statement (``task_statement``):
+  fields of the profiling family below read the task's passes over its
+  relation, constants and opaque SQL run as scalar subqueries of the
+  same select, the reference's column-path fusion. Richtext fields run
+  separately: they collect all result rows (reference run_query
+  :1797-1806 first-row-wins vs richtext-collect). Tasks run through
+  ``run_tasks``, the one per-asset pool: ``POOL_WIDTH`` concurrent
+  jobs, a failing task recorded, not fatal; the engine's per-asset
+  column discovery uses it too.
 
 * ``run_config_fused`` — the scale path (SURVEY R9), for configs that
   name an ``inventory_view``: ONE DataFrame holding every matched
@@ -37,14 +37,13 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
-from pyspark.errors import PySparkException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import coercion
 from ..session import local_df
-from .substitution import combine_queries, parse_query_expression, split_resource_uri
+from .substitution import parse_query_expression, split_resource_uri
 
 # ---------------------------------------------------------------------------
 # shared: raw (stringly) field values -> typed long tag rows
@@ -150,10 +149,9 @@ def run_config_per_asset(
 ) -> list[dict]:
     """Evaluate config fields per ``(asset_uri, column)`` task (column
     None for table-level tags); returns raw long rows as dicts (feed
-    through ``coerce_long_rows``). A task's scalar fields run as its
-    ``task_statement``, or as the reference's ``combine_queries``
-    statement when that one reads passes and fails; ``run_tasks`` runs
-    the tasks as concurrent Spark jobs and records a failing one in ``errors``."""
+    through ``coerce_long_rows``). A task's scalar fields run as its one
+    ``task_statement``; ``run_tasks`` runs the tasks as concurrent Spark
+    jobs and records a failing one in ``errors``."""
 
     scalar_fields = [f for f in fields if f["field_type"] != "richtext"]
     richtext_fields = [f for f in fields if f["field_type"] == "richtext"]
@@ -171,16 +169,7 @@ def run_config_per_asset(
 
         rows: list[dict] = []
         if scalar_fields:
-            has_passes = None
-            try:
-                statement, has_passes = task_statement(spark, scalar_fields, uri, column, qualify)
-                result = _timestamps_as_text(statement).first()
-            except PySparkException:  # e.g. an Expand-ed distinct FILTER dividing by zero
-                if has_passes is False:  # it ran the reference statement
-                    raise
-                exprs = [parse_query_expression(uri, f["query_expression"], column, qualify)
-                         for f in scalar_fields]
-                result = _timestamps_as_text(spark.sql(combine_queries(exprs))).first()
+            result = _timestamps_as_text(task_statement(spark, scalar_fields, uri, column, qualify)).first()
             rows += [row(f, _stringify(result[i])) for i, f in enumerate(scalar_fields)]
         for f in richtext_fields:
             q = parse_query_expression(uri, f["query_expression"], column, qualify)
@@ -221,21 +210,35 @@ _AGG_CALL_RE = re.compile(
     r"approx_count_distinct|approx_percentile|collect_list|collect_set|\w+_agg)\s*\(", re.IGNORECASE)
 # FILTER binds to one aggregate call (max(a) - min(a) FILTER ... filters min only)
 _ONE_CALL_RE = re.compile(r"\s*\w+\s*\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)\s*")
+_LITERAL_RE = re.compile(r"'(?:[^']|'')*'")
+
+
+def _top_level_items(sql: str) -> list[str]:
+    """``sql`` split at its commas outside parentheses and string literals."""
+    items, depth, start = [], 0, 0
+    for m in re.finditer(rf"{_LITERAL_RE.pattern}|[(),]", sql):
+        depth += (m.group() == "(") - (m.group() == ")")
+        if m.group() == "," and depth == 0:
+            items.append(sql[start:m.start()])
+            start = m.end()
+    return items + [sql[start:]]
 
 
 def classify_expression(query_expression: str) -> tuple[str, dict]:
     """Classify one field expression into a fusable family: 'constant'
     (no $table), 'simple' (agg [+ filter]), 'daily' (avg-of-daily-counts)
     or 'opaque'. A family member's aggregate pass gives its scalar
-    statement's value: no $table outside ``from $table``; a simple select
-    list calls an aggregate outside a window, one call under a predicate;
-    a daily form groups by its day, and its predicated outer reads only
-    the count (NULL on a no-match day)."""
+    statement's value: no $table outside ``from $table``; one select item,
+    no set quantifier; a simple one calls an aggregate outside a window,
+    one call under a predicate; a daily form groups by its day, and its
+    predicated outer reads only the count (NULL on a no-match day)."""
     if "$table" not in query_expression:
         return "constant", {"sql": query_expression}
     m = _DAILY_RE.match(query_expression) or _SIMPLE_RE.match(query_expression)
     info = m.groupdict() if m else {}
-    if not m or any("$table" in (v or "") for v in info.values()):
+    select_list = info.get("agg") or info.get("outer") or ""
+    if (not m or any("$table" in (v or "") for v in info.values())
+            or re.match(r"\s*(?:distinct|all)\b", select_list, re.I) or len(_top_level_items(select_list)) > 1):
         return "opaque", {}
     pred = info["pred"]
     if "day" in info:
@@ -243,7 +246,7 @@ def classify_expression(query_expression: str) -> tuple[str, dict]:
         exact = info["grp"].lower() == info["dayalias"].lower() and not (
             pred and any(a.strip() != info["cntalias"] for a in args))
         return ("daily", info) if exact else ("opaque", {})
-    agg = re.sub(r"'(?:[^']|'')*'", "", info["agg"])
+    agg = _LITERAL_RE.sub("", info["agg"])
     exact = (
         " from " not in info["agg"].lower()
         and _AGG_CALL_RE.search(agg)
@@ -254,16 +257,27 @@ def classify_expression(query_expression: str) -> tuple[str, dict]:
     return ("simple", info) if exact else ("opaque", {})
 
 
-def _aggregate(info: dict):
-    """A 'simple' field's aggregate column: AGG [FILTER (WHERE PRED)]."""
-    return F.expr(f"{info['agg']} FILTER (WHERE {info['pred']})" if info["pred"] else info["agg"])
+def _aggregate(info: dict, columns: list[str]) -> Column:
+    """A 'simple' field's aggregate, AGG [FILTER (WHERE PRED)]; an argument naming one of
+    ``columns`` reads as if(PRED, arg, null), computed on PRED's rows alone like the reference's,
+    also by an Expand or a hoisted common subexpression (count(*) and literals stay)."""
+    pred = info["pred"]
+    if not pred:
+        return F.expr(info["agg"])
+    call, inner = re.fullmatch(r"(\s*\w+\s*\(\s*(?:(?:distinct|all)\b)?)(.*)\)\s*", info["agg"],
+                               re.IGNORECASE | re.DOTALL).groups()
+    names = rf"\b(?:{'|'.join(map(re.escape, columns))})\b"
+    args = [f"if(({pred}), ({a}), null)" if re.search(names, _LITERAL_RE.sub("", a), re.I) else a
+            for a in _top_level_items(inner)]
+    return F.expr(f"{call} {', '.join(args)}) FILTER (WHERE {pred})")
 
 
 def _daily_pass(rel: DataFrame, keys: list[str], day_expr: str, members: list[tuple[str, dict]]) -> DataFrame:
     """The daily (name, info) ``members`` of ``day_expr`` in one two-level
     aggregation by ``keys``, with per-field FILTER counts. A predicated
     field's own inner query only emits days having >= 1 matching row, so
-    its count wraps in nullif(cnt, 0): the outer avg skips no-match days."""
+    its count wraps in nullif(cnt, 0): the outer avg skips no-match days,
+    and when every member has one, only rows one of them keeps compute the day."""
     cnt_aggs, outer_aggs = [], []
     for i, (name, info) in enumerate(members):
         cnt = f"_cnt_{i}"
@@ -271,6 +285,8 @@ def _daily_pass(rel: DataFrame, keys: list[str], day_expr: str, members: list[tu
         cnt_aggs.append((F.expr(f"count(*) FILTER (WHERE {pred})") if pred else F.count("*")).alias(cnt))
         outer_sql = re.sub(rf"\b{re.escape(info['cntalias'])}\b", f"nullif({cnt}, 0)", info["outer"])
         outer_aggs.append(F.expr(outer_sql).alias(name))
+    if all(preds := [info["pred"] for _, info in members]):
+        day_expr = f"if({' or '.join(f'({p})' for p in dict.fromkeys(preds))}, {day_expr}, null)"
     daily = rel.groupBy(*keys, F.expr(day_expr).alias("_day")).agg(*cnt_aggs)
     # re-expose the day under each member's alias in case the outer
     # expression references it (distinct aliases only)
@@ -301,9 +317,9 @@ def _passes(rel: DataFrame, keys: list[str], classified: list[tuple[str, dict]])
     plain, passes, days = [], [], {}
     for i, (kind, info) in enumerate(classified):
         if kind == "simple" and re.search(r"\bdistinct\b", info["agg"], re.I):
-            passes.append(rel.groupBy(*keys).agg(_aggregate(info).alias(f"_{i}")))
+            passes.append(rel.groupBy(*keys).agg(_aggregate(info, rel.columns).alias(f"_{i}")))
         elif kind == "simple":
-            plain.append(_aggregate(info).alias(f"_{i}"))
+            plain.append(_aggregate(info, rel.columns).alias(f"_{i}"))
         elif kind == "daily":
             days.setdefault(info["day"], []).append((f"_{i}", info))
     passes = ([rel.groupBy(*keys).agg(*plain)] if plain else []) + passes
@@ -312,12 +328,12 @@ def _passes(rel: DataFrame, keys: list[str], classified: list[tuple[str, dict]])
 
 
 def task_statement(spark: SparkSession, fields: list[dict], uri: str, column: str | None,
-                   qualify: Callable[[str, str, str], str]) -> tuple[DataFrame, bool]:
+                   qualify: Callable[[str, str, str], str]) -> DataFrame:
     """One task's scalar fields (column i is field i) as one single-row
-    select, and whether any field reads a pass: a field with a pass reads
-    it from the passes over the relation ``parse_query_expression`` names;
-    constants and opaque SQL run as scalar subqueries, over the one-row
-    relation of the reference statement when no field has a pass."""
+    select with the reference statement's values: a field with a pass
+    reads it from the passes over the relation ``parse_query_expression``
+    names; constants and opaque SQL run as scalar subqueries, over the
+    one-row relation of the reference statement when no field has a pass."""
     classified = [classify_expression(parse_query_expression(uri, f["query_expression"], column,
                                                              lambda *_: "$table")) for f in fields]
     passes = None
@@ -328,7 +344,7 @@ def task_statement(spark: SparkSession, fields: list[dict], uri: str, column: st
     return (spark.sql("select 1") if passes is None else passes).select(*(
         F.col(f"_{i}") if kind in ("simple", "daily")
         else F.expr(f"({parse_query_expression(uri, f['query_expression'], column, qualify)})")
-        for i, ((kind, _), f) in enumerate(zip(classified, fields)))), passes is not None
+        for i, ((kind, _), f) in enumerate(zip(classified, fields))))
 
 
 # ---------------------------------------------------------------------------
@@ -456,12 +472,11 @@ def _schema_predicate_safe(pred: str) -> bool:
     # naive substring removal of '$table' from the escaped literal
     # '$table''s' (ONE literal whose value is $table's) would leave the
     # fragment 's' and pass the check on exactly the class it guards
-    literal_re = r"'(?:[^']|'')*'"
     exact_forms = {"'$table'", "'$dataset'", "'$project'"}
-    for lit in re.findall(literal_re, pred):
+    for lit in _LITERAL_RE.findall(pred):
         if "$" in lit and lit not in exact_forms:
             return False
-    stripped = re.sub(literal_re, "", pred)  # drop string literals
+    stripped = _LITERAL_RE.sub("", pred)  # drop string literals
     if "$" in stripped:
         return False
     # postfix negations are AND-conjunct-local (they negate one operand,

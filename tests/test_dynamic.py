@@ -5,6 +5,8 @@ direct SQL."""
 import time
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from datacatalog_tag_engine_spark.engine import TagEngine
@@ -285,9 +287,7 @@ def pass_values(spark, fields, uri, column=None):
     for f in fields:
         q = parse_query_expression(uri, f["query_expression"], column, lambda *_: "$table")
         assert D.classify_expression(q)[0] in ("simple", "daily", "constant"), f
-    statement, has_passes = D.task_statement(spark, fields, uri, column, short_name)
-    assert has_passes
-    return [D._stringify(v) for v in statement.first()]
+    return [D._stringify(v) for v in D.task_statement(spark, fields, uri, column, short_name).first()]
 
 
 def field(field_id, query_expression, field_type="string"):
@@ -362,7 +362,7 @@ def test_distinct_aggregates_run_without_expand(spark):
     count(distinct) fields in one aggregate would Expand every row once
     per distinct group."""
     inv = spark.table("lineitem").withColumn("asset_uri", F.lit(URI))
-    for df in (D.task_statement(spark, TYPED_FIELDS[:3], URI, None, short_name)[0],
+    for df in (D.task_statement(spark, TYPED_FIELDS[:3], URI, None, short_name),
                D.run_config_fused_wide(spark, TYPED_FIELDS[:3], inv)):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "Expand" not in plan
@@ -371,8 +371,8 @@ def test_distinct_aggregates_run_without_expand(spark):
 
 def test_fields_without_a_pass_fall_back_to_the_reference_statement(spark):
     """A field that has no exact pass runs as a scalar subquery of the
-    task's statement; a task whose statement fails runs the reference
-    statement. Either way the tags are the reference statement's."""
+    task's statement, beside fields that read passes; the tags are the
+    reference statement's."""
     opaque = field("joined", "select count(*) from $table l join orders o on l.l_orderkey = o.o_orderkey",
                    "double")
     no_pass = [
@@ -393,27 +393,100 @@ def test_fields_without_a_pass_fall_back_to_the_reference_statement(spark):
         assert not D.fusable([f]), f  # the inventory form shares the rule
 
     mixed = [f for f in TYPED_FIELDS + no_pass if f["field_id"] not in ("bare", "window")]
-    # a distinct aggregate with a FILTER is Expanded: its input is computed
-    # for every row, and 10 div 0 fails where the WHERE clause skips it
-    failing = TYPED_FIELDS[:4] + [
+    # a distinct aggregate with a FILTER is Expanded: its pass reads its
+    # input only where the WHERE clause keeps the row, so 10 div 0 never runs
+    guarded = TYPED_FIELDS[:4] + [
         field("div", "select count(distinct 10 div (l_linenumber - 1)) from $table where l_linenumber > 1",
               "double")
     ]
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        D.task_statement(spark, failing, URI, None, short_name)[0].first()
-    for fields in (mixed, failing):
+    for fields in (mixed, guarded):
         raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
         assert [r["raw_value"] for r in raw] == reference_values(spark, fields, URI)
 
 
-def test_failing_task_without_a_pass_runs_once(spark, monkeypatch):
-    """A task whose fields have no pass runs the reference statement: when
-    it fails at run time, the failure is reported without running it twice."""
+def test_failing_task_without_a_pass_runs_once(spark):
+    """A task whose statement fails at run time is recorded once: its one
+    statement is the only one it runs."""
+    errors = []
     failing = [field("div", "select 1 div 0", "double")]
-    assert D.task_statement(spark, failing, URI, None, short_name)[1] is False
-    monkeypatch.setattr(D, "combine_queries", lambda exprs: pytest.fail("reference statement run twice"))
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        D.run_config_per_asset(spark, failing, [(URI, None)], "t", short_name)
+    assert D.run_config_per_asset(spark, failing, [(URI, None)], "t", short_name, errors=errors) == []
+    (uri, msg), = errors
+    assert uri == URI and "DIVIDE_BY_ZERO" in msg
+
+
+# divides by zero on each order's first line, which every predicate below skips
+DIV = "10 div (l_linenumber - 1)"
+UNIQUE_KEY = f"{DIV} * 10000000 + l_orderkey"  # one l_orderkey per maximum
+EXACT_TASKS = {
+    "distinct under a predicate": (
+        [field("n", f"select count(distinct {DIV}) from $table where l_linenumber > 1", "double")], ["5"]),
+    "shared subexpression": ([
+        field("s", f"select sum({DIV}) from $table where l_linenumber > 1", "double"),
+        field("hi", f"select max({DIV}) from $table where l_linenumber > 1", "double"),
+        field("lo", f"select min({DIV}) from $table where l_linenumber > 2", "double"),
+    ], ["19240", "10", "1"]),
+    "predicated daily": ([field("d", f"select max(daily) from (select cast({DIV} as string) as d, "
+                                     "count(*) as daily from $table where l_linenumber > 1 group by d)", "double")],
+                         ["1749"]),
+    "multi-argument distinct": (
+        [field("n", f"select count(distinct l_returnflag, {DIV}) from $table where l_linenumber > 1", "double")],
+        ["15"]),
+    "approx_percentile and max_by": ([
+        field("p", f"select approx_percentile(distinct {DIV}, 0.5) from $table where l_linenumber > 1", "double"),
+        field("hi", f"select max_by(l_orderkey, {UNIQUE_KEY}) from $table where l_linenumber > 2", "double"),
+        field("lo", f"select min_by(l_orderkey, {UNIQUE_KEY}) from $table where l_linenumber > 1", "double"),
+    ], ["3", "1498", "1"]),
+    "IN subquery": ([field("n", f"select count(distinct {DIV}) from $table where l_linenumber > 1 and l_orderkey "
+                                "in (select o_orderkey from orders where o_totalprice > 100000)", "double")], ["5"]),
+}
+
+
+def executor_values(spark, fields):
+    """The raw text of ``fields`` over lineitem: per asset, then fused."""
+    per_asset = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
+    inv = spark.table("lineitem").withColumn("asset_uri", F.lit(URI))
+    fused = {r["field_id"]: r["raw_value"] for r in D.run_config_fused(spark, fields, inv, "t").collect()}
+    return [r["raw_value"] for r in per_asset], [fused[f["field_id"]] for f in fields]
+
+
+def test_passes_compute_arguments_only_on_their_predicates_rows(spark):
+    """Both executors give the reference statement's values where a pass
+    could compute an argument, or a day, on rows the field's WHERE skips:
+    an Expanded distinct, a subexpression shared across predicates, a
+    predicated day. A set quantifier has no pass: not fusable, and per
+    asset the reference statement's scalar subquery."""
+    for name, (fields, expected) in EXACT_TASKS.items():
+        assert reference_values(spark, fields, URI) == expected, name
+        assert executor_values(spark, fields) == (expected, expected), name
+    for quantifier in ("distinct", "all"):
+        fields = [field("n", f"select {quantifier} count(*) from $table", "double")]
+        assert not D.fusable(fields)
+        raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
+        assert [r["raw_value"] for r in raw] == reference_values(spark, fields, URI) == ["6000"]
+
+
+@given(st.lists(st.tuples(st.sampled_from(["sum({})", "max({})", "count(distinct {})", "approx_percentile({}, 0.5)"]),
+                          st.sampled_from(["l_quantity", f"l_quantity + {DIV}"]),
+                          st.sampled_from(["", " where l_linenumber > 1", " where l_linenumber > 2"])),
+                min_size=1, max_size=3))
+@settings(max_examples=25, deadline=None, derandomize=True)
+def test_drawn_tasks_match_the_reference_statement(spark, drawn):
+    """1-3 drawn aggregate fields per task, each arguments with or without
+    a division by zero its predicate may skip: both executors give the
+    reference statement's values, or fail like it on division by zero."""
+    fields = [field(f"f{i}", f"select {agg.format(arg)} from $table{pred}", "double")
+              for i, (agg, arg, pred) in enumerate(drawn)]
+    try:
+        expected = reference_values(spark, fields, URI)
+    except Exception as ex:
+        assert "DIVIDE_BY_ZERO" in str(ex)
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            inv = spark.table("lineitem").withColumn("asset_uri", F.lit(URI))
+            D.run_config_fused(spark, fields, inv, "t").collect()
+        return
+    assert executor_values(spark, fields) == (expected, expected)
 
 
 def test_mixed_task_reads_its_table_once_per_pass(spark):
@@ -424,7 +497,7 @@ def test_mixed_task_reads_its_table_once_per_pass(spark):
     opaque = field("joined", "select count(*) from $table l join orders o on l.l_orderkey = o.o_orderkey",
                    "double")
     fields = TYPED_FIELDS[:9] + [TYPED_FIELDS[13], opaque]
-    statement, _ = D.task_statement(spark, fields, URI, None, short_name)
+    statement = D.task_statement(spark, fields, URI, None, short_name)
     assert statement._jdf.queryExecution().optimizedPlan().toString().count("Relation [l_") == 5
     raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
     assert [r["raw_value"] for r in raw] == reference_values(spark, fields, URI)

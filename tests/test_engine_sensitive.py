@@ -188,6 +188,28 @@ def test_per_asset_error_capture(spark, engine, assets):
     assert "TABLE_OR_VIEW_NOT_FOUND" in msg or "missing_table" in msg
 
 
+def test_raising_job_keeps_its_task_errors(spark, engine, assets, monkeypatch):
+    """A job whose runner raises after a task failed records both in the
+    ledger: the failed asset and the exception that ended the job."""
+    cfg = engine.create_config(
+        "DYNAMIC_TAG_TABLE", "data_sensitivity",
+        included_uris="bigquery/project/p/dataset/d/lineitem, bigquery/project/p/dataset/d/missing_table",
+        fields=[{"field_id": "row_count", "query_expression": "select count(*) from $table"}],
+    )
+
+    def failing_merge(*args, **kwargs):
+        raise RuntimeError("merge refused")
+
+    monkeypatch.setattr(engine.store, "merge", failing_merge)
+    with pytest.raises(RuntimeError, match="merge refused"):
+        engine.trigger_job(cfg, assets)
+    job = engine.jobs[-1]
+    assert (job["job_status"], job["tasks_failed"]) == ("ERROR", 2)
+    (bad_uri, msg), (where, reason) = engine.job_errors[job["job_uuid"]]
+    assert bad_uri.endswith("missing_table") and "missing_table" in msg
+    assert (where, reason) == ("job", "RuntimeError: merge refused")
+
+
 def test_column_discovery_error_capture(spark, engine, assets):
     # an opaque included_columns_query runs per asset: the asset whose
     # query fails is recorded, the others are still discovered and tagged
