@@ -307,11 +307,12 @@ class TagEngine:
         try:
             n = getattr(self, runner)(cfg, assets, job_uuid, errors, **kw)
         except Exception as ex:
-            # the ledger keeps the task failures recorded before the raise
+            # the ledger keeps the task failures recorded before the raise;
+            # it counts them and the raise as the failed units of work
             errors.append(("job", f"{type(ex).__name__}: {ex}"))
             self._record_job(
                 job_uuid, config_uuid, cfg["config_type"], started,
-                status="ERROR", tasks_failed=len(errors), errors=errors,
+                status="ERROR", task_count=len(errors), tasks_failed=len(errors), errors=errors,
             )
             raise
         self._record_job(
@@ -1055,7 +1056,7 @@ class TagEngine:
                         self._uuid("job"), cfg["config_uuid"],
                         cfg["config_type"],
                         datetime.datetime.now(datetime.timezone.utc),
-                        status="ERROR", tasks_failed=1,
+                        status="ERROR", task_count=1, tasks_failed=1,
                         errors=[("scheduler", repr(exc))],
                     )
         return job_ids

@@ -211,6 +211,8 @@ _AGG_CALL_RE = re.compile(
 # FILTER binds to one aggregate call (max(a) - min(a) FILTER ... filters min only)
 _ONE_CALL_RE = re.compile(r"\s*\w+\s*\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)\s*")
 _LITERAL_RE = re.compile(r"'(?:[^']|'')*'")
+# Spark refuses a non-deterministic FILTER (WHERE ...) of an aggregate
+_NONDETERMINISTIC_RE = re.compile(r"\b(?:rand\w*|uniform|uuid|shuffle|monotonically_\w+|spark_partition_id|input_\w+)\s*\(", re.I)
 
 
 def _top_level_items(sql: str) -> list[str]:
@@ -229,16 +231,18 @@ def classify_expression(query_expression: str) -> tuple[str, dict]:
     (no $table), 'simple' (agg [+ filter]), 'daily' (avg-of-daily-counts)
     or 'opaque'. A family member's aggregate pass gives its scalar
     statement's value: no $table outside ``from $table``; one select item,
-    no set quantifier; a simple one calls an aggregate outside a window,
-    one call under a predicate; a daily form groups by its day, and its
-    predicated outer reads only the count (NULL on a no-match day)."""
+    no set quantifier, a deterministic predicate; a simple one calls an
+    aggregate outside a window, one call under a predicate; a daily form
+    groups by its day, its predicated outer reading only the count (NULL
+    on a no-match day)."""
     if "$table" not in query_expression:
         return "constant", {"sql": query_expression}
     m = _DAILY_RE.match(query_expression) or _SIMPLE_RE.match(query_expression)
     info = m.groupdict() if m else {}
     select_list = info.get("agg") or info.get("outer") or ""
     if (not m or any("$table" in (v or "") for v in info.values())
-            or re.match(r"\s*(?:distinct|all)\b", select_list, re.I) or len(_top_level_items(select_list)) > 1):
+            or re.match(r"\s*(?:distinct|all)\b", select_list, re.I) or len(_top_level_items(select_list)) > 1
+            or _NONDETERMINISTIC_RE.search(_LITERAL_RE.sub("", info["pred"] or ""))):
         return "opaque", {}
     pred = info["pred"]
     if "day" in info:
@@ -258,17 +262,18 @@ def classify_expression(query_expression: str) -> tuple[str, dict]:
 
 
 def _aggregate(info: dict, columns: list[str]) -> Column:
-    """A 'simple' field's aggregate, AGG [FILTER (WHERE PRED)]; an argument naming one of
-    ``columns`` reads as if(PRED, arg, null), computed on PRED's rows alone like the reference's,
-    also by an Expand or a hoisted common subexpression (count(*) and literals stay)."""
+    """A 'simple' field's aggregate, AGG [FILTER (WHERE PRED)]; an argument computed from one of
+    ``columns`` (named not as a function) reads as if(PRED, arg, null), computed on PRED's rows
+    alone like the reference's, also by an Expand or a hoisted common subexpression (count(*),
+    a bare column and literals such as array(0.25, 0.75) stay)."""
     pred = info["pred"]
     if not pred:
         return F.expr(info["agg"])
     call, inner = re.fullmatch(r"(\s*\w+\s*\(\s*(?:(?:distinct|all)\b)?)(.*)\)\s*", info["agg"],
                                re.IGNORECASE | re.DOTALL).groups()
-    names = rf"\b(?:{'|'.join(map(re.escape, columns))})\b"
-    args = [f"if(({pred}), ({a}), null)" if re.search(names, _LITERAL_RE.sub("", a), re.I) else a
-            for a in _top_level_items(inner)]
+    names = rf"\b(?:{'|'.join(map(re.escape, columns))})\b(?!\s*\()"
+    args = [f"if(({pred}), ({a}), null)" if re.search(names, _LITERAL_RE.sub("", a), re.I)
+            and not re.fullmatch(r"\s*`?\w+`?\s*", a) else a for a in _top_level_items(inner)]
     return F.expr(f"{call} {', '.join(args)}) FILTER (WHERE {pred})")
 
 

@@ -388,6 +388,11 @@ def test_fields_without_a_pass_fall_back_to_the_reference_statement(spark):
               "from $table group by l_shipdate)", "double"),
         field("day_read", "select max(d) from (select cast(l_shipdate as date) d, count(*) c "
               "from $table where l_linestatus = 'O' group by d)", "datetime"),
+        # Spark refuses a non-deterministic aggregate FILTER
+        field("sampled", "select count(*) from $table where rand() < 2", "double"),
+        field("sampled_max", "select max(l_quantity) from $table where uuid() <> ''", "double"),
+        field("sampled_daily", "select max(daily) from (select cast(l_shipdate as date) as d, count(*) as daily "
+              "from $table where randn() < 100 group by d)", "double"),
     ]
     for f in no_pass:
         assert not D.fusable([f]), f  # the inventory form shares the rule
@@ -402,6 +407,21 @@ def test_fields_without_a_pass_fall_back_to_the_reference_statement(spark):
     for fields in (mixed, guarded):
         raw = D.run_config_per_asset(spark, fields, [(URI, None)], "t", short_name)
         assert [r["raw_value"] for r in raw] == reference_values(spark, fields, URI)
+
+
+def test_constant_arguments_stay_foldable_beside_a_column_of_their_name(spark):
+    """A predicated aggregate guards the arguments computed from a column,
+    not a constant calling a function that shares a column's name: the
+    percentages of percentile stay foldable beside a column named ``array``."""
+    spark.createDataFrame([(1, i % 5) for i in range(20)], "array int, x int").createOrReplaceTempView("named_cols")
+    uri = "p/datasets/d/tables/named_cols"
+    fields = [field("p", "select percentile(x, array(0.25, 0.75)) from $table where x > 1"),
+              field("s", "select sum(array * x) from $table where x > 1", "double")]
+    assert D.fusable(fields)
+    raw = D.run_config_per_asset(spark, fields, [(uri, None)], "t", short_name)
+    assert [r["raw_value"] for r in raw] == reference_values(spark, fields, uri) == ["[2.0, 4.0]", "36"]
+    inv = spark.table("named_cols").withColumn("asset_uri", F.lit(uri))
+    assert [r["raw_value"] for r in D.run_config_fused(spark, fields, inv, "t").collect()] == ["[2.0, 4.0]", "36"]
 
 
 def test_failing_task_without_a_pass_runs_once(spark):

@@ -204,7 +204,8 @@ def test_raising_job_keeps_its_task_errors(spark, engine, assets, monkeypatch):
     with pytest.raises(RuntimeError, match="merge refused"):
         engine.trigger_job(cfg, assets)
     job = engine.jobs[-1]
-    assert (job["job_status"], job["tasks_failed"]) == ("ERROR", 2)
+    # the failed task and the raise, each a failed unit of work
+    assert (job["job_status"], job["task_count"], job["tasks_failed"]) == ("ERROR", 2, 2)
     (bad_uri, msg), (where, reason) = engine.job_errors[job["job_uuid"]]
     assert bad_uri.endswith("missing_table") and "missing_table" in msg
     assert (where, reason) == ("job", "RuntimeError: merge refused")
